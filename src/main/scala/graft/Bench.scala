@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -19,7 +20,7 @@ object Bench {
     // same failure tolerance as the timed loop: a broken warmup query
     // must not abort the whole report
     try SparkEntry.queries("agg_distinct_custs")(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     // deterministic name order: stable attribution across rounds.
     // Three reps per query, report the min: steady-state throughput,
     // robust to one-off GC/IO spikes on a shared machine (min-of-2 still
@@ -40,7 +41,7 @@ object Bench {
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
+                 catch { case NonFatal(_) => false }
         if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       }
       if (times.contains(-1.0)) -1.0 else times.min
@@ -48,9 +49,9 @@ object Bench {
     def loadavg(): String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
         .split(" ").take(3).mkString(",")
-      catch { case _: Throwable => "" }
+      catch { case NonFatal(_) => "" }
     def loadavg1(): Double =
-      try loadavg().split(",")(0).toDouble catch { case _: Throwable => -1.0 }
+      try loadavg().split(",")(0).toDouble catch { case NonFatal(_) => -1.0 }
     // Bounded wait for the 1-min loadavg to drop below `target` before a
     // measurement pass — r7/r8 committed artifacts were both taken on a
     // busy host (loadavg 12.6) and showed 9-22 phantom regressions on
@@ -114,7 +115,7 @@ object Bench {
           .filter { case (k, _) => k != "value" && k != "round" }
           .toMap
       }
-    } catch { case _: Throwable => Map.empty }
+    } catch { case NonFatal(_) => Map.empty }
     val flagged0 = results0.collect {
       case (name, cur) if cur > 0 &&
         baselineMap.get(name).exists(p => p > 0 && cur / p > 1.5) => name
@@ -184,7 +185,7 @@ object Bench {
       java.nio.file.Files.write(out,
         (report + "\n" + auxReport)
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // Regression gate: diff this run against the committed previous-round
     // per-query map (bench_baseline.json, refreshed each round from
     // target/bench_full.json) and flag any query > 1.5x slower — the
@@ -219,7 +220,7 @@ object Bench {
             .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         println(s"""{"metric":"bench_regressions","value":${regressions.size},"broke":${broke.size},"in_sweep_rerun":${rerunSamples.size},"rerun_quiet_host":$quietRerun,"threshold":1.5,"compared":${deltas.size}}""")
       }
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // Shuffle-skew probe: the inverted-index joins shuffle on shingle /
     // span TEXT (zipfian by construction). Measure — don't argue — what
     // hash partitioning does to those keys: rows land in partition
@@ -259,7 +260,7 @@ object Bench {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("target", "skew_probe.json"),
         js.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // the driver-contract line, LAST on stdout (see report above)
     println(report)
     spark.stop()

@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
@@ -242,7 +244,7 @@ object Multimodal {
         if (gces.getLength == 0) 0
         else gces.item(0).asInstanceOf[org.w3c.dom.Element]
           .getAttribute("delayTime").toInt
-      } catch { case _: Throwable => 0 }
+      } catch { case NonFatal(_) => 0 }
       if (d <= 0) 10 else d
     }
 

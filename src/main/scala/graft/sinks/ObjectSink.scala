@@ -15,22 +15,24 @@ import graft.fetch.Fetch.FileResult
   * Idempotent PUT semantics: write-to-temp + atomic move, so Spark task
   * retries/speculation can never leave torn objects, and re-delivery of a
   * task overwrites with identical content (at-least-once → effectively
-  * once at the sink). `overwrite=false` (LINKS vs LINKS_OVERWRITE flag,
-  * `data_downloader.py:72,219-220`) skips keys that already exist —
-  * completing the reference's unimplemented duplicate-download guard (D1)
-  * at the storage layer.
+  * once at the sink). `overwrite` decides per key whether an existing
+  * object is replaced (the LINKS vs LINKS_OVERWRITE flag,
+  * `data_downloader.py:72,219-220`); where it says no, keys that already
+  * exist are skipped — completing the reference's unimplemented
+  * duplicate-download guard (D1) at the storage layer.
   *
   * Executed with `foreachPartition`: distributed, no driver collect.
   */
 object ObjectSink {
 
-  def write(artifacts: Dataset[FileResult], root: String, overwrite: Boolean): Unit = {
+  def write(artifacts: Dataset[FileResult], root: String,
+      overwrite: String => Boolean): Unit = {
     artifacts.foreachPartition { (it: Iterator[FileResult]) =>
       it.foreach { a =>
         if (a.error == null && a.body != null) {
           val target = Paths.get(root, a.key)
           Files.createDirectories(target.getParent)
-          if (overwrite || !Files.exists(target)) {
+          if (overwrite(a.key) || !Files.exists(target)) {
             val tmp = Files.createTempFile(target.getParent, ".tmp-", ".part")
             Files.write(tmp, a.body)
             Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
@@ -54,20 +56,20 @@ object ObjectSink {
     */
   def manifestPath(root: String): String = s"$root/_manifest"
 
-  /** Append the successfully-written artifacts' names to the manifest.
-    * Call right after [[write]] with the same error-free dataset; on a
-    * failed append the next batch simply re-fetches and skip-writes
-    * (at-least-once), then re-appends.
+  /** Append the successfully-fetched artifacts' names to the manifest.
+    * Call right after [[write]] with the same dataset, and only when the
+    * write saw at least one error-free artifact (count it there, e.g. with
+    * an `Observation`): an all-skipped/all-error batch must not conjure an
+    * empty delta file. On a failed append the next batch simply re-fetches
+    * and skip-writes (at-least-once), then re-appends.
     */
-  def appendManifest(written: Dataset[FileResult], root: String): Unit = {
-    val rows = written.filter(col("error").isNull && col("body").isNotNull)
+  def appendManifest(written: Dataset[FileResult], root: String): Unit =
+    written.filter(col("error").isNull && col("body").isNotNull)
       .select(
         regexp_extract(col("key"), "^(.*)/[^/]*$", 1).as("prefix"),
         element_at(split(col("key"), "/"), -1).as("name"))
-    // an all-skipped/all-error batch must not conjure an empty manifest
-    // (which would flip later guards off the bootstrap path)
-    if (!rows.isEmpty) rows.write.mode("append").parquet(manifestPath(root))
-  }
+      .coalesce(1) // one delta file per append: names are poll-sized
+      .write.mode("append").parquet(manifestPath(root))
 
   /** Root of the manifest's compacted-snapshot generation table (pointer-
     * file committed via [[Generations]] — no directory renames, so the
@@ -125,7 +127,7 @@ object ObjectSink {
   }
 
   /** Compact the manifest: fold the accumulated delta files — one small
-    * parquet file per batch per branch — plus the previous snapshot into
+    * parquet file per batch — plus the previous snapshot into
     * one deduplicated snapshot generation, published via [[Generations]]'
     * pointer-file commit, then delete the folded delta files. Run it like
     * any table-maintenance job (size- or count-triggered); the guard's

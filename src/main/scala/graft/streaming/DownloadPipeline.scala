@@ -1,27 +1,37 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.fetch.Fetch
 import graft.model.{Schemas, Task}
-import graft.operators.{ErrorPath, Router}
+import graft.operators.{Dedup, ErrorPath, Router}
 import graft.functions.{Extract, Globs, Urls}
+import graft.functions.expressions.UrlResolveExpr.urlResolveNative
 import graft.sinks.ObjectSink
-import graft.sources.{Catalog, Queue}
+import graft.sources.Catalog
 import graft.operators.Iterate.MaterializeOps
 
 /** The download pipeline (reference `data_downloader.handler`, traced in
-  * SURVEY.md §3.2), batch + streaming forms.
+  * SURVEY.md §3.2), batch + streaming forms. One pass per batch:
   *
-  * tasks → route (R1) → per-strategy branch:
-  *   LINKS / LINKS_OVERWRITE : fetch page → anchors → resolve → basename
-  *                             → dup-guard anti-join (D1) → fetch → sink
-  *   DIRECT / DIRECT_FTP     : fetch URL, name = PATTERN (reference's
-  *                             ID-as-URL bug corrected, SURVEY §7.0)
-  *   FTP_FILES               : fetch listing → last-token names → glob →
-  *                             resolve → dup-guard → fetch → sink
+  *   tasks → route (R1) + E4 split, counted in ONE aggregate
+  *     → ONE page/listing fetch over the LINKS, LINKS_OVERWRITE and
+  *       FTP_FILES tasks
+  *     → ONE candidates frame (ID, URL, key, overwrite), key = prefix/name:
+  *         LINKS / LINKS_OVERWRITE : anchors → resolve → basename
+  *         FTP_FILES               : last-token names → glob → resolve
+  *         DIRECT / DIRECT_FTP     : the task URL, name = PATTERN
+  *                                   (reference's ID-as-URL bug
+  *                                   corrected, SURVEY §7.0)
+  *     → ONE dup-guard anti-join on key for the non-overwrite rows (D1;
+  *       its per-prefix bootstrap/Bloom decisions are made once per batch
+  *       from one manifest read, see [[processBatch]])
+  *     → ONE file fetch → ONE sink write → ONE manifest append
   * errors → catalog Active:=2 applied to the live catalog (E1) + alert
   * sink (E2) + handled-error ack (the reference's poison-pill ack,
   * data_downloader.py:58: flagged sources are NOT retried). Uncaught
@@ -42,203 +52,181 @@ object DownloadPipeline {
       attempted: Long, downloaded: Long, skippedDuplicates: Long,
       errors: Long, deadLettered: Long)
 
+  /** Above this many existing manifest rows for the batch's prefixes the
+    * D1 guard switches from a planner-chosen anti-join to
+    * [[graft.operators.Dedup.bloomDupGuard]]: sink history grows without
+    * bound at object-store scale, so a forced broadcast of it is a
+    * scale-killer (r7 verdict ask #5). Below it the existing side is a
+    * tiny local relation the planner broadcasts on its own — no hint
+    * needed.
+    */
+  val bloomGuardThreshold = 100000
+
   /** Process one batch of task rows end-to-end. `root` is the workspace
     * (out/, alerts/, dead_letter/ live under it).
+    *
+    * The D1 guard's "existing" side is the sink's names MANIFEST
+    * ([[ObjectSink.manifestAll]]) — a prefix-pruned distributed parquet
+    * scan appended by every successful write, never a driver-side listing
+    * of the sink (which can't enumerate an object store). Its decisions
+    * are made here, once per batch, from one row count per prefix the
+    * batch can write without overwrite: a prefix with no manifest rows
+    * (no manifest at all, or a legacy sink whose objects predate it) is
+    * bootstrap-seeded from ONE bounded directory listing, so every later
+    * batch takes the manifest path and pre-manifest objects stay guarded
+    * forever; above [[bloomGuardThreshold]] existing rows the guard routes
+    * through a Bloom pre-filter.
+    *
+    * Counts come from observations on the passes that run anyway: the
+    * page fetch counts its errors, the candidates frame its keys and the
+    * sink write its fetched and failed files, so `skippedDuplicates` and
+    * the emptiness checks cost no extra action.
     */
   def processBatch(tasks: DataFrame, root: String,
       catalogPath: Option[String] = None): BatchReport = {
     val spark = tasks.sparkSession
     import spark.implicits._
+    val out = s"$root/out"
 
     // Side-effecting fetch datasets are cached so each fetch runs once per
-    // batch; they MUST be unpersisted at the end, or Spark's plan-based
-    // CacheManager would serve a later identical batch from stale cache
-    // (observed: re-run of the same task set never re-fetched).
-    val caches = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+    // batch; they MUST be unpersisted when the batch ends, failed or not,
+    // or Spark's plan-based CacheManager would serve a later identical
+    // batch from stale cache (observed: re-run of the same task set never
+    // re-fetched). The pinned manifest snapshot is released with them.
+    val caches = ArrayBuffer.empty[Dataset[_]]
     def tracked[T](ds: Dataset[T]): Dataset[T] = { caches += ds.cache(); ds }
+    var manifest: Option[DataFrame] = None
+    try {
+      val routed = tracked(Router.route(tasks)
+        .withColumn("attempts", coalesce(col("attempts"), lit(0))))
+      // E4: exhausted tasks dead-letter before any work is done.
+      val (live, dead) = ErrorPath.splitRetryable(routed, maxAttempts)
+      val retryable = col("attempts") < maxAttempts
+      val (attempted, deadCount, routeErrCount, guardedPrefixes) = routed
+        .agg(count(lit(1)), count(when(!retryable, 1)),
+          count(when(retryable && col("is_error"), 1)),
+          collect_set(when(retryable && !col("is_error") && !col("overwrite"),
+            col("strategy"))))
+        .as[(Long, Long, Long, Seq[String])].head()
+      if (deadCount > 0)
+        dead.select(to_json(struct(col("ID"), col("URL"), col("TYPE"),
+            col("PATTERN"), col("UTC"), col("attempts"))).as("value"))
+          .write.mode("append").text(s"$root/dead_letter")
 
-    val routed = Router.route(tasks).cache()
-    val attempted = routed.count()
-
-    // E4: dead-letter exhausted tasks before doing any work.
-    val (live, dead) = ErrorPath.splitRetryable(
-      routed.withColumn("attempts", coalesce(col("attempts"), lit(0))),
-      maxAttempts)
-    val deadCount = dead.count()
-    if (deadCount > 0)
-      dead.select(to_json(struct(col("ID"), col("URL"), col("TYPE"),
-          col("PATTERN"), col("UTC"), col("attempts"))).as("value"))
-        .write.mode("append").text(s"$root/dead_letter")
-
-    // R1e: unknown-type rows go straight to the error path.
-    val routeErrors = Router.errors(live)
-
-    val asTasks = (df: DataFrame) => df
-      .select(col("ID"), col("URL"), col("TYPE"), col("PATTERN"), col("UTC"),
-        coalesce(col("attempts"), lit(0)).as("attempts"))
-      .as[Task]
-
-    // ---- LINKS / LINKS_OVERWRITE ----------------------------------------
-    def linksBranch(tpe: String): (Dataset[Fetch.FileResult], DataFrame) = {
-      val branch = asTasks(Router.branch(live, tpe))
-      val pages = tracked(Fetch.fetchPages(branch))
-      val pageErrors = pages.filter(_.error != null)
-        .select(col("task.ID").as("ID"), col("task.URL").as("URL"),
-          col("error").as("REASON"))
-      val prefix = Schemas.sinkPrefix(tpe)
-      val candidates = pages.filter(_.error == null)
-        .select(col("task.ID").as("ID"), col("task.URL").as("base"),
+      val valid = live.filter(!col("is_error"))
+      val pageObs = Observation()
+      val pages = tracked(Fetch.fetchPages(valid
+          .filter(col("TYPE").isin("LINKS", "LINKS_OVERWRITE", "FTP_FILES"))
+          .select(col("ID"), col("URL"), col("TYPE"), col("PATTERN"),
+            col("UTC"), col("attempts"))
+          .as[Task])
+        .observe(pageObs, count(when(col("error").isNotNull, 1)).as("errors")))
+      val fetchedPages = pages.filter(col("error").isNull)
+        .select(col("task.ID").as("ID"), col("task.TYPE").as("TYPE"),
+          col("task.URL").as("base"), col("task.PATTERN").as("pattern"),
+          col("text"))
+      val isListing = col("TYPE") === "FTP_FILES"
+      val linked = fetchedPages.filter(!isListing)
+        .select(col("ID"), col("TYPE"), col("base"),
           explode(Extract.anchorHrefs(col("text"))).as("href"))
-        .withColumn("file_url", graft.functions.expressions.UrlResolveExpr.urlResolveNative(col("base"), col("href")))
-        .withColumn("name", Urls.basename(col("file_url")))
+        .withColumn("URL", urlResolveNative(col("base"), col("href")))
+        .withColumn("name", Urls.basename(col("URL")))
         .filter(length(col("name")) > 0)
-        .select(col("ID"), col("file_url").as("URL"),
-          concat(lit(prefix + "/"), col("name")).as("key"), col("name"))
-      (tracked(fetchDedupWrite(candidates, root, prefix,
-        overwrite = tpe == "LINKS_OVERWRITE")), pageErrors)
-    }
-
-    // ---- DIRECT / DIRECT_FTP --------------------------------------------
-    def directBranch(tpe: String): (Dataset[Fetch.FileResult], DataFrame) = {
-      val prefix = Schemas.sinkPrefix(tpe)
-      val candidates = Router.branch(live, tpe)
-        .select(col("ID"), col("URL"),
-          concat(lit(prefix + "/"), col("PATTERN")).as("key"),
-          col("PATTERN").as("name"))
-      (tracked(fetchDedupWrite(candidates, root, prefix, overwrite = false)), emptyErrors(spark))
-    }
-
-    // ---- FTP_FILES -------------------------------------------------------
-    def ftpFilesBranch(): (Dataset[Fetch.FileResult], DataFrame) = {
-      val branch = asTasks(Router.branch(live, "FTP_FILES"))
-      val listings = tracked(Fetch.fetchPages(branch))
-      val listErrors = listings.filter(_.error != null)
-        .select(col("task.ID").as("ID"), col("task.URL").as("URL"),
-          col("error").as("REASON"))
-      val prefix = Schemas.sinkPrefix("FTP_FILES")
       val globRegex = udf((p: String) => Globs.globToRegex(p))
-      val candidates = listings.filter(_.error == null)
-        .select(col("task.ID").as("ID"), col("task.URL").as("base"),
-          col("task.PATTERN").as("pattern"),
+      val listed = fetchedPages.filter(isListing)
+        .select(col("ID"), col("TYPE"), col("base"), col("pattern"),
           explode(Extract.listingNames(col("text"))).as("name"))
         .filter(regexp_like(col("name"), globRegex(col("pattern"))))
-        .withColumn("file_url", graft.functions.expressions.UrlResolveExpr.urlResolveNative(col("base"), col("name")))
-        .select(col("ID"), col("file_url").as("URL"),
-          concat(lit(prefix + "/"), col("name")).as("key"), col("name"))
-      (tracked(fetchDedupWrite(candidates, root, prefix, overwrite = false)), listErrors)
-    }
+        .withColumn("URL", urlResolveNative(col("base"), col("name")))
+      val direct = valid.filter(col("TYPE").isin("DIRECT", "DIRECT_FTP"))
+        .withColumnRenamed("PATTERN", "name")
+      val prefix = typedLit(Schemas.sinkPrefix)
+      val guardObs = Observation()
+      val candidates = Seq(linked, listed, direct)
+        .map(_.select(col("ID"), col("URL"),
+          concat(prefix(col("TYPE")), lit("/"), col("name")).as("key"),
+          (col("TYPE") === "LINKS_OVERWRITE").as("overwrite")))
+        .reduce(_ unionByName _)
+        .dropDuplicates("key")
+        .observe(guardObs, count(lit(1)).as("candidates"))
 
-    val branches = Seq(
-      linksBranch("LINKS"), linksBranch("LINKS_OVERWRITE"),
-      directBranch("DIRECT"), directBranch("DIRECT_FTP"),
-      ftpFilesBranch())
-
-    val fileResults = tracked(branches.map(_._1).reduce(_ unionByName _))
-    val fetchErrors = fileResults.filter(_.error != null)
-      .select(col("ID"), col("URL"), col("error").as("REASON"))
-    val downloaded = fileResults.filter(_.error == null).count()
-
-    // ---- error path: E1 catalog flag + E2 alerts ------------------------
-    val allErrors = branches.map(_._2).reduce(_ unionByName _)
-      .unionByName(routeErrors)
-      .unionByName(fetchErrors)
-    caches += allErrors.cache()
-    val errCount = allErrors.count()
-    if (errCount > 0) {
-      ErrorPath.alertJson(allErrors).select(col("alert_json"))
-        .write.mode("append").text(s"$root/alerts")
-      // E1: flags apply to the LIVE catalog (the reference's write-to-
-      // side-path bug, data_downloader.py:48, is NOT reproduced): read the
-      // latest state — accumulating flags from earlier batches — and swap
-      // the updated file in place.
-      catalogPath.foreach { path =>
-        val updated = ErrorPath.flagBroken(Catalog.read(spark, path),
-          allErrors.select(col("ID").as("id")))
-        Catalog.replaceInPlace(updated, path)
+      // D1: one manifest read for the batch's guarded prefixes. The
+      // localCheckpoint PINS the batch-start snapshot and severs the plan's
+      // tie to the manifest path: this batch's own appendManifest writes to
+      // that path, and a lineage-carrying plan would be invalidated by
+      // Spark's CacheManager recache, silently re-running the side-effecting
+      // fetch against the post-batch manifest (observed: downloads counted
+      // as 0).
+      manifest = (if (guardedPrefixes.isEmpty) None
+        else ObjectSink.manifestAll(spark, out))
+        .map(_.filter(col("prefix").isin(guardedPrefixes: _*)).materialized)
+      val counts = manifest.fold(Map.empty[String, Long])(_.groupBy("prefix")
+        .count().as[(String, Long)].collect().toMap)
+      val seeded = guardedPrefixes.filterNot(counts.contains).flatMap { p =>
+        val names = ObjectSink.existingNames(out, p)
+        ObjectSink.seedManifest(spark, out, p, names)
+        names.map(n => s"$p/$n")
       }
-    }
+      val manifestKeys = if (counts.isEmpty) None else manifest.map(
+        _.select(concat(col("prefix"), lit("/"), col("name")).as("key")))
+      val existing = (manifestKeys ++ Option.when(seeded.nonEmpty)(
+        seeded.toDF("key"))).reduceOption(_ unionByName _)
+      val n = counts.values.sum + seeded.size
+      val kept = existing match {
+        case Some(ex) if n > bloomGuardThreshold =>
+          Dedup.bloomDupGuard(candidates.filter(!col("overwrite")), ex, "key",
+            expectedKeys = n).unionByName(candidates.filter(col("overwrite")))
+        case Some(ex) =>
+          candidates.join(ex.withColumnRenamed("key", "existing_key"),
+            col("key") === col("existing_key") && !col("overwrite"), "left_anti")
+        case None => candidates
+      }
 
-    val report = BatchReport(attempted, downloaded,
-      skippedDuplicates = 0, errors = errCount, deadLettered = deadCount)
-    routed.unpersist()
-    caches.foreach(_.unpersist())
-    report
-  }
+      // X9 fetch + K3 sink + manifest append, once for every strategy.
+      val fetched = tracked(Fetch.fetchFiles(kept))
+      val writeObs = Observation()
+      val overwritePrefix = Schemas.sinkPrefix("LINKS_OVERWRITE") + "/"
+      ObjectSink.write(fetched.observe(writeObs,
+          count(when(col("error").isNull, 1)).as("ok"),
+          count(when(col("error").isNotNull, 1)).as("failed")),
+        out, _.startsWith(overwritePrefix))
+      val downloaded = writeObs.get("ok").asInstanceOf[Long]
+      val failed = writeObs.get("failed").asInstanceOf[Long]
+      if (downloaded > 0) ObjectSink.appendManifest(fetched, out)
 
-  /** Above this many existing sink objects the D1 guard switches from a
-    * planner-chosen anti-join to [[graft.operators.Dedup.bloomDupGuard]]:
-    * sink history grows without bound at object-store scale, so a forced
-    * broadcast of it is a scale-killer (r7 verdict ask #5). Below it the
-    * existing side is a tiny local relation the planner broadcasts on its
-    * own — no hint needed.
-    */
-  val bloomGuardThreshold = 100000
-
-  /** D1 dup-guard + X9 fetch + K3 sink for one strategy branch. The
-    * guard's "existing" side is the sink's names MANIFEST
-    * ([[ObjectSink.manifestNames]]) — a prefix-pruned distributed parquet
-    * scan appended by every successful write, never a driver-side listing
-    * of the sink (which can't enumerate an object store). Above
-    * [[bloomGuardThreshold]] existing keys the guard routes through a
-    * Bloom pre-filter ([[graft.operators.Dedup.bloomDupGuard]]); below it
-    * the anti-join side is left planner-chosen. A sink with objects but
-    * no manifest yet (bootstrap/legacy) falls back to one bounded
-    * directory listing.
-    */
-  private def fetchDedupWrite(candidates: DataFrame, root: String,
-      prefix: String, overwrite: Boolean): Dataset[Fetch.FileResult] = {
-    val spark = candidates.sparkSession
-    import spark.implicits._
-    val deduped =
-      if (overwrite) candidates.dropDuplicates("key")
-      else {
-        val base = candidates.dropDuplicates("key")
-        // A prefix the manifest has never seen (no manifest at all, or a
-        // legacy sink whose objects predate it) is bootstrap-seeded from
-        // ONE bounded directory listing, so every later batch takes the
-        // manifest path and pre-manifest objects stay guarded forever.
-        def legacyBootstrap(): DataFrame = {
-          val names = ObjectSink.existingNames(root + "/out", prefix)
-          if (names.isEmpty) base
-          else {
-            ObjectSink.seedManifest(spark, root + "/out", prefix, names)
-            base.join(names.toDF("name_existing"),
-              col("name") === col("name_existing"), "left_anti")
-          }
-        }
-        ObjectSink.manifestNames(spark, root + "/out", prefix) match {
-          case Some(manifest) =>
-            // localCheckpoint PINS the batch-start manifest snapshot and
-            // severs the plan's tie to the manifest path: this batch's own
-            // appendManifest writes to that path, and a lineage-carrying
-            // plan would be invalidated by Spark's CacheManager recache,
-            // silently re-running the side-effecting fetch against the
-            // post-batch manifest (observed: downloads counted as 0).
-            val existing = manifest.materialized
-            val n = existing.count()
-            if (n == 0) legacyBootstrap()
-            else if (n > bloomGuardThreshold)
-              graft.operators.Dedup.bloomDupGuard(base, existing, "name",
-                expectedKeys = n)
-            else
-              base.join(existing.select(col("name").as("name_existing")),
-                col("name") === col("name_existing"), "left_anti")
-          case None => legacyBootstrap()
+      // ---- error path: E1 catalog flag + E2 alerts ----------------------
+      val errCount = routeErrCount + failed +
+        pageObs.get("errors").asInstanceOf[Long]
+      if (errCount > 0) {
+        val allErrors = Router.errors(live)
+          .unionByName(pages.filter(col("error").isNotNull)
+            .select(col("task.ID").as("ID"), col("task.URL").as("URL"),
+              col("error").as("REASON")))
+          .unionByName(fetched.filter(col("error").isNotNull)
+            .select(col("ID"), col("URL"), col("error").as("REASON")))
+        ErrorPath.alertJson(allErrors).select(col("alert_json"))
+          .write.mode("append").text(s"$root/alerts")
+        // E1: flags apply to the LIVE catalog (the reference's write-to-
+        // side-path bug, data_downloader.py:48, is NOT reproduced): read the
+        // latest state — accumulating flags from earlier batches — and swap
+        // the updated file in place.
+        catalogPath.foreach { path =>
+          Catalog.replaceInPlace(ErrorPath.flagBroken(Catalog.read(spark, path),
+            allErrors.select(col("ID").as("id"))), path)
         }
       }
-    // cache() so the side-effecting fetch runs once even though the result
-    // feeds both the sink write and the caller's error/count actions; the
-    // caller unpersists after the batch (stale-cache hazard, see above).
-    val fetched = Fetch.fetchFiles(deduped).cache()  // caller tracks + unpersists
-    val ok = fetched.filter(_.error == null)
-    ObjectSink.write(ok, s"$root/out", overwrite)
-    ObjectSink.appendManifest(ok, s"$root/out")
-    fetched
-  }
 
-  private def emptyErrors(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, String, String)].toDF("ID", "URL", "REASON")
+      BatchReport(attempted, downloaded,
+        skippedDuplicates = guardObs.get("candidates").asInstanceOf[Long] -
+          downloaded - failed,
+        errors = errCount, deadLettered = deadCount)
+    } finally {
+      caches.foreach(_.unpersist())
+      manifest.foreach(_.queryExecution.logical.foreach {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+        case _ => ()
+      })
+    }
   }
 
   /** Streaming form (L2/K2/E3): file source on the queue dir, poll cap via

@@ -21,7 +21,7 @@ class BinarySourceSpec extends SparkSpec {
       FileResult("s1", "http://h/b.bin", "LINK/b.bin", Array[Byte](0, 1, 2, -1), null),
       FileResult("s2", "http://h/c.bin", "FTP_FILES/c.bin", "gamma".getBytes("UTF-8"), null)
     ).toDS()
-    ObjectSink.write(artifacts, root, overwrite = true)
+    ObjectSink.write(artifacts, root, overwrite = _ => true)
 
     val back = spark.read.format("binaryFile").load(s"$root/LINK")
       .select(element_at(split(col("path"), "/"), -1).as("name"),

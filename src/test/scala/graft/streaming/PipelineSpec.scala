@@ -87,9 +87,104 @@ class PipelineSpec extends SparkSpec {
     // (no overwrite), LINKS_OVERWRITE must replace it.
     write(src.resolve("a.csv"), "alpha,CHANGED")
     write(src.resolve("c.txt"), "c-v2")
-    DownloadPipeline.processBatch(tasksDF(src), root)
+    val again = DownloadPipeline.processBatch(tasksDF(src), root)
     assert(read(Paths.get(root, "out/LINK/a.csv")) === "alpha,1")
     assert(read(Paths.get(root, "out/LINKS_OVER/c.txt")) === "c-v2")
+    // every guarded key was dropped; the LINKS_OVERWRITE c.txt was not
+    assert(again.skippedDuplicates === 6)
+    assert(again.downloaded === 1)
+  }
+
+  /** Spark jobs started by `body`, counted by a listener: a sentinel job
+    * run after it marks the point up to which every job event has been
+    * delivered. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.phase"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val sentinel = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)) match {
+          case Some("body")     => jobs.incrementAndGet()
+          case Some("sentinel") => sentinel.set(e.jobId)
+          case _                => ()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinel.get) drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "body")
+      val r = try body finally sc.setLocalProperty(key, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (r, jobs.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def persistedIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def manifestDeltaFiles(root: String): Int = {
+    val dir = Paths.get(graft.sinks.ObjectSink.manifestPath(s"$root/out"))
+    if (!Files.isDirectory(dir)) 0
+    else {
+      val s = Files.list(dir)
+      try s.filter(_.getFileName.toString.startsWith("part-")).count().toInt
+      finally s.close()
+    }
+  }
+
+  test("one pass per batch: one manifest delta file, bounded Spark jobs") {
+    val tmp = Files.createTempDirectory("graft-onepass")
+    val src = tmp.resolve("src")
+    val root = tmp.resolve("ws").toString
+    setupSource(src)
+    Workspace.provision(root)
+    val tasks = tasksDF(src)
+    val persisted = persistedIds
+
+    val (report, jobs) = jobsDuring(DownloadPipeline.processBatch(tasks, root))
+    info(s"first batch: $jobs Spark jobs")
+    assert(report.downloaded === 7 && report.errors === 2)
+    // every strategy's files land through ONE manifest append ...
+    assert(manifestDeltaFiles(root) === 1)
+    // ... and the batch runs as one pass, not one job chain per strategy
+    // (one chain per strategy took 50 jobs here, and 53 on the second
+    // batch; the single pass takes 11 and 15)
+    assert(jobs <= 18, s"$jobs Spark jobs for one batch")
+    // the batch's caches and manifest pin are released
+    assert(persistedIds -- persisted === Set.empty)
+
+    // a second batch over a sink that now has a manifest: still one delta
+    // file, and nothing left persisted
+    write(src.resolve("c.txt"), "c-v2")
+    val (again, jobs2) = jobsDuring(DownloadPipeline.processBatch(tasks, root))
+    info(s"second batch: $jobs2 Spark jobs")
+    assert(again.downloaded === 1)
+    assert(manifestDeltaFiles(root) === 2)
+    assert(jobs2 <= 18, s"$jobs2 Spark jobs for one batch")
+    assert(persistedIds -- persisted === Set.empty)
+  }
+
+  test("a failing batch still unpersists its caches") {
+    val tmp = Files.createTempDirectory("graft-failbatch")
+    val src = tmp.resolve("src")
+    val root = tmp.resolve("ws").toString
+    setupSource(src)
+    Workspace.provision(root)
+    // a regular file where the LINK sink directory belongs: the object
+    // write cannot create out/LINK/a.csv and the batch throws
+    write(Paths.get(root, "out/LINK"), "not a directory")
+    val persisted = persistedIds
+    intercept[Exception](DownloadPipeline.processBatch(tasksDF(src), root))
+    assert(persistedIds -- persisted === Set.empty)
   }
 
   test("D1 guard reads the names manifest, not a sink directory listing") {
