@@ -33,11 +33,11 @@ object MetaScaleProbe {
     val tab = s"$work/t${System.nanoTime()}"
     Generations.setStatsCols(spark, tab, Seq("k"))
     val t0 = System.nanoTime()
-    // commit-path fs-op counter (r20): every append walks the commit log
-    // several times (witness check, latest, carried tags); with the
-    // create-only parse cache each commit FILE is opened once ever, so
+    // commit-file opens are the commit cache's misses: every append walks
+    // the commit log several times (witness check, latest, carried tags);
+    // with the create-only parse cache each commit FILE is opened once, so
     // the build's total opens are O(nCommits), not O(nCommits²)
-    val cfr0 = Generations.commitFileReads.get
+    val cfr0 = Generations.commitCache.misses
     (0 until nCommits).foreach { i =>
       val lo = i.toLong * 100000L
       val df = spark.range(lo, lo + 100000L)
@@ -47,7 +47,7 @@ object MetaScaleProbe {
       else Generations.appendCommitted(spark, df, tab, s"batch=$i")
     }
     val buildS = (System.nanoTime() - t0) / 1e9
-    val cfrBuild = Generations.commitFileReads.get - cfr0
+    val cfrBuild = Generations.commitCache.misses - cfr0
     val preds = Seq(FileStats.Between("k", 1000000L, 1005000L))
 
     def measure(label: String): (Double, Long, Long, Seq[String], Int) = {
@@ -118,13 +118,13 @@ object MetaScaleProbe {
     def measureKeys(dim: org.apache.spark.sql.DataFrame)
         : (Double, Long, Long, Seq[String], Int) = {
       val l0 = Generations.planListCalls.get
-      val r0 = graft.sinks.BloomStats.readCalls.get
+      val r0 = graft.sinks.BloomStats.readCache.misses
       val s = System.nanoTime()
       val (kept, total) =
         Generations.prunePlanByKeys(spark, btab, "k", dim).get
       val w = (System.nanoTime() - s) / 1e9
       (w, Generations.planListCalls.get - l0,
-        graft.sinks.BloomStats.readCalls.get - r0,
+        graft.sinks.BloomStats.readCache.misses - r0,
         kept.map(_.toString).sorted, total)
     }
     spark.conf.set(Generations.MetaDialMinFilesKey, Long.MaxValue.toString)

@@ -1,8 +1,13 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+
+import graft.sinks.MetaCache
 
 /** Driver-table loaders. The `events.ts` column has drifted across writer
   * versions — TIMESTAMP(NANOS) (read as LongType under
@@ -19,29 +24,28 @@ object Tables {
 
   val nanosAsLongKey = "spark.sql.legacy.parquet.nanosAsLong"
 
-  // Schema cache for the STATIC driver tables — the metastore role a
-  // catalog table would play (r19 optimization): plain
-  // `spark.read.parquet` re-infers the schema from file footers on
-  // every call (~60-70 ms here), and a bench sweep issues thousands of
-  // such reads. Keyed by (path, mtime, length) so a driver-refresh
-  // rewrite (the documented events.ts encoding drift) re-infers; only
-  // schemas are cached, never data or results — every query still
-  // computes from the parquet bytes.
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), org.apache.spark.sql.types.StructType]
+  // Schemas and row counts of the STATIC driver tables, the metastore
+  // role a catalog table would play: plain `spark.read.parquet`
+  // re-infers the schema from file footers on every call (~60-70 ms
+  // here), and a bench sweep issues thousands of such reads. Keyed by
+  // (path, leaf-file fingerprint), so a driver-refresh rewrite (the
+  // documented events.ts encoding drift) re-infers.
+  private val schemaCache =
+    new MetaCache[(String, String), StructType](MetaCache.SmallEntries)
+  private val countCache =
+    new MetaCache[(String, String), Long](MetaCache.SmallEntries)
 
   /** Recursive leaf data files of a parquet path via the path's own
     * Hadoop FileSystem — works for directories, nested (partitioned)
     * layouts, single files, and non-local URIs alike. Empty when the
     * path does not exist.
     */
-  private def leafParquetFiles(spark: SparkSession, path: String)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
+  private def leafParquetFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) return Nil
-    val out = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
+    val out = Seq.newBuilder[FileStatus]
     val it = fs.listFiles(p, /* recursive = */ true)
     while (it.hasNext) {
       val st = it.next()
@@ -53,7 +57,7 @@ object Tables {
     out.result()
   }
 
-  /** Content fingerprint of a parquet path: every leaf data file's
+  /** Content fingerprint of a parquet path's leaf files: every file's
     * (name, length, mtime) folded into one string. Resolved through the
     * Hadoop FileSystem (r19 ADVICE: java.io.File reports mtime=0/len=0
     * for non-local URIs, and a directory's own mtime does not change
@@ -61,8 +65,7 @@ object Tables {
     * catch both), so an in-place same-length rewrite within one mtime
     * tick is the only residual blind spot, vs whole classes before.
     */
-  private def fingerprint(spark: SparkSession, path: String): String = {
-    val files = leafParquetFiles(spark, path)
+  private def fingerprint(files: Seq[FileStatus]): String = {
     val h = java.security.MessageDigest.getInstance("MD5")
     files.sortBy(_.getPath.toString).foreach { st =>
       h.update(s"${st.getPath.getName}|${st.getLen}|${st.getModificationTime};"
@@ -72,43 +75,35 @@ object Tables {
   }
 
   /** `spark.read.parquet(path)` with the inferred schema memoized per
-    * (path, leaf-file fingerprint) — see [[schemaCache]]. */
+    * (path, leaf-file fingerprint). */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val fp = fingerprint(spark, path)
-    if (fp.startsWith("n=0;")) spark.read.parquet(path) // absent/empty: no cache
+    val files = leafParquetFiles(spark, path)
+    if (files.isEmpty) spark.read.parquet(path) // absent/empty: no cache
     else {
-      val sch = schemaCache.computeIfAbsent((path, fp),
-        _ => spark.read.parquet(path).schema)
+      val sch = schemaCache((path, fingerprint(files)))(
+        spark.read.parquet(path).schema)
       spark.read.schema(sch).parquet(path)
     }
   }
 
-  private val countCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), java.lang.Long]
-
   /** Exact row count of a parquet table from file FOOTERS — driver-side
     * metadata only, no Spark job (the same read `FileStats` does for
-    * data-skipping stats). Memoized like [[schemaCache]] (same
-    * fingerprinted key); recurses into partitioned/nested layouts and
-    * THROWS when no data file exists (r19 ADVICE: a silent 0 would size
-    * operators to one cell with no diagnostic).
+    * data-skipping stats). Memoized under the same key as [[read]]'s
+    * schema; recurses into partitioned/nested layouts and THROWS when
+    * no data file exists (r19 ADVICE: a silent 0 would size operators
+    * to one cell with no diagnostic).
     */
   def parquetRowCount(spark: SparkSession, path: String): Long = {
-    val key = (path, fingerprint(spark, path))
-    countCache.computeIfAbsent(key, { _ =>
+    val files = leafParquetFiles(spark, path)
+    if (files.isEmpty) throw new IllegalArgumentException(
+      s"parquetRowCount($path): no parquet data files found")
+    countCache((path, fingerprint(files))) {
       val conf = spark.sparkContext.hadoopConfiguration
-      val files = leafParquetFiles(spark, path)
-      if (files.isEmpty) throw new IllegalArgumentException(
-        s"parquetRowCount($path): no parquet data files found")
-      var total = 0L
-      files.foreach { st =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            st.getPath, conf))
-        try total += r.getRecordCount finally r.close()
-      }
-      java.lang.Long.valueOf(total)
-    }).longValue()
+      files.map { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+    }
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {

@@ -29,10 +29,6 @@ object Router {
       .withColumn("is_error", col("strategy").isNull)
   }
 
-  /** Valid branch for one strategy. */
-  def branch(routed: DataFrame, tpe: String): DataFrame =
-    routed.filter(col("TYPE") === tpe && !col("is_error"))
-
   /** Unknown-type error rows (R1e). */
   def errors(routed: DataFrame): DataFrame =
     routed.filter(col("is_error"))

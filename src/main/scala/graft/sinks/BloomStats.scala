@@ -290,28 +290,12 @@ object BloomStats {
       fs.delete(tmp, false) // someone already published identical blooms
   }
 
-  /** Driver-side cache of parsed sidecars, keyed by absolute sidecar
-    * path: a generation's blooms are IMMUTABLE once published (temp +
-    * create-only), so replanning the same probe — the serving pattern —
-    * must not re-read megabytes of sidecar per plan (the r17 sf10 probe
-    * measured the re-read as the dominant per-plan cost). Bounded LRU;
-    * a gc'd generation's entry is simply never asked for again.
-    */
-  private val readCache =
-    new java.util.LinkedHashMap[String, Map[(String, String), (String, Array[Byte])]](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Map[(String, String), (String, Array[Byte])]])
-          : Boolean = size() > 8
-    }
-
-  /** Driver-side whole-sidecar parses performed by [[read]] on the
-    * CURRENT thread — instrumentation for the distributed-planning
-    * contract (a fully checkpoint-covered bloom refine must make ZERO;
-    * MetaScaleProbe asserts), mirroring [[FileStats.readCalls]] /
-    * [[Generations.planListCalls]].
-    */
-  val readCalls: ThreadLocal[Long] = ThreadLocal.withInitial(() => 0L)
+  // Parsed sidecars (see [[MetaCache.sidecar]]): replanning the same
+  // probe, the serving pattern, must not re-read megabytes of sidecar
+  // per plan (the r17 sf10 probe measured the re-read as the dominant
+  // per-plan cost). Its `misses` count the driver-side sidecar parses.
+  private[graft] val readCache =
+    new MetaCache[String, Map[(String, String), (String, Array[Byte])]](8)
 
   /** Parse one serialized sidecar's bytes (the stream format [[write]]
     * produces) into (domain, serialized bloom) by (file, column); None
@@ -348,36 +332,8 @@ object BloomStats {
     * can ship them in a broadcast and deserialize executor-side.
     */
   def read(fs: FileSystem, table: Path,
-      gen: String): Option[Map[(String, String), (String, Array[Byte])]] = {
-    val p = bloomPath(table, gen)
-    // cache key carries (len, mtime): published sidecars are immutable
-    // by protocol, but a mutated/corrupted file must re-read (and fall
-    // through to the keep-all None), never serve a stale parse
-    val st = try fs.getFileStatus(p)
-      catch { case _: java.io.FileNotFoundException => return None }
-    val ck = s"$p@${st.getLen}@${st.getModificationTime}"
-    readCache.synchronized {
-      val hit = readCache.get(ck)
-      if (hit != null) return Some(hit)
-    }
-    readCalls.set(readCalls.get + 1)
-    try {
-      val in = fs.open(p)
-      val bytes =
-        try {
-          val bos = new ByteArrayOutputStream(
-            math.min(st.getLen, Int.MaxValue.toLong).toInt.max(64))
-          val buf = new Array[Byte](64 * 1024)
-          var r = in.read(buf)
-          while (r >= 0) { bos.write(buf, 0, r); r = in.read(buf) }
-          bos.toByteArray
-        } finally in.close()
-      parseBytes(bytes).map { parsed =>
-        readCache.synchronized { readCache.put(ck, parsed) }
-        parsed
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+      gen: String): Option[Map[(String, String), (String, Array[Byte])]] =
+    MetaCache.sidecar(readCache, fs, bloomPath(table, gen))(parseBytes)
 
   /** Delete the bloom sidecar of a generation (gc hook). */
   def delete(fs: FileSystem, table: Path, gen: String): Unit = {

@@ -292,18 +292,9 @@ object FileStats {
       fs.delete(tmp, false) // someone already published identical stats
   }
 
-  /** Driver-side cache of parsed stats files keyed by (path, len,
-    * mtime) — published stats are immutable, and a serving pattern
-    * replans the same pruning repeatedly; same contract as
-    * [[BloomStats]]' sidecar cache (a mutated file re-reads, a gc'd
-    * generation is never asked for again). Bounded LRU.
-    */
-  private val readCache =
-    new java.util.LinkedHashMap[String, Seq[FileEntry]](32, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Seq[FileEntry]]): Boolean =
-        size() > 16
-    }
+  // Parsed stats sidecars (see [[MetaCache.sidecar]]); a serving
+  // pattern replans the same pruning repeatedly.
+  private val readCache = new MetaCache[String, Seq[FileEntry]](16)
 
   /** One sidecar line → (file, rows, col, stats), or None when
     * malformed (skipped, like the inline parser always did). Exposed so
@@ -332,37 +323,19 @@ object FileStats {
     */
   def read(fs: FileSystem, table: Path, gen: String): Option[Seq[FileEntry]] = {
     readCalls.set(readCalls.get + 1)
-    val p = statsPath(table, gen)
-    val st = try fs.getFileStatus(p)
-      catch { case _: java.io.FileNotFoundException => return None }
-    val ck = s"$p@${st.getLen}@${st.getModificationTime}"
-    readCache.synchronized {
-      val hit = readCache.get(ck)
-      if (hit != null) return Some(hit)
-    }
-    try {
-      val in = fs.open(p)
-      val txt = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](65536)
-        var n = in.read(buf)
-        while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-        new String(bos.toByteArray, "UTF-8")
-      } finally in.close()
+    MetaCache.sidecar(readCache, fs, statsPath(table, gen)) { bytes =>
       val byFile = scala.collection.mutable.LinkedHashMap
         .empty[String, (Long, scala.collection.mutable.Map[String, ColStats])]
-      txt.linesIterator.filter(_.nonEmpty).foreach { l =>
+      new String(bytes, "UTF-8").linesIterator.filter(_.nonEmpty).foreach { l =>
         parseLine(l).foreach { case (f, rows, c, st) =>
           val e = byFile.getOrElseUpdate(f,
             (rows, scala.collection.mutable.Map.empty))
           e._2(c) = st
         }
       }
-      val parsed = byFile.toSeq.map { case (f, (rows, cols)) =>
-        FileEntry(f, rows, cols.toMap) }
-      readCache.synchronized { readCache.put(ck, parsed) }
-      Some(parsed)
-    } catch { case _: Exception => None }
+      Some(byFile.toSeq.map { case (f, (rows, cols)) =>
+        FileEntry(f, rows, cols.toMap) })
+    }
   }
 
   /** Delete the stats file of a generation (gc hook). */

@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, count, expr, input_file_name, lit, sum, when}
@@ -127,35 +125,26 @@ object Generations {
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Commit files opened+parsed since JVM start — observability for the
-    * O(1)-replay-check contract (specs assert how many pointer reads an
-    * operation costs; a real deployment would surface this as a metric).
-    */
-  val commitFileReads = new AtomicLong(0)
+  // Parsed commit files by qualified path: a commit file is CREATE-ONLY
+  // by protocol ([[Pointers.publishNew]] never overwrites; gc only
+  // removes the name from listings), so its parse never goes stale.
+  // Every span walk (logCommits / latest / carryTags / appendWitnessed)
+  // would otherwise re-open the same one-line files. Its `misses` count
+  // the commit files opened and parsed.
+  private[graft] val commitCache = new MetaCache[String, Commit](MetaCache.SmallEntries)
 
-  // Parsed commit files, memoized FOREVER per path (r20, guide §6 —
-  // the catalog role): a commit file is CREATE-ONLY by protocol
-  // ([[Pointers.publishNew]] never overwrites; gc may delete, which
-  // only removes the name from listings), so its parse can never go
-  // stale. Every span walk (logCommits / latest / carryTags /
-  // appendWitnessed) re-opened the same one-line files — O(span) small
-  // reads per walk, several walks per commit. Metadata only, like
-  // every cache in this module.
-  private val commitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Commit]
-
-  private def parseCommit(fs: FileSystem, cd: Path, name: String): Commit =
-    commitCache.computeIfAbsent(
-      fs.makeQualified(new Path(cd, name)).toString, { _ =>
-        commitFileReads.incrementAndGet()
-        val in = fs.open(new Path(cd, name))
-        val line = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().next() finally in.close()
-        val parts = line.trim.split(" ")
-        Commit(parts(0).toLong, parts(1), parts(2).toLong,
-          if (parts.length > 3) parts(3) else "-",
-          if (parts.length > 4) parts.drop(4).toSeq else Nil)
-      })
+  private def parseCommit(fs: FileSystem, cd: Path, name: String): Commit = {
+    val p = new Path(cd, name)
+    commitCache(fs.makeQualified(p).toString) {
+      val in = fs.open(p)
+      val line = try scala.io.Source.fromInputStream(in, "UTF-8")
+        .getLines().next() finally in.close()
+      val parts = line.trim.split(" ")
+      Commit(parts(0).toLong, parts(1), parts(2).toLong,
+        if (parts.length > 3) parts(3) else "-",
+        if (parts.length > 4) parts.drop(4).toSeq else Nil)
+    }
+  }
 
   private def commitNames(fs: FileSystem, cd: Path): Array[String] =
     if (!fs.exists(cd)) Array.empty
@@ -186,24 +175,21 @@ object Generations {
   def genPath(table: String, c: Commit): String =
     new Path(dataDir(new Path(table)), c.gen).toString
 
-  // ------------------------------------------------ generation schemas
-  // A generation dir is IMMUTABLE by protocol (uniquely named, written
-  // once, never rewritten — mutations commit NEW generations), so its
-  // inferred parquet schema can be memoized forever on the path alone.
-  // This is the same metastore-role metadata cache as Tables.read (r19):
-  // schemas only, never data or results — every read still pulls the
-  // parquet bytes. Without it, every Generations.read/readLog/span read
-  // re-infers schemas from footers (~60-70 ms per call, and a
-  // mergeSchema union read launches a footer-reading Spark job), which
-  // the multi-tick IVM pipelines pay dozens of times per run.
-  private val genSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]
+  // Inferred parquet schema per generation dir: a generation is
+  // IMMUTABLE by protocol (uniquely named, written once; mutations commit
+  // NEW generations), so the path alone is the key. Without it every
+  // Generations.read/readLog/span read re-infers schemas from footers
+  // (~60-70 ms per call, and a mergeSchema union read launches a
+  // footer-reading Spark job), which the multi-tick IVM pipelines pay
+  // dozens of times per run.
+  private val genSchemaCache =
+    new MetaCache[String, org.apache.spark.sql.types.StructType](MetaCache.SmallEntries)
 
-  /** Inferred schema of one committed generation, memoized per gen dir. */
   private def genSchema(spark: SparkSession, table: String,
-      c: Commit): org.apache.spark.sql.types.StructType =
-    genSchemaCache.computeIfAbsent(genPath(table, c),
-      p => spark.read.parquet(p).schema)
+      c: Commit): org.apache.spark.sql.types.StructType = {
+    val p = genPath(table, c)
+    genSchemaCache(p)(spark.read.parquet(p).schema)
+  }
 
   /** Driver-side equivalent of a `mergeSchema` union read's inferred
     * schema for ADDITIVE evolution (the only kind the append gate

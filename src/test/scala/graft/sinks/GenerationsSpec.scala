@@ -257,10 +257,10 @@ class GenerationsSpec extends SparkSpec {
     assert(Generations.commits(spark, t).map(_.tag)
       === Seq(Generations.SquashTag))
     assert(Generations.latest(spark, t).get.carried === Seq("batch=3"))
-    val reads0 = Generations.commitFileReads.get()
+    val reads0 = Generations.commitCache.misses
     assert(Generations.appendCommitted(spark, Seq(3).toDF("v"), t,
       "batch=3").isEmpty, "latest batch replay must stay a no-op")
-    assert(Generations.commitFileReads.get() - reads0 <= 2,
+    assert(Generations.commitCache.misses - reads0 <= 2,
       "replay check must read O(live span) pointer files, not history")
     // and a genuinely new batch still appends
     assert(Generations.appendCommitted(spark, Seq(4).toDF("v"), t,

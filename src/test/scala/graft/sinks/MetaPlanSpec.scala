@@ -171,12 +171,12 @@ class MetaPlanSpec extends SparkSpec {
     def probe(dim: org.apache.spark.sql.DataFrame,
         dial: String): (Seq[String], Int, Long) = {
       spark.conf.set(Generations.MetaDialMinFilesKey, dial)
-      val r0 = BloomStats.readCalls.get
+      val r0 = BloomStats.readCache.misses
       val (kept, total) =
         Generations.prunePlanByKeys(spark, t, "k", dim).get
       spark.conf.unset(Generations.MetaDialMinFilesKey)
       (kept.map(_.toString).sorted, total,
-        BloomStats.readCalls.get - r0)
+        BloomStats.readCache.misses - r0)
     }
     // off-stride keys: bloom prunes everything, zero driver parses on
     // the meta path, and the plan equals the driver path's exactly
