@@ -35,13 +35,18 @@ object Bench {
     // A failed rep is recorded as -1, NEVER as a timing: in r7 four
     // AnalysisException-throwing queries "ran" in ~0.1 s for two rounds
     // of bench artifacts. A query with any failed rep reports -1 overall
-    // and lands in the failed list (a flaky query is broken, not fast).
-    def timeQuery(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                  reps: Int): Double = {
+    // and lands in the failed list (a flaky query is broken, not fast);
+    // its first failure's cause is kept in `errors`.
+    val errors = scala.collection.mutable.Map.empty[String, String]
+    def timeQuery(name: String, reps: Int): Double = {
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case NonFatal(_) => false }
+        val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+                 catch { case NonFatal(e) =>
+                   errors.getOrElseUpdate(name,
+                     s"${e.getClass.getName}: ${Verify.failureMessage(e)}")
+                   false
+                 }
         if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       }
       if (times.contains(-1.0)) -1.0 else times.min
@@ -88,13 +93,13 @@ object Bench {
     // iteration shouldn't pay two untimed 3-rep brackets.
     def calRun(): Double =
       if (!only.forall(_.contains(calibratorQ))) -1.0
-      else SparkEntry.queries.get(calibratorQ)
-        .map(timeQuery(_, 3)).getOrElse(-1.0)
+      else if (!SparkEntry.queries.contains(calibratorQ)) -1.0
+      else timeQuery(calibratorQ, 3)
     val calBefore = calRun()
     val loadBefore = loadavg()
     val results0 = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) => name -> timeQuery(fn, 3) }
+      .map { case (name, _) => name -> timeQuery(name, 3) }
     // Self-defending sweep: any query that measured > 1.5x its committed
     // baseline gets ONE more quiet-host re-measure BEFORE the headline
     // report, and the report carries the defended (min) value plus both
@@ -125,7 +130,7 @@ object Bench {
     val quietRerun =
       if (flagged0.isEmpty) true else awaitQuietHost(quietTarget)
     val rerunSamples = flagged0.toSeq.sorted.flatMap { name =>
-      val re = timeQuery(SparkEntry.queries(name), 2)
+      val re = timeQuery(name, 2)
       if (re > 0) Some(name -> (results0.toMap.apply(name), re)) else None
     }.toMap
     val results = results0.map { case (name, cur) =>
@@ -150,6 +155,9 @@ object Bench {
     // not netted against the sum
     val total = ms(results.collect { case (_, v) if v >= 0 => v }.sum)
     val failJson = failedQueries.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val errorsJson = failedQueries.flatMap(n => errors.get(n).map(n -> _))
+      .map { case (n, e) => s"${Verify.jq(n)}:${Verify.jq(e)}" }
+      .mkString("{", ",", "}")
     // loadavg before/after distinguishes "slower code" from "busy host"
     // (the r7 artifact was contention-contaminated: 22x phantom
     // regressions on untouched code)
@@ -173,7 +181,7 @@ object Bench {
     val report =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","failed":$failJson,"n_failed":${failedQueries.size}}"""
     val auxReport =
-      s"""{"metric":"bench_aux","value":$total,"unit":"sec","sf":"$sfDir","failed":$failJson,"reruns":$rerunsJson,"rerun_quiet_host":$quietRerun,"calibrator":$calJson,"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter"}"""
+      s"""{"metric":"bench_aux","value":$total,"unit":"sec","sf":"$sfDir","failed":$failJson,"errors":$errorsJson,"reruns":$rerunsJson,"rerun_quiet_host":$quietRerun,"calibrator":$calJson,"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter"}"""
     println(auxReport)
     // Full per-query map also goes to a file: the driver's bounded tail
     // capture truncates the stdout map from the front (r5 lost the first

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Synthesize an sf1-class dataset from the driver's sf0.1 tables by
   * replicating each table `factor`× with re-keyed ids — the data for
-  * [[ScalingProbe]]'s data-dominated measurement step (VERDICT r10 ask
+  * the data-dominated scaling step recorded in SCALING.md's opening
+  * section and "sf10 step (r11, second pass)" (VERDICT r10 ask
   * #1: the sf0.01→sf0.1 slopes are fixed-overhead-dominated, so 100 TB
   * linearity was extrapolated, not measured).
   *

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -24,9 +25,8 @@ object Verify {
           .parquet(s"$outDir/$name")
         hashes += name -> rowSha256(spark, s"$outDir/$name")
       }
-      catch { case e: Throwable =>
-        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-          .linesIterator.take(3).mkString(" | ")
+      catch { case NonFatal(e) =>
+        val msg = failureMessage(e)
         println(s"[verify] FAIL $name: $msg")
         failed += name -> msg
         val d = new java.io.File(s"$outDir/$name")
@@ -47,6 +47,13 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/row_sha256.json"), hashJson)
     failed.toSeq
   }
+
+  /** A failure's cause on one line: its message (its class name when it
+    * has none), first 3 lines joined. Bench records it after the
+    * exception's class name. */
+  def failureMessage(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName)
+      .linesIterator.take(3).mkString(" | ")
 
   /** Builder-side content fingerprint of a dumped result, emitted to
     * `row_sha256.json` so the driver's hash path can be DIFFED against a
@@ -81,7 +88,7 @@ object Verify {
   // JSON string escape: backslash, quote, and ALL control chars (<0x20)
   // — a tab or CR in builder-authored SQL would otherwise make the
   // driver's json.load fail and silently zero the round's correctness.
-  private def jq(s: String): String = "\"" + s.flatMap {
+  private[graft] def jq(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

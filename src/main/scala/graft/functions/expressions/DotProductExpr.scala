@@ -30,8 +30,8 @@ case class DotProductExpr(left: Expression, right: Expression)
   // signature made ImplicitCastInputTypes materialize a widened COPY of
   // both arrays per evaluated row — in the kNN pair stage that is two
   // 64-element allocations per candidate PAIR, and it dominated the
-  // stage's CPU (JobProfile: 15 s executor time per pair stage at
-  // sf0.1). Widening now happens per ELEMENT inside the fused loop —
+  // stage's CPU (OPTIMIZATION_r19.md §1: 15 s executor time per pair
+  // stage at sf0.1). Widening now happens per ELEMENT inside the fused loop —
   // (double)f[i] is the exact same IEEE value the cast produced, so
   // results are bit-identical. Double stays first so any OTHER numeric
   // array still implicitly casts to double exactly as before.

@@ -194,8 +194,7 @@ object Graph {
     labels.select(col("v"), col("lbl").as("community"))
   }
 
-  def pageRank(edges: DataFrame, iters: Int = 5, damping: Double = 0.85,
-      onIteration: (Int, DataFrame) => Unit = (_, _) => ()): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int = 5, damping: Double = 0.85): DataFrame = {
     // cut the incoming edge list FIRST: `edges` is referenced twice
     // below (degree aggregation + the join), and without the boundary
     // the caller's whole edge-builder lineage would evaluate per
@@ -241,9 +240,6 @@ object Graph {
         .select(col("v"),
           (lit((1 - damping) / n) + lit(damping) * coalesce(col("s"), lit(0.0))).as("r"))
       if (i % 3 == 0 && i < iters) ranks = ranks.materializedLazy
-      // diagnostic seam (GraphInvariants): per-iteration rank frame for
-      // engine-side mass-conservation checks; default no-op costs nothing
-      onIteration(i, ranks)
     }
     // floor-snap, never round(): r is an iterated double sum, so the
     // snap must be the same IEEE ops in every engine (BASELINE.md)
@@ -268,8 +264,7 @@ object Graph {
     *         comparable across graph sizes), rounded to 6.
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-      iters: Int = 5, damping: Double = 0.85,
-      onIteration: (Int, DataFrame) => Unit = (_, _) => ()): DataFrame = {
+      iters: Int = 5, damping: Double = 0.85): DataFrame = {
     // single eager cut of the edge list; derived frames cut lazily —
     // see pageRank (r19)
     val e0 = edges.select(col("src"), col("dst")).materialized
@@ -309,7 +304,6 @@ object Graph {
           (lit(1 - damping) * col("s") +
             lit(damping) * coalesce(col("cs"), lit(0.0))).as("r"))
       if (i % 3 == 0 && i < iters) ranks = ranks.materializedLazy
-      onIteration(i, ranks) // diagnostic seam, as in pageRank
     }
     // floor-snap, never round() — same rule as pageRank's rank_norm
     ranks.select(col("v"),

@@ -37,19 +37,7 @@ object Iterate {
     * SparkContext has none set (convenience for config-only setups). */
   val DirKey = "spark.graft.checkpoint.dir"
 
-  /** Build-phase plan recorder (r20, VERDICT #6 evidence contract):
-    * when set, every frame about to be CUT through [[materialize]] is
-    * first handed to the recorder — PlanDump's --build mode uses this
-    * to dump the plans that hide behind checkpoint cuts (a returned
-    * frame's explain shows only the post-cut scan, so the optimized
-    * build-phase subtrees were invisible in r19's committed artifacts).
-    * Diagnostic-only: None (the default) costs one volatile read per
-    * cut; never set outside PlanDump.
-    */
-  @volatile var planRecorder: Option[DataFrame => Unit] = None
-
   def materialize(df: DataFrame, eager: Boolean = true): DataFrame = {
-    planRecorder.foreach(_(df))
     val spark = df.sparkSession
     if (!spark.conf.get(DurableKey, "false").toBoolean)
       df.localCheckpoint(eager)

@@ -205,7 +205,8 @@ object GovernanceQueries extends QueryPack {
         "bucketed join must plan zero exchanges")
       // decimal revenue (BASELINE.md rule): a double sum over a
       // 60M-row join differs in the last cents digit between plans
-      // (LakeScaleProbe, SCALING.md) — decimal is order-independent
+      // (SCALING.md, "r16: lakehouse-layer scale evidence") — decimal
+      // is order-independent
       joined.groupBy(col("o_orderpriority"))
         .agg(sum(col("l_extendedprice").cast("decimal(18,4)") *
           (lit(BigDecimal(1)).cast("decimal(18,4)") -

@@ -452,7 +452,8 @@ object StreamingIvm {
     * ([[ChangeFeed.foldStreamJoinLogOnce]]); the two commits are
     * independently consistent, so there is no cross-log crash window.
     * Per-tick maintenance cost after folding is O(delta ⋈ horizon),
-    * flat in the log's age (StreamFoldProbe).
+    * flat in the log's age (SCALING.md, "r19: stream⋈stream
+    * band-horizon fold").
     */
   def foldAttributionLogs(spark: SparkSession, logC: String, logP: String,
       tsCol: String = "ts", userCol: String = "user_id",

@@ -1,14 +1,38 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.Iterate.MaterializeOps
 
 /** PageRank semantics against an independent in-memory power iteration,
   * plus structural guards (mass conservation, dangling rejection, kNN
-  * edge symmetry).
+  * edge symmetry) and laws that are not tautologies of the
+  * implementation (BFS relaxation, triangle relabel invariance, label
+  * propagation as a partition), checked on one random graph.
   */
 class GraphSpec extends SparkSpec {
+
+  /** A seeded random undirected graph of 300 nodes, built once per suite:
+    * a ring with (v, v+2) chords, so triangles sit everywhere, plus one
+    * hashed long chord from every fifth node, so degrees (and with them
+    * the triangle orientation) vary. Symmetric, distinct, loop-free.
+    * Returns the edge frame and its edges on the driver.
+    */
+  private lazy val randomGraph: (DataFrame, Seq[(Long, Long)]) = {
+    val n = 300L
+    val v = spark.range(n).select(col("id").as("a"))
+    val und = v.select(col("a"), pmod(col("a") + 1, lit(n)).as("b"))
+      .unionByName(v.select(col("a"), pmod(col("a") + 2, lit(n)).as("b")))
+      .unionByName(v.filter(col("a") % 5 === 0)
+        .select(col("a"), pmod(xxhash64(col("a"), lit(17L)), lit(n)).as("b")))
+      .filter(col("a") =!= col("b"))
+    val e = und.select(col("a").as("src"), col("b").as("dst"))
+      .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
+      .distinct().materialized
+    (e, e.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq)
+  }
 
   private def edgeDF(es: Seq[(Long, Long)]) = {
     import spark.implicits._
@@ -230,5 +254,55 @@ class GraphSpec extends SparkSpec {
     assert(got.length == 3)
     assert(got.forall(r => r.getAs[Long]("triangles") == 0L &&
       r.getAs[Double]("clustering_coeff") == 0.0))
+  }
+
+  test("bfsHops laws on a random graph: seeds at 0, parent at h-1, deepening only grows") {
+    import spark.implicits._
+    val (e, es) = randomGraph
+    val seeds = Seq(0L, 50L, 100L, 150L, 200L, 250L, 999L) // 999 is no node
+    def hops(maxHops: Int): Map[Long, Long] =
+      Graph.bfsHops(e, seeds.toDF("v"), maxHops)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (h3, h4) = (hops(3), hops(4))
+    val inNbrs = es.groupMap(_._2)(_._1)
+    assert(h4.collect { case (v, 0L) => v }.toSet ===
+      seeds.filter(inNbrs.contains).toSet)
+    // relaxation law: the nearest reached in-neighbour sits at exactly
+    // h-1 (lower: v would have relaxed; none: where did h come from?)
+    h4.foreach { case (v, h) =>
+      if (h > 0) {
+        val nearest = inNbrs(v).flatMap(h4.get)
+        assert(nearest.nonEmpty && nearest.min === h - 1,
+          s"node $v at $h hops, reached in-neighbours at ${nearest.sorted}")
+      }
+    }
+    assert(h3.keySet.subsetOf(h4.keySet) && h4.size > h3.size,
+      s"reached ${h3.size} at 3 hops, ${h4.size} at 4")
+    h3.foreach { case (v, h) => assert(h4(v) <= h, s"node $v: $h -> ${h4(v)}") }
+  }
+
+  test("triangleStats laws on a random graph: id-reversal invariant, sum divisible by 3") {
+    val (e, es) = randomGraph
+    val maxId = es.map { case (a, b) => a max b }.max
+    def perVertex(df: DataFrame, unlabel: Long => Long): Map[Long, Long] =
+      Graph.triangleStats(df).collect()
+        .map(r => unlabel(r.getLong(0)) -> r.getAs[Long]("triangles")).toMap
+    val tri = perVertex(e, identity)
+    // v -> maxId - v reverses every id comparison, so the (deg, id)
+    // orientation counts each triangle at a different vertex
+    val reversed = e.select((lit(maxId) - col("src")).as("src"),
+      (lit(maxId) - col("dst")).as("dst"))
+    assert(perVertex(reversed, maxId - _) === tri)
+    val total = tri.values.sum
+    assert(total > 0 && total % 3 == 0, s"sum of per-vertex counts = $total")
+  }
+
+  test("labelPropagation on a random graph: one row per node, every community a node") {
+    val (e, es) = randomGraph
+    val nodes = es.map(_._1).distinct.sorted
+    val rows = Graph.labelPropagation(e).collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+    assert(rows.map(_._1).sorted.toSeq === nodes)
+    assert(rows.map(_._2).toSet.subsetOf(nodes.toSet))
   }
 }

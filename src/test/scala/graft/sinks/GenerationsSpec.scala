@@ -290,7 +290,7 @@ class GenerationsSpec extends SparkSpec {
     (0 to 2).foreach(i => Generations.appendCommitted(spark,
       Seq(i).toDF("v"), t, s"batch=$i"))
     Generations.squash(spark, t)
-    // the LakehouseDemo lifecycle: plain '-' snapshot commits keep landing
+    // the lakehouse lifecycle: plain '-' snapshot commits keep landing
     // after the squash (MERGE, compaction). Each supersedes history — gc
     // must keep pruning down to `keep`, not pin at the old squash forever.
     (1 to 5).foreach(i => Generations.writeAndCommit(spark,

@@ -4,8 +4,9 @@
 # and don't race later source edits/recompiles.
 #
 #   cp -r target/scala-2.13/classes /tmp/graftclasses
-#   tools/run_isolated.sh /tmp/graftclasses graft.QueryTime <query> var/sf10
-#   tools/run_isolated.sh /tmp/graftclasses graft.GraphInvariants var/sf10
+#   SPARK_GRAFT_ONLY=<query> SPARK_GRAFT_SF_DIR=var/sf10 \
+#     tools/run_isolated.sh /tmp/graftclasses graft.Bench
+#   tools/run_isolated.sh /tmp/graftclasses graft.Verify var/sf10 /tmp/graft_verify
 #
 # The --add-opens list is what Spark 4 needs on Java 17.
 set -euo pipefail
