@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
@@ -29,9 +29,11 @@ object Router {
       .withColumn("is_error", col("strategy").isNull)
   }
 
+  /** The REASON an unknown `TYPE` is alerted with (R1e). */
+  def unknownType(tpe: Column): Column = concat(lit("Unknown source type: "), tpe)
+
   /** Unknown-type error rows (R1e). */
   def errors(routed: DataFrame): DataFrame =
     routed.filter(col("is_error"))
-      .select(col("ID"), col("URL"),
-        concat(lit("Unknown source type: "), col("TYPE")).as("REASON"))
+      .select(col("ID"), col("URL"), unknownType(col("TYPE")).as("REASON"))
 }

@@ -104,14 +104,6 @@ object ObjectSink {
     }
   }
 
-  /** The manifest's names for one strategy prefix, as a distributed
-    * frame — None when no manifest exists yet (bootstrap/legacy sink).
-    */
-  def manifestNames(spark: SparkSession, root: String,
-      prefix: String): Option[DataFrame] =
-    manifestAll(spark, root)
-      .map(_.filter(col("prefix") === prefix).select(col("name")))
-
   /** Seed the manifest with names discovered OUTSIDE it (a legacy sink's
     * pre-manifest objects, found by one bounded directory listing) so
     * every later batch takes the manifest path and the legacy objects
@@ -183,7 +175,7 @@ object ObjectSink {
   /** Names already present under `<root>/<prefix>/` — the D1 dup-guard's
     * "existing" side for the anti-join form. LEGACY/bootstrap path for
     * sinks predating the manifest: a driver-side listing only works when
-    * the sink is a small local directory; [[manifestNames]] is the scale
+    * the sink is a small local directory; [[manifestAll]] is the scale
     * path and wins whenever a manifest exists.
     */
   def existingNames(root: String, prefix: String): Seq[String] = {

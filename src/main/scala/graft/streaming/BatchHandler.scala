@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.model.Schemas
 import graft.sources.Queue
 
 /** Batch-mode downloader handler — the direct analog of the reference's
@@ -17,6 +18,10 @@ import graft.sources.Queue
   * mirrors the reference's visibility-timeout semantics: a crash between
   * claim and ack leaves files in `processing/` for a sweeper to re-queue
   * — at-least-once, made effectively-once by the idempotent object sink.
+  *
+  * A poll reads its claimed files once: the corrupt-line quarantine and
+  * every count ride the passes [[DownloadPipeline.processBatch]] runs
+  * anyway. Quarantine is written after processing and before the ack.
   */
 object BatchHandler {
 
@@ -59,21 +64,26 @@ object BatchHandler {
     // queue dir, Queue.quarantined(queueDir) would never see them again:
     // the corrupt raw lines are therefore copied to an explicit
     // `quarantine/` dir BEFORE the ack, so every dropped poison line has
-    // a durable, inspectable record (the DLQ-body analog).
-    import org.apache.spark.sql.functions.col
-    val parsed = graft.sources.Queue.parseTaskLines(
-        spark.read.text(claimed.map(_.toString): _*),
-        graft.model.Schemas.taskWithCorrupt)
-    val corruptCol = graft.model.Schemas.taskCorruptCol
-    val corrupt = parsed.filter(col(corruptCol).isNotNull)
-      .select(col(corruptCol).cast("string").as("value"))
-    if (!corrupt.isEmpty)
-      corrupt.write.mode("append")
-        .text(Paths.get(root, "quarantine").toString)
+    // a durable, inspectable record (the DLQ-body analog). They are
+    // collected by an observation on the parsed claim, which the batch's
+    // route aggregate fills as it reads the claim — the claim is parsed
+    // once — and written after processing: a batch that throws leaves
+    // its files in processing/, and their redelivery quarantines them.
+    val corruptCol = Schemas.taskCorruptCol
+    val corrupt = Observation()
+    val parsed = Queue.parseTaskLines(
+        spark.read.text(claimed.map(_.toString): _*), Schemas.taskWithCorrupt)
+      .observe(corrupt, collect_list(col(corruptCol)).as("lines"))
     val tasks = parsed
       .filter(col(corruptCol).isNull)
-      .select(graft.model.Schemas.task.fieldNames.toSeq.map(col): _*)
+      .select(Schemas.task.fieldNames.toSeq.map(col): _*)
     val report = DownloadPipeline.processBatch(tasks, root, catalogPath)
+    val lines = corrupt.get("lines").asInstanceOf[scala.collection.Seq[String]].toSeq
+    if (lines.nonEmpty) DownloadPipeline.step(spark, "quarantine") {
+      import spark.implicits._
+      lines.toDF("value").coalesce(1)
+        .write.mode("append").text(Paths.get(root, "quarantine").toString)
+    }
 
     // ack: processing/ → done/ (the delete_message analog)
     claimed.foreach { p =>

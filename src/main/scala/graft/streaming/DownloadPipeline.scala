@@ -2,7 +2,7 @@ package graft.streaming
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -32,9 +32,10 @@ import graft.operators.Iterate.MaterializeOps
   *       its per-prefix bootstrap/Bloom decisions are made once per batch
   *       from one manifest read, see [[processBatch]])
   *     → ONE file fetch → ONE sink write → ONE manifest append
-  * errors → catalog Active:=2 applied to the live catalog (E1) + alert
-  * sink (E2) + handled-error ack (the reference's poison-pill ack,
-  * data_downloader.py:58: flagged sources are NOT retried). Uncaught
+  * errors, collected by the passes above → alert sink (E2) + catalog
+  * Active:=2 applied to the live catalog (E1) + handled-error ack (the
+  * reference's poison-pill ack, data_downloader.py:58: flagged sources
+  * are NOT retried). Uncaught
   * batch failures leave their claimed files in processing/;
   * [[BatchHandler.recoverStale]] re-enqueues those with attempts+1 —
   * the visibility-timeout redelivery analog — and tasks arriving with
@@ -77,10 +78,15 @@ object DownloadPipeline {
     * forever; above [[bloomGuardThreshold]] existing rows the guard routes
     * through a Bloom pre-filter.
     *
-    * Counts come from observations on the passes that run anyway: the
-    * page fetch counts its errors, the candidates frame its keys and the
-    * sink write its fetched and failed files, so `skippedDuplicates` and
-    * the emptiness checks cost no extra action.
+    * Counts and error rows ride the passes that run anyway: the route
+    * aggregate collects the unknown-type errors, the manifest pin counts
+    * its rows per prefix, the page fetch and the sink write observe their
+    * error rows (ID, URL, REASON), the candidates frame its keys. Every
+    * error list is bounded by the poll's size, so the alerts are written
+    * from one local frame and the catalog is flagged by a map-only
+    * projection over the collected IDs — the error path re-reads no
+    * cached pass and shuffles nothing. Each step's Spark jobs carry an
+    * `ingest: <step>` job description (see [[step]]).
     */
   def processBatch(tasks: DataFrame, root: String,
       catalogPath: Option[String] = None): BatchReport = {
@@ -102,16 +108,21 @@ object DownloadPipeline {
       // E4: exhausted tasks dead-letter before any work is done.
       val (live, dead) = ErrorPath.splitRetryable(routed, maxAttempts)
       val retryable = col("attempts") < maxAttempts
-      val (attempted, deadCount, routeErrCount, guardedPrefixes) = routed
+      val route = step(spark, "route")(routed
         .agg(count(lit(1)), count(when(!retryable, 1)),
-          count(when(retryable && col("is_error"), 1)),
+          errorList(retryable && col("is_error"), col("ID"), col("URL"),
+            Router.unknownType(col("TYPE"))),
           collect_set(when(retryable && !col("is_error") && !col("overwrite"),
             col("strategy"))))
-        .as[(Long, Long, Long, Seq[String])].head()
-      if (deadCount > 0)
+        .head())
+      val (attempted, deadCount) = (route.getLong(0), route.getLong(1))
+      val routeErrors = errorRows(route.getSeq[Row](2))
+      val guardedPrefixes = route.getSeq[String](3)
+      if (deadCount > 0) step(spark, "dead letter") {
         dead.select(to_json(struct(col("ID"), col("URL"), col("TYPE"),
             col("PATTERN"), col("UTC"), col("attempts"))).as("value"))
           .write.mode("append").text(s"$root/dead_letter")
+      }
 
       val valid = live.filter(!col("is_error"))
       val pageObs = Observation()
@@ -120,7 +131,8 @@ object DownloadPipeline {
           .select(col("ID"), col("URL"), col("TYPE"), col("PATTERN"),
             col("UTC"), col("attempts"))
           .as[Task])
-        .observe(pageObs, count(when(col("error").isNotNull, 1)).as("errors")))
+        .observe(pageObs, errorList(col("error").isNotNull, col("task.ID"),
+          col("task.URL"), col("error"))))
       val fetchedPages = pages.filter(col("error").isNull)
         .select(col("task.ID").as("ID"), col("task.TYPE").as("TYPE"),
           col("task.URL").as("base"), col("task.PATTERN").as("pattern"),
@@ -150,21 +162,30 @@ object DownloadPipeline {
         .dropDuplicates("key")
         .observe(guardObs, count(lit(1)).as("candidates"))
 
-      // D1: one manifest read for the batch's guarded prefixes. The
-      // localCheckpoint PINS the batch-start snapshot and severs the plan's
-      // tie to the manifest path: this batch's own appendManifest writes to
-      // that path, and a lineage-carrying plan would be invalidated by
-      // Spark's CacheManager recache, silently re-running the side-effecting
-      // fetch against the post-batch manifest (observed: downloads counted
-      // as 0).
-      manifest = (if (guardedPrefixes.isEmpty) None
-        else ObjectSink.manifestAll(spark, out))
-        .map(_.filter(col("prefix").isin(guardedPrefixes: _*)).materialized)
-      val counts = manifest.fold(Map.empty[String, Long])(_.groupBy("prefix")
-        .count().as[(String, Long)].collect().toMap)
+      // D1: one manifest read for the batch's guarded prefixes, its rows
+      // counted per prefix as the pin runs. The localCheckpoint PINS the
+      // batch-start snapshot and severs the plan's tie to the manifest
+      // path: this batch's own appendManifest writes to that path, and a
+      // lineage-carrying plan would be invalidated by Spark's CacheManager
+      // recache, silently re-running the side-effecting fetch against the
+      // post-batch manifest (observed: downloads counted as 0).
+      val manifestObs = Observation()
+      manifest = step(spark, "manifest pin") {
+        (if (guardedPrefixes.isEmpty) None
+        else ObjectSink.manifestAll(spark, out)).map { m =>
+          val perPrefix = guardedPrefixes.map(p => count_if(col("prefix") === p).as(p))
+          m.filter(col("prefix").isin(guardedPrefixes: _*))
+            .observe(manifestObs, perPrefix.head, perPrefix.tail: _*).materialized
+        }
+      }
+      val counts = manifest.fold(Map.empty[String, Long]) { _ =>
+        val got = manifestObs.get
+        guardedPrefixes.map(p => p -> got(p).asInstanceOf[Long])
+          .filter(_._2 > 0).toMap
+      }
       val seeded = guardedPrefixes.filterNot(counts.contains).flatMap { p =>
         val names = ObjectSink.existingNames(out, p)
-        ObjectSink.seedManifest(spark, out, p, names)
+        step(spark, "manifest seed")(ObjectSink.seedManifest(spark, out, p, names))
         names.map(n => s"$p/$n")
       }
       val manifestKeys = if (counts.isEmpty) None else manifest.map(
@@ -186,40 +207,36 @@ object DownloadPipeline {
       val fetched = tracked(Fetch.fetchFiles(kept))
       val writeObs = Observation()
       val overwritePrefix = Schemas.sinkPrefix("LINKS_OVERWRITE") + "/"
-      ObjectSink.write(fetched.observe(writeObs,
+      step(spark, "fetch+sink")(ObjectSink.write(fetched.observe(writeObs,
           count(when(col("error").isNull, 1)).as("ok"),
-          count(when(col("error").isNotNull, 1)).as("failed")),
-        out, _.startsWith(overwritePrefix))
+          errorList(col("error").isNotNull, col("ID"), col("URL"), col("error"))),
+        out, _.startsWith(overwritePrefix)))
       val downloaded = writeObs.get("ok").asInstanceOf[Long]
-      val failed = writeObs.get("failed").asInstanceOf[Long]
-      if (downloaded > 0) ObjectSink.appendManifest(fetched, out)
+      val fileErrors = errorRows(writeObs.get("errors"))
+      if (downloaded > 0)
+        step(spark, "manifest append")(ObjectSink.appendManifest(fetched, out))
 
-      // ---- error path: E1 catalog flag + E2 alerts ----------------------
-      val errCount = routeErrCount + failed +
-        pageObs.get("errors").asInstanceOf[Long]
-      if (errCount > 0) {
-        val allErrors = Router.errors(live)
-          .unionByName(pages.filter(col("error").isNotNull)
-            .select(col("task.ID").as("ID"), col("task.URL").as("URL"),
-              col("error").as("REASON")))
-          .unionByName(fetched.filter(col("error").isNotNull)
-            .select(col("ID"), col("URL"), col("error").as("REASON")))
-        ErrorPath.alertJson(allErrors).select(col("alert_json"))
-          .write.mode("append").text(s"$root/alerts")
+      // ---- error path: E2 alerts + E1 catalog flag ----------------------
+      val errors = routeErrors ++ errorRows(pageObs.get("errors")) ++ fileErrors
+      if (errors.nonEmpty) {
+        step(spark, "alerts")(ErrorPath.alertJson(errors.toDF("ID", "URL", "REASON"))
+          .select(col("alert_json")).coalesce(1)
+          .write.mode("append").text(s"$root/alerts"))
         // E1: flags apply to the LIVE catalog (the reference's write-to-
         // side-path bug, data_downloader.py:48, is NOT reproduced): read the
         // latest state — accumulating flags from earlier batches — and swap
         // the updated file in place.
         catalogPath.foreach { path =>
-          Catalog.replaceInPlace(ErrorPath.flagBroken(Catalog.read(spark, path),
-            allErrors.select(col("ID").as("id"))), path)
+          step(spark, "catalog flag")(Catalog.replaceInPlace(
+            ErrorPath.flagBroken(Catalog.read(spark, path),
+              errors.flatMap(e => Option(e._1)).distinct), path))
         }
       }
 
       BatchReport(attempted, downloaded,
         skippedDuplicates = guardObs.get("candidates").asInstanceOf[Long] -
-          downloaded - failed,
-        errors = errCount, deadLettered = deadCount)
+          downloaded - fileErrors.size,
+        errors = errors.size, deadLettered = deadCount)
     } finally {
       caches.foreach(_.unpersist())
       manifest.foreach(_.queryExecution.logical.foreach {
@@ -227,6 +244,27 @@ object DownloadPipeline {
         case _ => ()
       })
     }
+  }
+
+  /** The (ID, URL, REASON) error rows where `isError` holds, gathered as
+    * one list by the aggregate or observation that carries it. */
+  private def errorList(isError: Column, id: Column, url: Column,
+      reason: Column): Column =
+    collect_list(when(isError, struct(id.as("ID"), url.as("URL"),
+      reason.as("REASON")))).as("errors")
+
+  private def errorRows(list: Any): Seq[(String, String, String)] =
+    list.asInstanceOf[scala.collection.Seq[Row]].toSeq
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+
+  /** Runs `body` with the Spark jobs it starts described as
+    * `ingest: <name>`; AQE stage and broadcast jobs inherit the
+    * description. The caller's description is restored after. */
+  private[streaming] def step[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"ingest: $name")
+    try body finally sc.setJobDescription(caller)
   }
 
   /** Streaming form (L2/K2/E3): file source on the queue dir, poll cap via

@@ -309,7 +309,8 @@ class GenerationsSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val root = Files.createTempDirectory("graft-mc").resolve("out").toString
     def names(prefix: String): Set[String] =
-      ObjectSink.manifestNames(spark, root, prefix).get
+      ObjectSink.manifestAll(spark, root).get
+        .filter(col("prefix") === prefix).select(col("name"))
         .as[String].collect().toSet
 
     // two append batches → two delta files

@@ -50,8 +50,7 @@ class PipelineSpec extends SparkSpec {
     ).toDF("ID", "URL", "TYPE", "PATTERN", "UTC", "attempts")
   }
 
-  test("processBatch: all strategies, dup-guard, error path, DLQ") {
-    val tmp = Files.createTempDirectory("graft-pipe")
+  test("processBatch: all strategies, dup-guard, error path, DLQ") { withTempDir("pipe") { tmp =>
     val src = tmp.resolve("src")
     val root = tmp.resolve("ws").toString
     setupSource(src)
@@ -93,22 +92,23 @@ class PipelineSpec extends SparkSpec {
     // every guarded key was dropped; the LINKS_OVERWRITE c.txt was not
     assert(again.skippedDuplicates === 6)
     assert(again.downloaded === 1)
-  }
+  }}
 
-  /** Spark jobs started by `body`, counted by a listener: a sentinel job
-    * run after it marks the point up to which every job event has been
-    * delivered. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
+  /** Spark jobs started by `body` per job description ("untagged" for a
+    * job with none), counted by a listener: a sentinel job run after it
+    * marks the point up to which every job event has been delivered. */
+  private def jobsDuring[T](body: => T): (T, Map[String, Int]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
     val sc = spark.sparkContext
     val key = "graft.test.phase"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val drained = new java.util.concurrent.CountDownLatch(1)
     val sentinel = new java.util.concurrent.atomic.AtomicInteger(-1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty(key)) match {
-          case Some("body")     => jobs.incrementAndGet()
+          case Some("body") => jobs.add(Option(
+            e.properties.getProperty("spark.job.description")).getOrElse("untagged"))
           case Some("sentinel") => sentinel.set(e.jobId)
           case _                => ()
         }
@@ -121,28 +121,43 @@ class PipelineSpec extends SparkSpec {
       val r = try body finally sc.setLocalProperty(key, "sentinel")
       sc.parallelize(Seq(1), 1).count()
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (r, jobs.get)
+      import scala.jdk.CollectionConverters._
+      (r, jobs.asScala.toSeq.groupMapReduce(identity)(_ => 1)(_ + _))
     } finally {
       sc.setLocalProperty(key, null)
       sc.removeSparkListener(listener)
     }
   }
 
+  /** Per-step job counts, steps sorted, for a failure message or `info`. */
+  private def show(jobs: Map[String, Int]): String =
+    s"${jobs.values.sum} Spark jobs: " +
+      jobs.toSeq.sorted.map { case (d, n) => s"$d=$n" }.mkString(", ")
+
+  /** Fails fast where an observation is never filled: its `get` would
+    * block the suite forever. */
+  private def bounded[T](body: => T): T = {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.{Minutes, Span}
+    implicit val signaler: Signaler = ThreadSignaler
+    TimeLimits.failAfter(Span(2, Minutes))(body)
+  }
+
   private def persistedIds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  private def manifestDeltaFiles(root: String): Int = {
-    val dir = Paths.get(graft.sinks.ObjectSink.manifestPath(s"$root/out"))
+  private def partFiles(dir: Path): Int =
     if (!Files.isDirectory(dir)) 0
     else {
       val s = Files.list(dir)
       try s.filter(_.getFileName.toString.startsWith("part-")).count().toInt
       finally s.close()
     }
-  }
 
-  test("one pass per batch: one manifest delta file, bounded Spark jobs") {
-    val tmp = Files.createTempDirectory("graft-onepass")
+  private def manifestDeltaFiles(root: String): Int =
+    partFiles(Paths.get(graft.sinks.ObjectSink.manifestPath(s"$root/out")))
+
+  test("one pass per batch: one manifest delta file, bounded Spark jobs") { withTempDir("onepass") { tmp =>
     val src = tmp.resolve("src")
     val root = tmp.resolve("ws").toString
     setupSource(src)
@@ -151,30 +166,113 @@ class PipelineSpec extends SparkSpec {
     val persisted = persistedIds
 
     val (report, jobs) = jobsDuring(DownloadPipeline.processBatch(tasks, root))
-    info(s"first batch: $jobs Spark jobs")
+    info(s"first batch: ${show(jobs)}")
     assert(report.downloaded === 7 && report.errors === 2)
     // every strategy's files land through ONE manifest append ...
     assert(manifestDeltaFiles(root) === 1)
-    // ... and the batch runs as one pass, not one job chain per strategy
-    // (one chain per strategy took 50 jobs here, and 53 on the second
-    // batch; the single pass takes 11 and 15)
-    assert(jobs <= 18, s"$jobs Spark jobs for one batch")
+    // ... and the batch runs as one pass whose every job is named for its
+    // step. One chain per strategy took 50 jobs here, and 53 on the
+    // second batch; the single pass took 11 and 15 while the error path
+    // and the manifest counts ran jobs of their own, and takes 11 and 13
+    // with both riding the passes.
+    assert(!jobs.contains("untagged"), show(jobs))
+    assert(jobs.values.sum <= 11, show(jobs))
+    assert(jobs.getOrElse("ingest: alerts", 0) === 1, show(jobs))
     // the batch's caches and manifest pin are released
     assert(persistedIds -- persisted === Set.empty)
 
     // a second batch over a sink that now has a manifest: still one delta
-    // file, and nothing left persisted
+    // file, one job to pin and count it, and nothing left persisted
     write(src.resolve("c.txt"), "c-v2")
     val (again, jobs2) = jobsDuring(DownloadPipeline.processBatch(tasks, root))
-    info(s"second batch: $jobs2 Spark jobs")
+    info(s"second batch: ${show(jobs2)}")
     assert(again.downloaded === 1)
     assert(manifestDeltaFiles(root) === 2)
-    assert(jobs2 <= 18, s"$jobs2 Spark jobs for one batch")
+    assert(!jobs2.contains("untagged"), show(jobs2))
+    assert(jobs2.values.sum <= 13, show(jobs2))
+    assert(jobs2.getOrElse("ingest: manifest pin", 0) === 1, show(jobs2))
     assert(persistedIds -- persisted === Set.empty)
-  }
+  }}
 
-  test("a failing batch still unpersists its caches") {
-    val tmp = Files.createTempDirectory("graft-failbatch")
+  test("a failing batch with a catalog: the error path takes two jobs") { withTempDir("e1-budget") { tmp =>
+    import spark.implicits._
+    val root = tmp.resolve("ws").toString
+    Workspace.provision(root)
+    val catPath = tmp.resolve("sources.csv").toString
+    Files.copy(Paths.get(graft.sources.Catalog.fixturePath), Paths.get(catPath))
+    val tasks = Seq(
+      ("src-003", tmp.resolve("nope.txt").toUri.toString, "FTP_FILES", "*", "0", 0),
+      ("src-001", tmp.resolve("nope.txt").toUri.toString, "BOGUS_TYPE", "*", "0", 0)
+    ).toDF("ID", "URL", "TYPE", "PATTERN", "UTC", "attempts")
+
+    val (report, jobs) = bounded(jobsDuring(
+      DownloadPipeline.processBatch(tasks, root, Some(catPath))))
+    info(s"failing batch: ${show(jobs)}")
+    assert(report === DownloadPipeline.BatchReport(2, 0, 0, 2, 0))
+    assert(!jobs.contains("untagged"), show(jobs))
+    // the alerts and the catalog rewrite take one job each: neither
+    // re-reads a cached pass nor joins the catalog against the errors
+    // (re-deriving the errors for both took 12 jobs for this batch; the
+    // collected errors take 10)
+    assert(jobs.getOrElse("ingest: alerts", 0) === 1, show(jobs))
+    assert(jobs.getOrElse("ingest: catalog flag", 0) === 1, show(jobs))
+    assert(jobs.values.sum <= 10, show(jobs))
+    val active = graft.sources.Catalog.read(spark, catPath)
+      .select("id", "active").as[(String, Int)].collect().toMap
+    assert(active("src-003") === 2 && active("src-001") === 2)
+    val alerts = spark.read.text(s"$root/alerts").as[String].collect()
+    assert(alerts.length === 2, alerts.mkString("\n"))
+    assert(alerts.exists(a => a.contains("src-001") &&
+      a.contains("Unknown source type: BOGUS_TYPE")))
+  }}
+
+  test("edge: an all-corrupt claim runs zero tasks, quarantines every line") { withTempDir("all-corrupt") { tmp =>
+    val root = tmp.resolve("ws").toString
+    Workspace.provision(root)
+    write(Paths.get(root, "queue", "poison.json"), "{not json\n[1, 2")
+    val report = bounded(BatchHandler.runOnce(spark, root))
+    assert(report === DownloadPipeline.BatchReport(0, 0, 0, 0, 0))
+    assert(Files.exists(Paths.get(root, "done", "poison.json")))
+    val q = spark.read.text(s"$root/quarantine").collect().map(_.getString(0))
+    assert(q.toSet === Set("{not json", "[1, 2"))
+  }}
+
+  test("edge: a batch with no page tasks and no errors") { withTempDir("no-pages") { tmp =>
+    import spark.implicits._
+    val src = tmp.resolve("src")
+    val root = tmp.resolve("ws").toString
+    setupSource(src)
+    Workspace.provision(root)
+    val u = src.toUri.toString
+    val tasks = Seq(
+      ("s-direct", s"${u}direct.bin", "DIRECT", "direct_out.bin", "0", 0),
+      ("s-dftp", s"${u}ftpfile.bin", "DIRECT_FTP", "ftp_out.bin", "0", 0)
+    ).toDF("ID", "URL", "TYPE", "PATTERN", "UTC", "attempts")
+    val report = bounded(DownloadPipeline.processBatch(tasks, root))
+    assert(report === DownloadPipeline.BatchReport(2, 2, 0, 0, 0))
+    assert(partFiles(Paths.get(root, "alerts")) === 0)
+    assert(read(Paths.get(root, "out/FTP_FILE/ftp_out.bin")) === "ftp-payload")
+  }}
+
+  test("edge: a first batch on a sink with no manifest") { withTempDir("no-manifest") { tmp =>
+    import spark.implicits._
+    val src = tmp.resolve("src")
+    val root = tmp.resolve("ws").toString
+    setupSource(src)
+    Workspace.provision(root)
+    val u = src.toUri.toString
+    graft.sources.Queue.enqueue(Seq(
+        ("s-links", s"${u}page.html", "LINKS", "ignore", "0", 0),
+        ("s-ftp", s"${u}listing.txt", "FTP_FILES", "data_*.zip", "0", 0))
+      .toDF("ID", "URL", "TYPE", "PATTERN", "UTC", "attempts"), s"$root/queue")
+    assert(!Files.exists(Paths.get(graft.sinks.ObjectSink.manifestPath(s"$root/out"))))
+    val report = bounded(BatchHandler.runOnce(spark, root))
+    assert(report === DownloadPipeline.BatchReport(2, 4, 0, 0, 0))
+    assert(manifestDeltaFiles(root) === 1)
+    assert(partFiles(Paths.get(root, "quarantine")) === 0)
+  }}
+
+  test("a failing batch still unpersists its caches") { withTempDir("failbatch") { tmp =>
     val src = tmp.resolve("src")
     val root = tmp.resolve("ws").toString
     setupSource(src)
@@ -185,11 +283,10 @@ class PipelineSpec extends SparkSpec {
     val persisted = persistedIds
     intercept[Exception](DownloadPipeline.processBatch(tasksDF(src), root))
     assert(persistedIds -- persisted === Set.empty)
-  }
+  }}
 
-  test("D1 guard reads the names manifest, not a sink directory listing") {
+  test("D1 guard reads the names manifest, not a sink directory listing") { withTempDir("manifest") { tmp =>
     import org.apache.spark.sql.functions.col
-    val tmp = Files.createTempDirectory("graft-manifest")
     val src = tmp.resolve("src")
     val root = tmp.resolve("ws").toString
     setupSource(src)
@@ -235,11 +332,10 @@ class PipelineSpec extends SparkSpec {
     DownloadPipeline.processBatch(tasks, root)
     assert(!Files.exists(Paths.get(root, "out/LINK/a.csv")),
       "guard regressed after manifest compaction")
-  }
+  }}
 
-  test("D1 bootstrap: a legacy pre-manifest sink seeds the manifest once") {
+  test("D1 bootstrap: a legacy pre-manifest sink seeds the manifest once") { withTempDir("legacy") { tmp =>
     import org.apache.spark.sql.functions.col
-    val tmp = Files.createTempDirectory("graft-legacy")
     val src = tmp.resolve("src")
     val root = tmp.resolve("ws").toString
     setupSource(src)
@@ -267,11 +363,10 @@ class PipelineSpec extends SparkSpec {
     assert(r2.downloaded === 0)
     assert(!Files.exists(Paths.get(root, "out/LINK/a.csv")),
       "legacy object re-downloaded after the manifest took over")
-  }
+  }}
 
-  test("E1: failed source flags Active:=2 in the rewritten catalog") {
+  test("E1: failed source flags Active:=2 in the rewritten catalog") { withTempDir("e1") { tmp =>
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-e1")
     val root = tmp.resolve("ws").toString
     Workspace.provision(root)
     // private catalog copy (never touch the repo fixture)
@@ -294,10 +389,9 @@ class PipelineSpec extends SparkSpec {
     val after = activeById
     assert(after("src-001") === 2)
     assert(after("src-003") === 2, "flag from the earlier batch was lost")
-  }
+  }}
 
-  test("E4: recoverStale re-enqueues stranded tasks with attempts+1 → DLQ") {
-    val tmp = Files.createTempDirectory("graft-e4")
+  test("E4: recoverStale re-enqueues stranded tasks with attempts+1 → DLQ") { withTempDir("e4") { tmp =>
     val root = tmp.resolve("ws").toString
     Workspace.provision(root)
     // a crashed batch left a claimed task file in processing/
@@ -320,10 +414,9 @@ class PipelineSpec extends SparkSpec {
     assert(report.deadLettered === 1 && report.attempted === 1)
     val dead = spark.read.text(s"$root/dead_letter").collect().map(_.getString(0))
     assert(dead.length === 1 && dead.head.contains("s-x"))
-  }
+  }}
 
-  test("batch handler: claim/process/ack moves queue files to done/") {
-    val tmp = Files.createTempDirectory("graft-batch")
+  test("batch handler: claim/process/ack moves queue files to done/") { withTempDir("batch") { tmp =>
     val src = tmp.resolve("src")
     val root = tmp.resolve("ws").toString
     setupSource(src)
@@ -342,10 +435,9 @@ class PipelineSpec extends SparkSpec {
     assert(BatchHandler.runOnce(spark, root).attempted === 0)
     val doneFiles = Files.list(Paths.get(root, "done"))
     try assert(doneFiles.count() > 0) finally doneFiles.close()
-  }
+  }}
 
-  test("batch handler: poison lines land in quarantine/ before their file acks") {
-    val tmp = Files.createTempDirectory("graft-poison")
+  test("batch handler: poison lines land in quarantine/ before their file acks") { withTempDir("poison") { tmp =>
     val src = tmp.resolve("src")
     val root = tmp.resolve("ws").toString
     setupSource(src)
@@ -364,10 +456,9 @@ class PipelineSpec extends SparkSpec {
     // because the ack moved the file out of queue/
     val q = spark.read.text(s"$root/quarantine").collect().map(_.getString(0))
     assert(q.toSeq === Seq("{not json at all"))
-  }
+  }}
 
-  test("streaming: harvest → queue → AvailableNow drain; checkpoint acks") {
-    val tmp = Files.createTempDirectory("graft-stream")
+  test("streaming: harvest → queue → AvailableNow drain; checkpoint acks") { withTempDir("stream") { tmp =>
     val src = tmp.resolve("src")
     val root = tmp.resolve("ws").toString
     setupSource(src)
@@ -394,10 +485,9 @@ class PipelineSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(root, "out/LINKS_DIRECT/direct_out.bin")))
     assert(!Files.exists(Paths.get(root, "alerts")) ||
       spark.read.text(s"$root/alerts").isEmpty)
-  }
+  }}
 
-  test("streaming: the offset-log (Kafka-model) transport is a drop-in") {
-    val tmp = Files.createTempDirectory("graft-stream-olog")
+  test("streaming: the offset-log (Kafka-model) transport is a drop-in") { withTempDir("stream-olog") { tmp =>
     val src = tmp.resolve("src")
     val root = tmp.resolve("ws").toString
     setupSource(src)
@@ -420,5 +510,5 @@ class PipelineSpec extends SparkSpec {
     Files.delete(src.resolve("direct.bin"))
     DownloadPipeline.runStream(spark, channel, root, s"$root/checkpoint", None)
     assert(!Files.exists(Paths.get(root, "out/LINKS_DIRECT/direct_out.bin")))
-  }
+  }}
 }
