@@ -2,7 +2,11 @@ package graft.fetch
 
 import java.io.ByteArrayOutputStream
 import java.net.{URI, URLConnection}
+import java.util.concurrent.{Callable, ExecutionException, ExecutorService,
+  Executors, Future, ThreadFactory}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 
 import graft.model.Task
@@ -13,9 +17,11 @@ import graft.model.Task
   * Catalyst expressions: Catalyst may duplicate/reorder expressions past
   * filters, which must never happen to a network fetch (SURVEY.md §4.3).
   * They live in `mapPartitions` over typed Datasets — one connection-ish
-  * context per partition, streamed row-at-a-time, never collected to the
-  * driver. Retries under speculative execution stay safe because the sink
-  * is PUT-style idempotent (key = strategy/name).
+  * context per partition, up to 8 requests in flight per partition,
+  * results in input order, never collected to the driver. So a partition
+  * holds at most 8 fetched bodies at once. Retries under speculative
+  * execution stay safe because the sink is PUT-style idempotent
+  * (key = strategy/name).
   *
   * Tests drive these with `file://` URLs only — no network (SURVEY §5.2).
   */
@@ -56,7 +62,7 @@ object Fetch {
   def fetchPages(tasks: Dataset[Task]): Dataset[PageResult] = {
     implicit val enc = Encoders.product[PageResult]
     tasks.mapPartitions { it =>
-      it.map { t =>
+      overlapped(it) { t =>
         try PageResult(t, readText(t.URL), null)
         catch { case e: Exception => PageResult(t, null, errMsg(e)) }
       }
@@ -69,14 +75,54 @@ object Fetch {
     import spark.implicits._
     df.select("ID", "URL", "key").as[(String, String, String)]
       .mapPartitions { it =>
-        it.map { case (id, url, key) =>
+        overlapped(it) { case (id, url, key) =>
           try FileResult(id, url, key, readBytes(url), null)
           catch { case e: Exception => FileResult(id, url, key, null, errMsg(e)) }
         }
       }
   }
 
-  private def errMsg(e: Exception): String = {
+  /** Calls of `f` kept running at once per partition. A fetch mostly
+    * waits on its origin, so overlapping requests hides that wait at the
+    * cost of a few idle threads and at most this many bodies held. */
+  private[fetch] val InFlight = 8
+
+  private lazy val pool: ExecutorService =
+    Executors.newCachedThreadPool(new ThreadFactory {
+      private val n = new AtomicInteger()
+      def newThread(r: Runnable): Thread = {
+        val t = new Thread(r, s"graft-fetch-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      }
+    })
+
+  /** `it.map(f)` with up to [[InFlight]] calls of `f` running on the
+    * fetch pool, results in input order. A throw from `f` (fatal errors
+    * too) is rethrown from `next`; calls still running when the Spark
+    * task ends are cancelled.
+    */
+  private[fetch] def overlapped[A, B](it: Iterator[A])(f: A => B): Iterator[B] = {
+    val pending = new java.util.ArrayDeque[Future[B]](InFlight)
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
+      pending.forEach(_.cancel(true))
+    })
+    def fill(): Unit =
+      while (pending.size < InFlight && it.hasNext) {
+        val a = it.next()
+        pending.add(pool.submit(new Callable[B] { def call(): B = f(a) }))
+      }
+    new Iterator[B] {
+      def hasNext: Boolean = { fill(); !pending.isEmpty }
+      def next(): B = {
+        if (!hasNext) throw new NoSuchElementException("overlapped")
+        try pending.poll().get()
+        catch { case e: ExecutionException => throw e.getCause }
+      }
+    }
+  }
+
+  private[fetch] def errMsg(e: Exception): String = {
     val m = if (e.getMessage == null) e.getClass.getSimpleName else e.getMessage
     s"${e.getClass.getSimpleName}: $m"
   }

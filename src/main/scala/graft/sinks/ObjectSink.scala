@@ -34,9 +34,13 @@ object ObjectSink {
           Files.createDirectories(target.getParent)
           if (overwrite(a.key) || !Files.exists(target)) {
             val tmp = Files.createTempFile(target.getParent, ".tmp-", ".part")
-            Files.write(tmp, a.body)
-            Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
-              StandardCopyOption.ATOMIC_MOVE)
+            var moved = false
+            try {
+              Files.write(tmp, a.body)
+              Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
+                StandardCopyOption.ATOMIC_MOVE)
+              moved = true
+            } finally if (!moved) Files.deleteIfExists(tmp)
           }
         }
       }

@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 
 import graft.SparkSpec
@@ -14,7 +12,7 @@ import graft.SparkSpec
 class PointersSpec extends SparkSpec {
 
   private def mkDir(): Path =
-    new Path(Files.createTempDirectory("graft-ptr").toString)
+    new Path(suiteDir("ptr").toString)
 
   private lazy val fs =
     mkDir().getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -19,7 +17,7 @@ class ChangeFeedSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkDir(name: String): String =
-    Files.createTempDirectory("graft-cf").resolve(name).toString
+    suiteDir("cf").resolve(name).toString
 
   private def src(rows: (Long, Long, Long)*): DataFrame =
     rows.toDF("k", "grp", "v")

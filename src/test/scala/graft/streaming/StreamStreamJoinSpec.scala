@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
@@ -29,7 +28,7 @@ class StreamStreamJoinSpec extends SparkSpec {
     "before-append-b", "after-append-b", "after-mark-b")
 
   private def mkDir(name: String): String =
-    Files.createTempDirectory("graft-ssj").resolve(name).toString
+    suiteDir("ssj").resolve(name).toString
 
   private def ts(h: Int, m: Int = 0) =
     Timestamp.valueOf(f"2026-01-01 $h%02d:$m%02d:00")

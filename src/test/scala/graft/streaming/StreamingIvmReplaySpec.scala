@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
@@ -31,7 +30,7 @@ class StreamingIvmReplaySpec extends SparkSpec {
   private val CrashPoints = Seq("before-append", "after-append", "after-mark")
 
   private def mkDir(name: String): String =
-    Files.createTempDirectory("graft-sivm-replay").resolve(name).toString
+    suiteDir("sivm-replay").resolve(name).toString
 
   private def ts(h: Int, m: Int) =
     Timestamp.valueOf(f"2026-01-01 $h%02d:$m%02d:00")
