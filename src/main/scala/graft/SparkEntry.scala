@@ -12,9 +12,10 @@ import graft.queries._
   */
 object SparkEntry {
 
-  private val packs: Seq[QueryPack] = Seq(
+  private[graft] val packs: Seq[QueryPack] = Seq(
     ReferenceQueries,
     AnalyticsQueries,
+    IvmQueries,
     DedupQueries,
     SimilarityQueries,
     TextQueries,

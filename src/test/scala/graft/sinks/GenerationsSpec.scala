@@ -222,13 +222,19 @@ class GenerationsSpec extends SparkSpec {
   test("committing is one data scan: no write-then-recount double read") {
     val t = mkTable()
     val seen = new java.util.concurrent.atomic.AtomicInteger(0)
+    // execution ids are handed out in creation order: an event of an
+    // earlier test still queued on the async bus carries an id at or
+    // below this floor, every execution of this test one above it
+    val floor = spark.range(1).queryExecution.id
+    def count(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
+      if (qe.id > floor) seen.incrementAndGet()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = seen.incrementAndGet()
+          durationNs: Long): Unit = count(qe)
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = seen.incrementAndGet()
+          exception: Exception): Unit = count(qe)
     }
     spark.listenerManager.register(listener)
     try {

@@ -1,7 +1,6 @@
 package graft.sinks
 
 import java.io.File
-import java.nio.file.Files
 
 import graft.SparkSpec
 
@@ -16,15 +15,17 @@ class ScratchSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("allocations are unique and land under the configured root") {
-    val root = Files.createTempDirectory("graft-scratch-root").toString
-    spark.conf.set(Scratch.DirKey, root)
-    try {
-      val a = Scratch.dir(spark, "x")
-      val b = Scratch.dir(spark, "x")
-      assert(a !== b, "two allocations must never collide")
-      assert(a.contains(root) && b.contains(root))
-      assert(new File(a).isDirectory, s"$a must be created eagerly")
-    } finally spark.conf.unset(Scratch.DirKey)
+    withTempDir("scratch-root") { dir =>
+      val root = dir.toString
+      spark.conf.set(Scratch.DirKey, root)
+      try {
+        val a = Scratch.dir(spark, "x")
+        val b = Scratch.dir(spark, "x")
+        assert(a !== b, "two allocations must never collide")
+        assert(a.contains(root) && b.contains(root))
+        assert(new File(a).isDirectory, s"$a must be created eagerly")
+      } finally spark.conf.unset(Scratch.DirKey)
+    }
   }
 
   test("unset key falls back to a driver-local temp dir") {
@@ -34,16 +35,18 @@ class ScratchSpec extends SparkSpec {
   }
 
   test("mv_stream queries re-gate green with a non-default scratch root") {
-    val root = Files.createTempDirectory("graft-scratch-mv").toString
-    val q = graft.queries.AnalyticsQueries.queries("mv_stream_hourly_revenue")
-    spark.conf.set(Scratch.DirKey, root)
-    val viaConf =
-      try q(spark, sf).collect().toSeq
-      finally spark.conf.unset(Scratch.DirKey)
-    assert(new File(root).listFiles().nonEmpty,
-      "the run must allocate its log/mv tables under the configured root")
-    val viaDefault = q(spark, sf).collect().toSeq
-    assert(viaConf === viaDefault,
-      "scratch routing must not change query results")
+    val q = graft.queries.IvmQueries.queries("mv_stream_hourly_revenue")
+    withTempDir("scratch-mv") { dir =>
+      val root = dir.toString
+      spark.conf.set(Scratch.DirKey, root)
+      val viaConf =
+        try q(spark, sf).collect().toSeq
+        finally spark.conf.unset(Scratch.DirKey)
+      assert(new File(root).listFiles().nonEmpty,
+        "the run must allocate its log/mv tables under the configured root")
+      val viaDefault = q(spark, sf).collect().toSeq
+      assert(viaConf === viaDefault,
+        "scratch routing must not change query results")
+    }
   }
 }

@@ -23,7 +23,7 @@ class ChannelSpec extends SparkSpec {
 
   for ((name, mk) <- transports) {
     test(s"[$name] enqueue/dequeue round-trips tasks with the <=5 poll cap") {
-      val dir = Files.createTempDirectory("graft-chan").toString
+      val dir = suiteDir("chan").toString
       val ch: TaskChannel = mk(dir)
       ch.enqueue(tasks(7))
       assert(ch.dequeue(spark).count() === 5) // reference poll cap default
@@ -34,7 +34,7 @@ class ChannelSpec extends SparkSpec {
     }
 
     test(s"[$name] dequeueStream drains the channel through the streaming source") {
-      val dir = Files.createTempDirectory("graft-chan-s").toString
+      val dir = suiteDir("chan-s").toString
       val ch: TaskChannel = mk(dir)
       ch.enqueue(tasks(3))
       val out = s"$dir/out"
@@ -48,7 +48,7 @@ class ChannelSpec extends SparkSpec {
   }
 
   test("malformed queue lines quarantine instead of becoming phantom tasks") {
-    val dir = Files.createTempDirectory("graft-chan-q").toString
+    val dir = suiteDir("chan-q").toString
     val ch = DirectoryChannel(s"$dir/q")
     ch.enqueue(tasks(2))
     // a torn/garbage line lands in the queue dir (partial write, bit rot)
@@ -71,7 +71,7 @@ class ChannelSpec extends SparkSpec {
   }
 
   test("offset-log: key partitioning is stable and offsets are contiguous") {
-    val dir = Files.createTempDirectory("graft-olog").toString
+    val dir = suiteDir("olog").toString
     val ch = OffsetLogChannel(s"$dir/q", nPartitions = 3)
     ch.enqueue(tasks(6))
     ch.enqueue(tasks(6)) // same IDs again — must land in the same partitions
@@ -89,7 +89,7 @@ class ChannelSpec extends SparkSpec {
   }
 
   test("offset-log: dequeue does not consume; commit advances the group") {
-    val dir = Files.createTempDirectory("graft-olog-c").toString
+    val dir = suiteDir("olog-c").toString
     val ch = OffsetLogChannel(s"$dir/q", nPartitions = 2)
     ch.enqueue(tasks(4))
     val poll1 = ch.dequeueWithOffsets(spark, max = 0)
@@ -106,7 +106,7 @@ class ChannelSpec extends SparkSpec {
   }
 
   test("offset-log: a partial commit redelivers only the uncommitted rest") {
-    val dir = Files.createTempDirectory("graft-olog-p").toString
+    val dir = suiteDir("olog-p").toString
     val ch = OffsetLogChannel(s"$dir/q", nPartitions = 1)
     ch.enqueue(tasks(5))
     val firstTwo = ch.dequeueWithOffsets(spark, max = 2)
@@ -118,7 +118,7 @@ class ChannelSpec extends SparkSpec {
   }
 
   test("offset-log: lag reports and min-committed retention pruning") {
-    val dir = Files.createTempDirectory("graft-olog-l").toString
+    val dir = suiteDir("olog-l").toString
     val fast = OffsetLogChannel(s"$dir/q", nPartitions = 2, group = "fast")
     val slow = OffsetLogChannel(s"$dir/q", nPartitions = 2, group = "slow")
     fast.enqueue(tasks(6))
@@ -147,7 +147,7 @@ class ChannelSpec extends SparkSpec {
   }
 
   test("offset-log: consumer groups are isolated") {
-    val dir = Files.createTempDirectory("graft-olog-g").toString
+    val dir = suiteDir("olog-g").toString
     val a = OffsetLogChannel(s"$dir/q", nPartitions = 2, group = "a")
     val b = OffsetLogChannel(s"$dir/q", nPartitions = 2, group = "b")
     a.enqueue(tasks(3))

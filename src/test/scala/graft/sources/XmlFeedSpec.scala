@@ -25,7 +25,7 @@ class XmlFeedSpec extends SparkSpec {
   }
 
   test("a directory of feed snapshots scans as one distributed source") {
-    val dir = Files.createTempDirectory("graft-xmlfeed")
+    val dir = suiteDir("xmlfeed")
     def feed(name: String, locs: Seq[String]): Unit =
       Files.writeString(dir.resolve(name),
         "<urlset>" + locs.map(l =>
@@ -47,7 +47,7 @@ class XmlFeedSpec extends SparkSpec {
     assert(XmlFeed.tasks(XmlFeed.newSince(feed, "2026-08-12")).count() === 1)
     assert(XmlFeed.tasks(XmlFeed.newSince(feed, "2026-08-13")).count() === 0)
     // an entry with no lastmod is never silently skipped
-    val dir = Files.createTempDirectory("graft-xmlinc")
+    val dir = suiteDir("xmlinc")
     Files.writeString(dir.resolve("f.xml"),
       "<urlset><url><loc>https://h/z.csv</loc></url></urlset>")
     assert(XmlFeed.tasks(XmlFeed.newSince(
@@ -58,7 +58,7 @@ class XmlFeedSpec extends SparkSpec {
     // the exact scenario the strict-> boundary got wrong: poll a feed,
     // persist watermark = its max lastmod, then the publisher adds a
     // SECOND entry with that same (date-granular) lastmod
-    val dir = Files.createTempDirectory("graft-xmlsameday")
+    val dir = suiteDir("xmlsameday")
     Files.writeString(dir.resolve("f.xml"),
       """<urlset><url><loc>https://h/a.csv</loc><lastmod>2026-08-14</lastmod></url></urlset>""")
     val wm = "2026-08-14" // persisted after the first poll
@@ -74,7 +74,7 @@ class XmlFeedSpec extends SparkSpec {
   }
 
   test("FeedOffsets: re-polling an unchanged feed enqueues nothing") {
-    val dir = Files.createTempDirectory("graft-feedoff")
+    val dir = suiteDir("feedoff")
     val feedPath = dir.resolve("f.xml").toString
     val offDir = dir.resolve("offsets").toString
     Files.writeString(Paths.get(feedPath),
@@ -91,7 +91,7 @@ class XmlFeedSpec extends SparkSpec {
   }
 
   test("FeedOffsets.poll advances the mark only AFTER enqueue succeeds") {
-    val dir = Files.createTempDirectory("graft-feedoff3")
+    val dir = suiteDir("feedoff3")
     val feedPath = dir.resolve("f.xml").toString
     val offDir = dir.resolve("offsets").toString
     Files.writeString(Paths.get(feedPath),
@@ -113,7 +113,7 @@ class XmlFeedSpec extends SparkSpec {
   }
 
   test("FeedOffsets: same-day addition delivered exactly once across polls") {
-    val dir = Files.createTempDirectory("graft-feedoff2")
+    val dir = suiteDir("feedoff2")
     val feedPath = dir.resolve("f.xml").toString
     val offDir = dir.resolve("offsets").toString
     Files.writeString(Paths.get(feedPath),
@@ -136,7 +136,7 @@ class XmlFeedSpec extends SparkSpec {
 
   test("feed-driven harvest: XML feed → tasks → download pipeline → sink") {
     import graft.streaming.{DownloadPipeline, Workspace}
-    val tmp = Files.createTempDirectory("graft-xmlharvest")
+    val tmp = suiteDir("xmlharvest")
     val art = tmp.resolve("artifacts"); Files.createDirectories(art)
     Files.writeString(art.resolve("q1.csv"), "sym,px\nAAA,9.5")
     Files.writeString(art.resolve("q2.csv"), "sym,px\nBBB,1.5")
@@ -160,7 +160,7 @@ class XmlFeedSpec extends SparkSpec {
 
   test("FeedPoller: feed → channel → pipeline, incremental across polls") {
     import graft.streaming.{BatchHandler, FeedPoller, Workspace}
-    val tmp = Files.createTempDirectory("graft-feedpoll")
+    val tmp = suiteDir("feedpoll")
     val art = tmp.resolve("artifacts"); Files.createDirectories(art)
     Files.writeString(art.resolve("d1.csv"), "sym,px\nAAA,1.0")
     Files.writeString(art.resolve("d2.csv"), "sym,px\nBBB,2.0")
@@ -193,7 +193,7 @@ class XmlFeedSpec extends SparkSpec {
   }
 
   test("malformed elements yield null fields, not phantom rows with data") {
-    val dir = Files.createTempDirectory("graft-xmlbad")
+    val dir = suiteDir("xmlbad")
     Files.writeString(dir.resolve("feed.xml"),
       """<urlset>
         |<url><loc>https://h/ok.csv</loc><lastmod>2026-01-01</lastmod></url>
