@@ -173,6 +173,21 @@ object Incremental {
       .filter(col(countCol) > 0)
   }
 
+  /** [[maintainAgg]] for a view with no MIN/MAX column, else
+    * [[maintainAggMinMax]] re-aggregating its dirty groups against
+    * `postSource`. The post-change source is taken by name, so a
+    * sums-only view never builds it.
+    */
+  def maintainAggOrMinMax(mv: DataFrame, changes: DataFrame,
+      postSource: => DataFrame, mvKeys: Seq[String],
+      sumCols: Map[String, String], countCol: String,
+      minCols: Map[String, String], maxCols: Map[String, String])
+      : DataFrame =
+    if (minCols.isEmpty && maxCols.isEmpty)
+      maintainAgg(mv, changes, mvKeys, sumCols, countCol)
+    else maintainAggMinMax(mv, changes, postSource, mvKeys, sumCols,
+      countCol, minCols, maxCols)
+
   /** TOP-K rows per group under CDC maintenance — the ranking analogue
     * of [[maintainAggMinMax]] (min/max IS k = 1): the stored view holds
     * each group's current top-k ROWS by `orderCol` descending

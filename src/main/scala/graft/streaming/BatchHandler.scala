@@ -32,7 +32,10 @@ object BatchHandler {
     val done = Paths.get(root, "done")
     Files.createDirectories(processing); Files.createDirectories(done)
 
-    // claim: move up to pollCap task files queue/ → processing/
+    // claim: move the pollCap lowest-named task files queue/ →
+    // processing/. Name order, not listing order, so which tasks share a
+    // poll is the same on every run: Spark part-file names sort by
+    // partition index, which is the enqueue's ID range order.
     val claimed = {
       val s = Files.list(queueDir)
       try {
@@ -40,7 +43,8 @@ object BatchHandler {
         s.iterator().asScala
           .filter(p => Files.isRegularFile(p) && !p.getFileName.toString.startsWith("."))
           .filterNot(_.getFileName.toString.startsWith("_"))
-          .take(pollCap).toList
+          .toList.sortBy(_.getFileName.toString)
+          .take(pollCap)
           .map { p =>
             val t = processing.resolve(p.getFileName)
             Files.move(p, t, StandardCopyOption.ATOMIC_MOVE)

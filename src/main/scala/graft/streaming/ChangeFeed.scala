@@ -82,7 +82,7 @@ object ChangeFeed {
     */
   def pollOnce(spark: SparkSession, source: String, keys: Seq[String],
       cursorPath: String)(deliver: Delivery => Unit): Option[(Long, Long)] = {
-    val head = Generations.latest(spark, source).map(_.version).getOrElse(0L)
+    val head = latestVersion(spark, source)
     val from = cursor(spark, cursorPath)
     if (head <= from) return None
     val changes =
@@ -91,9 +91,7 @@ object ChangeFeed {
         // pinned at the version the cursor will record, never a fresher
         // read() (a commit landing between latest() and the read would
         // be delivered here AND re-delivered as changes next poll)
-        Generations.readAt(spark, source, head).map(df =>
-          df.select(org.apache.spark.sql.functions.lit("insert")
-            .as("_change_type") +: df.columns.toSeq.map(df.col): _*))
+        Generations.readAt(spark, source, head).map(inserts)
       else Generations.changesBetween(spark, source, from, head, keys,
         includePreimages = true)
     deliver(Delivery(from, head, changes))
@@ -101,29 +99,180 @@ object ChangeFeed {
     Some((from, head))
   }
 
-  /** The source version a maintained view has applied: from its newest
-    * commit's `=cdcv=<version>` tag, or — after a squash/compaction of
-    * the view table folded that commit away — from the snapshot commit's
-    * CARRIED witness (the same mechanism that keeps append replays
-    * idempotent across GC keeps the applied-version watermark alive).
-    * 0 for an empty view table.
+  /** A maintained view's applied-source-version watermark, in one of
+    * its three persisted commit-tag forms: `=cdcv=<v>` for one source,
+    * `=cdcv2=<a>-<b>` for a source pair and `=cdcvn=<v1>-…-<vn>` for an
+    * N-way join chain. The tag rides the view's own commit, so state and
+    * offset publish atomically; after a squash/compaction of the view
+    * table folded that commit away, the snapshot's CARRIED witness keeps
+    * it (the same mechanism that keeps append replays idempotent across
+    * GC keeps the applied-version watermark alive).
     */
-  def appliedVersion(spark: SparkSession, mvTable: String): Long =
-    Generations.latest(spark, mvTable).toSeq
-      .flatMap(c => c.tag +: c.carried)
-      .filter(_.startsWith("=cdcv="))
-      .flatMap(t => scala.util.Try(t.stripPrefix("=cdcv=").toLong).toOption)
-      .sorted.lastOption.getOrElse(0L)
+  final case class Watermark(prefix: String, arity: Int) {
+    def tag(versions: Seq[Long]): String = {
+      require(versions.size == arity,
+        s"$prefix needs $arity versions, got $versions")
+      prefix + versions.mkString("-")
+    }
+
+    /** The newest watermark of this form among `tags` (a commit's tag
+      * plus its carried witness); all zeros when none parses. A tag of
+      * another form or arity, or with a non-numeric part, is ignored.
+      * The versions of one view advance together (one tick applies
+      * every head), so the newest is the lexicographic max.
+      */
+    def parse(tags: Seq[String]): Seq[Long] = {
+      import scala.math.Ordering.Implicits.seqOrdering
+      tags.filter(_.startsWith(prefix)).flatMap { t =>
+        val parts = t.stripPrefix(prefix).split("-", -1).toSeq
+          .map(_.toLongOption)
+        if (parts.size == arity && parts.forall(_.isDefined))
+          Some(parts.flatten)
+        else None
+      }.maxOption.getOrElse(Seq.fill(arity)(0L))
+    }
+  }
+
+  object Watermark {
+    val single: Watermark = Watermark("=cdcv=", 1)
+    val pair: Watermark = Watermark("=cdcv2=", 2)
+    def chain(n: Int): Watermark = Watermark("=cdcvn=", n)
+  }
+
+  /** The versions `mvTable` has applied: its newest commit's `mark`
+    * watermark, from the tag or the carried witness. All zeros for an
+    * empty or never-maintained view.
+    */
+  def appliedVersions(spark: SparkSession, mvTable: String,
+      mark: Watermark): Seq[Long] =
+    mark.parse(Generations.latest(spark, mvTable).toSeq
+      .flatMap(c => c.tag +: c.carried))
+
+  private def latestVersion(spark: SparkSession, table: String): Long =
+    Generations.latest(spark, table).map(_.version).getOrElse(0L)
+
+  /** `source`'s snapshot at the sampled `head` — every read of a tick is
+    * pinned at the version its watermark will record. */
+  private def headSnap(spark: SparkSession, source: String,
+      head: Long): DataFrame =
+    Generations.readAt(spark, source, head).getOrElse(
+      throw new IllegalStateException(
+        s"$source v$head (the latest commit) has no readable generation"))
+
+  /** `df`'s rows as an insert-only change feed. */
+  private def inserts(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    df.select(lit("insert").as("_change_type") +:
+      df.columns.toSeq.map(df.col): _*)
+  }
+
+  // an empty 4-type feed over `pre`'s schema, for the source whose
+  // applied version is already at head when only the OTHER input moved
+  private def emptyFeed(pre: DataFrame): DataFrame = inserts(pre.limit(0))
+
+  /** `source`'s change feed from `from` to `to` over its snapshot `pre`
+    * at `from`: empty when the source did not move, None when `from`'s
+    * generation was GC'd (feed reach = gc keep). */
+  private def feedSince(spark: SparkSession, source: String,
+      keys: Seq[String], pre: DataFrame, from: Long,
+      to: Long): Option[DataFrame] =
+    if (from == to) Some(emptyFeed(pre))
+    else Generations.changesBetween(spark, source, from, to, keys,
+      includePreimages = true)
+
+  /** The log commits in (`applied`, `head`] when they can be applied as
+    * a pure delta: the view has a real applied base, the span STARTS at
+    * or below it (the span begins at the last snapshot fold — a fold
+    * newer than the watermark has eaten the pre-state) and the window
+    * above it is a contiguous all-delta run. None otherwise — bootstrap,
+    * a squash folding already-applied rows into the window, a GC hole —
+    * and the tick recomputes: unioning a fold as if it were a delta
+    * double-counts.
+    */
+  private def deltaWindow(span: Seq[Generations.Commit], applied: Long,
+      head: Long): Option[Seq[Generations.Commit]] = {
+    val window = span.filter(c => c.version > applied && c.version <= head)
+    val pure = applied > 0L && span.nonEmpty &&
+      span.head.version <= applied &&
+      window.forall(!Generations.isSnapshotCommit(_)) &&
+      window.map(_.version).toSet == (applied + 1 to head).toSet
+    if (pure) Some(window) else None
+  }
+
+  /** The exactly-once tick every maintainer runs, so its race arguments
+    * live in one place:
+    *
+    *  1. `heads` are the source versions the caller sampled: a
+    *     `latest()` point sample per snapshot source (every read of the
+    *     tick is then `readAt`/`changesBetween` pinned at it), or the
+    *     LAST ENTRY of one `logCommits` listing per log source — a
+    *     separate `latest()` sample would let a commit landing between
+    *     two listings be baked into a view whose watermark does not
+    *     record it, and the next tick would re-apply it and
+    *     double-count. No-op while any source is empty.
+    *  2. The applied watermark is read from the view's tag or its
+    *     carried witness.
+    *  3. No-op when the view has applied every head. With `staleBail`
+    *     (the log-join forms), also when the view has already passed a
+    *     sampled head: a concurrent tick completed after this tick's
+    *     listing, and proceeding would rebuild from a stale pre-state and
+    *     commit a tag that REGRESSES the watermark, re-applying the
+    *     commits in between next tick. The expectedBase CAS cannot fence
+    *     it: that commit landed before `mvBase` is read.
+    *  4. `mvBase` is captured.
+    *  5. `next(applied)` commits with the watermark tag of `heads` under
+    *     `expectedBase = Some(mvBase)`: the new state and the applied
+    *     versions publish in ONE commit, and a concurrent maintainer's
+    *     CAS loss throws [[Generations.CommitConflictException]] — redo
+    *     by calling again. `next` returning None (the view table
+    *     vanished mid-tick) commits nothing.
+    */
+  private def tick(spark: SparkSession, mvTable: String, mark: Watermark,
+      heads: Seq[Long], staleBail: Boolean = false)
+      (next: Seq[Long] => Option[DataFrame]): Option[Generations.Commit] = {
+    if (heads.contains(0L)) return None
+    val applied = appliedVersions(spark, mvTable, mark)
+    val lag = applied.zip(heads)
+    if (lag.forall { case (a, h) => a >= h }) return None
+    if (staleBail && lag.exists { case (a, h) => a > h }) return None
+    val mvBase = latestVersion(spark, mvTable)
+    next(applied).map(Generations.writeAndCommit(spark, _, mvTable,
+      tag = mark.tag(heads), expectedBase = Some(mvBase)))
+  }
+
+  /** [[tick]] over ONE append-only log source: one commit listing is the
+    * tick's entire view of the source (its last entry is the head, and
+    * the listing's span read as one frame is the log content at head).
+    * While the window is a pure delta ([[deltaWindow]]) the view
+    * advances by `incremental(mv, delta, content)` — `delta` the
+    * unapplied commits' rows, `content` the log at head, read only when
+    * called; otherwise it is `recompute(content)`.
+    */
+  private def logTick(spark: SparkSession, source: String, mvTable: String)
+      (recompute: DataFrame => DataFrame)
+      (incremental: (DataFrame, DataFrame, () => DataFrame) => DataFrame)
+      : Option[Generations.Commit] = {
+    val span = Generations.logCommits(spark, source)
+    val head = span.lastOption.map(_.version).getOrElse(0L)
+    tick(spark, mvTable, Watermark.single, Seq(head)) { applied =>
+      def content = Generations.readSpan(spark, source, span)
+      deltaWindow(span, applied.head, head) match {
+        case Some(window) =>
+          val delta = Generations.readSpan(spark, source, window)
+          Generations.read(spark, mvTable)
+            .map(incremental(_, delta, () => content))
+        case None => Some(recompute(content))
+      }
+    }
+  }
 
   /** Advance an aggregate view to the source's current version —
     * bootstrap on first call (full aggregate of the current snapshot),
     * retraction-maintenance ([[Incremental.maintainAgg]]) after, full
     * recompute when GC has cut the feed under the view. Exactly-once by
-    * construction: the new state and the applied source version publish
-    * in ONE commit (tag `=cdcv=<version>`, `expectedBase` CAS on the view
-    * table), so there is no window where one exists without the other;
-    * a concurrent maintainer's CAS loss throws
-    * [[Generations.CommitConflictException]] — redo by calling again.
+    * construction ([[tick]]): the new state and the applied source
+    * version publish in ONE commit (tag `=cdcv=<version>`, `expectedBase`
+    * CAS on the view table).
     *
     * @param aggOf the full-recompute form of the view (used for
     *   bootstrap and GC-gap recovery); `sumCols`/`countCol` describe its
@@ -140,37 +289,23 @@ object ChangeFeed {
       minCols: Map[String, String] = Map.empty,
       maxCols: Map[String, String] = Map.empty)
       (aggOf: DataFrame => DataFrame): Option[Generations.Commit] = {
-    val head = Generations.latest(spark, source).map(_.version).getOrElse(0L)
-    if (head == 0L) return None
-    val applied = appliedVersion(spark, mvTable)
-    if (applied >= head) return None
-    val mvBase = Generations.latest(spark, mvTable).map(_.version).getOrElse(0L)
-    val current =
-      if (applied == 0L) None else Generations.read(spark, mvTable)
-    val next = (current, if (applied == 0L) None
-      else Generations.changesBetween(spark, source, applied, head,
-        sourceKeys, includePreimages = true)) match {
-      case (Some(mv), Some(changes)) if minCols.isEmpty && maxCols.isEmpty =>
-        Incremental.maintainAgg(mv, changes, mvKeys, sumCols, countCol)
-      case (Some(mv), Some(changes)) =>
-        Incremental.maintainAggMinMax(mv, changes,
-          postSource = Generations.readAt(spark, source, head).getOrElse(
-            throw new IllegalStateException(
-              s"$source v$head (the latest commit) has no readable generation")),
-          mvKeys, sumCols, countCol, minCols, maxCols)
-      case _ =>
-        // bootstrap, or the applied version's generation is GC'd (feed
-        // reach = gc keep): recompute from the snapshot AT `head` — the
-        // version the =cdcv= tag records. A plain read() here would bake
-        // in any commit landing between latest() and the read while
-        // tagging only `head`, so the next poll re-applies it as changes
-        // and double-counts (exactly-once would be broken at bootstrap).
-        aggOf(Generations.readAt(spark, source, head).getOrElse(
-          throw new IllegalStateException(
-            s"$source v$head (the latest commit) has no readable generation")))
+    val head = latestVersion(spark, source)
+    tick(spark, mvTable, Watermark.single, Seq(head)) { applied =>
+      val incremental = if (applied.head == 0L) None else for {
+        mv <- Generations.read(spark, mvTable)
+        changes <- Generations.changesBetween(spark, source, applied.head,
+          head, sourceKeys, includePreimages = true)
+      } yield Incremental.maintainAggOrMinMax(mv, changes,
+        headSnap(spark, source, head), mvKeys, sumCols, countCol,
+        minCols, maxCols)
+      // bootstrap, or the applied version's generation is GC'd (feed
+      // reach = gc keep): recompute from the snapshot AT `head` — the
+      // version the =cdcv= tag records. A plain read() here would bake
+      // in any commit landing between latest() and the read while
+      // tagging only `head`, so the next poll re-applies it as changes
+      // and double-counts (exactly-once would be broken at bootstrap).
+      Some(incremental.getOrElse(aggOf(headSnap(spark, source, head))))
     }
-    Some(Generations.writeAndCommit(spark, next, mvTable,
-      tag = s"=cdcv=$head", expectedBase = Some(mvBase)))
   }
 
   /** [[maintainAggOnce]] for an APPEND-ONLY (log) source — the streaming
@@ -200,81 +335,14 @@ object ChangeFeed {
       sumCols: Map[String, String], countCol: String,
       minCols: Map[String, String] = Map.empty,
       maxCols: Map[String, String] = Map.empty)
-      (aggOf: DataFrame => DataFrame): Option[Generations.Commit] = {
-    import org.apache.spark.sql.functions.lit
-    val st = logSpanState(spark, source, mvTable).getOrElse(return None)
-    val next =
-      if (!st.pureDelta)
-        aggOf(st.contentAtHead(spark, source))
-      else {
-        val delta = st.deltaWindow(spark, source)
-        val changes = delta.select(lit("insert").as("_change_type") +:
-          delta.columns.toSeq.map(delta.col): _*)
-        val mv = Generations.read(spark, mvTable).getOrElse(
-          return None) // tagged view table vanished: nothing sane to do
-        if (minCols.isEmpty && maxCols.isEmpty)
-          Incremental.maintainAgg(mv, changes, mvKeys, sumCols, countCol)
-        else Incremental.maintainAggMinMax(mv, changes,
-          // insert-only feed ⇒ no dirty groups ⇒ the post-source scan
-          // prunes to nothing at runtime; passed for the general shape
-          // (pinned at head like every other read of this tick)
-          st.contentAtHead(spark, source),
-          mvKeys, sumCols, countCol, minCols, maxCols)
-      }
-    Some(Generations.writeAndCommit(spark, next, mvTable,
-      tag = s"=cdcv=${st.head}", expectedBase = Some(st.mvBase)))
-  }
-
-  /** The exactly-once prologue EVERY single-log-source maintainer
-    * shares ([[maintainAggOnceLog]] / [[maintainSessionsOnceLog]] /
-    * [[maintainKmvOnceLog]]) — factored so the two load-bearing race
-    * arguments live in exactly one place:
-    *
-    *  - ONE commit listing is the tick's entire view of the source:
-    *    `head` is the SPAN's last entry, never a separate `latest()`
-    *    sample — a commit landing between two listings would otherwise
-    *    be baked into a view tagged `=cdcv=head` without being recorded
-    *    in the watermark, and the next tick would re-apply it as a
-    *    delta and double-count (the race [[maintainAggOnce]] closes
-    *    with `readAt(head)`; deriving head from the span removes it
-    *    structurally).
-    *  - `pureDelta` is provable only when the window is gap-free,
-    *    snapshot-free, and the view has a real applied base — anything
-    *    else (bootstrap, a squash folding already-applied rows into the
-    *    window, a GC hole) forces the full recompute path; unioning a
-    *    fold as if it were a delta double-counts.
-    *
-    * None ⇒ nothing to do this tick (empty source or view current).
-    * The join-view maintainer ([[maintainJoinAggOnceLogAt]]) derives
-    * the same state pairwise and keeps its own two-source form.
-    */
-  private case class LogSpanState(span: Seq[Generations.Commit],
-      head: Long, mvBase: Long, window: Seq[Generations.Commit],
-      pureDelta: Boolean) {
-    /** Log content AT head — the span is the content by construction
-      * (it ends at head). */
-    def contentAtHead(spark: SparkSession, source: String): DataFrame =
-      Generations.readSpan(spark, source, span)
-    /** The unapplied delta commits' rows (pure-delta path only). */
-    def deltaWindow(spark: SparkSession, source: String): DataFrame =
-      Generations.readSpan(spark, source, window)
-  }
-
-  private def logSpanState(spark: SparkSession, source: String,
-      mvTable: String): Option[LogSpanState] = {
-    val span = Generations.logCommits(spark, source)
-    val head = span.lastOption.map(_.version).getOrElse(0L)
-    if (head == 0L) return None
-    val applied = appliedVersion(spark, mvTable)
-    if (applied >= head) return None
-    val mvBase = Generations.latest(spark, mvTable).map(_.version)
-      .getOrElse(0L)
-    val window = span.filter(c => c.version > applied && c.version <= head)
-    val pureDelta = applied > 0L &&
-      window.forall(!Generations.isSnapshotCommit(_)) &&
-      window.map(_.version).toSet == (applied + 1 to head).toSet
-    Some(LogSpanState(span, head, mvBase, window, pureDelta))
-  }
+      (aggOf: DataFrame => DataFrame): Option[Generations.Commit] =
+    logTick(spark, source, mvTable)(aggOf) { (mv, delta, content) =>
+      // insert-only feed ⇒ no dirty groups ⇒ the min/max post-source
+      // scan prunes to nothing at runtime; passed for the general shape
+      // (pinned at head like every other read of this tick)
+      Incremental.maintainAggOrMinMax(mv, inserts(delta), content(),
+        mvKeys, sumCols, countCol, minCols, maxCols)
+    }
 
   /** Dirty-group epilogue shared by the non-abelian/log maintainers:
     * carry the untouched groups' view rows (anti join on the dirty
@@ -289,31 +357,19 @@ object ChangeFeed {
       .unionByName(redone)
   }
 
-  /** Advance a maintained gap-based SESSION-WINDOW view over an
-    * APPEND-ONLY event log — the last EX5×IVM shape. Sessions are NOT an
-    * abelian aggregate: one late event can MERGE two existing sessions
-    * (and merging chains transitively through any number of neighbours
-    * within a user), so the smallest closed re-aggregation unit is the
-    * ENTITY, not the session. Each tick re-sessionizes, from the full
-    * log at head, exactly the users that appear in the delta window and
-    * carries every other user's view rows untouched — the
-    * [[maintainAggOnceLog]] dirty-group path with re-sessionization as
-    * the group recompute.
-    *
-    * Per-tick cost: delta scan (dirty keys) + a log scan semi-joined to
-    * the dirty users + one anti join on the view — O(dirty users'
-    * history), never a full recompute while the window is a pure delta.
-    * At 100 TB the log is bucketed by `userCol` so the dirty-user
-    * semi-join prunes to their buckets; lateness (enforced upstream by
-    * the [[StreamingIvm]] admission mark) bounds how far back a session
-    * can reopen, exactly like a state-store watermark.
-    *
-    * View schema: (`userCol`, session_start, session_end, n_events).
-    * Exactly-once identically to [[maintainAggOnceLog]]: ONE commit
-    * listing defines the span, the applied version rides the view's
-    * `=cdcv=<head>` tag, and the expectedBase CAS rejects concurrent
-    * maintainers.
-    */
+  /** The incremental body of the non-abelian log views, whose smallest
+    * closed re-aggregation unit is a GROUP: re-run `redo` over the log
+    * rows at head of exactly the `keys` groups the delta touches, and
+    * carry every other group's view rows untouched. */
+  private def redoDirty(keys: Seq[String])(redo: DataFrame => DataFrame)
+      : (DataFrame, DataFrame, () => DataFrame) => DataFrame = {
+    (mv, delta, content) =>
+      import org.apache.spark.sql.functions.col
+      val dirty = delta.select(keys.map(col): _*).distinct()
+      carryAndUnion(mv, dirty, keys,
+        redo(content().join(dirty, keys, "left_semi")))
+  }
+
   /** INTERVAL-generalized session assignment — the shared core of
     * [[maintainSessionsOnceLog]] and
     * [[StreamingIvm.foldSessionLog]]'s bounded-retention fold. A log
@@ -352,6 +408,31 @@ object ChangeFeed {
       .drop("_prev", "_new")
   }
 
+  /** Advance a maintained gap-based SESSION-WINDOW view over an
+    * APPEND-ONLY event log — the last EX5×IVM shape. Sessions are NOT an
+    * abelian aggregate: one late event can MERGE two existing sessions
+    * (and merging chains transitively through any number of neighbours
+    * within a user), so the smallest closed re-aggregation unit is the
+    * ENTITY, not the session. Each tick re-sessionizes, from the full
+    * log at head, exactly the users that appear in the delta window and
+    * carries every other user's view rows untouched — the
+    * [[maintainAggOnceLog]] dirty-group path with re-sessionization as
+    * the group recompute.
+    *
+    * Per-tick cost: delta scan (dirty keys) + a log scan semi-joined to
+    * the dirty users + one anti join on the view — O(dirty users'
+    * history), never a full recompute while the window is a pure delta.
+    * At 100 TB the log is bucketed by `userCol` so the dirty-user
+    * semi-join prunes to their buckets; lateness (enforced upstream by
+    * the [[StreamingIvm]] admission mark) bounds how far back a session
+    * can reopen, exactly like a state-store watermark.
+    *
+    * View schema: (`userCol`, session_start, session_end, n_events).
+    * Exactly-once identically to [[maintainAggOnceLog]]: ONE commit
+    * listing defines the span, the applied version rides the view's
+    * `=cdcv=<head>` tag, and the expectedBase CAS rejects concurrent
+    * maintainers.
+    */
   def maintainSessionsOnceLog(spark: SparkSession, source: String,
       mvTable: String, userCol: String, tsCol: String,
       gapMicros: Long): Option[Generations.Commit] = {
@@ -366,19 +447,8 @@ object ChangeFeed {
           max(col("_end")).as("session_end"),
           sum(col("_n")).as("n_events"))
         .drop("_seq")
-    val st = logSpanState(spark, source, mvTable).getOrElse(return None)
-    val next =
-      if (!st.pureDelta) sessionize(st.contentAtHead(spark, source))
-      else {
-        val dirty = st.deltaWindow(spark, source)
-          .select(col(userCol)).distinct()
-        val mv = Generations.read(spark, mvTable).getOrElse(return None)
-        val redone = sessionize(st.contentAtHead(spark, source)
-          .join(dirty, Seq(userCol), "left_semi"))
-        carryAndUnion(mv, dirty, Seq(userCol), redone)
-      }
-    Some(Generations.writeAndCommit(spark, next, mvTable,
-      tag = s"=cdcv=${st.head}", expectedBase = Some(st.mvBase)))
+    logTick(spark, source, mvTable)(sessionize)(
+      redoDirty(Seq(userCol))(sessionize))
   }
 
   /** Advance a maintained per-group TOP-K view over an APPEND-ONLY
@@ -400,22 +470,8 @@ object ChangeFeed {
     */
   def maintainTopKOnceLog(spark: SparkSession, source: String,
       mvTable: String, groupKeys: Seq[String])
-      (rankOf: DataFrame => DataFrame): Option[Generations.Commit] = {
-    import org.apache.spark.sql.functions.col
-    val st = logSpanState(spark, source, mvTable).getOrElse(return None)
-    val next =
-      if (!st.pureDelta) rankOf(st.contentAtHead(spark, source))
-      else {
-        val dirty = st.deltaWindow(spark, source)
-          .select(groupKeys.map(col): _*).distinct()
-        val mv = Generations.read(spark, mvTable).getOrElse(return None)
-        val redone = rankOf(st.contentAtHead(spark, source)
-          .join(dirty, groupKeys, "left_semi"))
-        carryAndUnion(mv, dirty, groupKeys, redone)
-      }
-    Some(Generations.writeAndCommit(spark, next, mvTable,
-      tag = s"=cdcv=${st.head}", expectedBase = Some(st.mvBase)))
-  }
+      (rankOf: DataFrame => DataFrame): Option[Generations.Commit] =
+    logTick(spark, source, mvTable)(rankOf)(redoDirty(groupKeys)(rankOf))
 
   /** Advance a maintained KMV distinct-count sketch view over an
     * APPEND-ONLY hash log — the FOLDABLE-state EX5×IVM shape, the
@@ -463,25 +519,19 @@ object ChangeFeed {
           when(col("n_kept") < k, col("n_kept").cast("double"))
             .otherwise(lit(k - 1) * lit(twoPow60) / col("hk")))
     }
-    val st = logSpanState(spark, source, mvTable).getOrElse(return None)
-    val next =
-      if (!st.pureDelta)
-        kminOf(st.contentAtHead(spark, source)
-          .select(gCols :+ col("_h"): _*).distinct())
-      else {
-        val delta = st.deltaWindow(spark, source)
-          .select(gCols :+ col("_h"): _*).distinct()
+    def hashesOf(log: DataFrame): DataFrame =
+      log.select(gCols :+ col("_h"): _*).distinct()
+    logTick(spark, source, mvTable)(log => kminOf(hashesOf(log))) {
+      (mv, deltaRows, _) =>
+        val delta = hashesOf(deltaRows)
         val dirty = delta.select(gCols: _*).distinct()
-        val mv = Generations.read(spark, mvTable).getOrElse(return None)
         // carried sketch state of the dirty groups, exploded back to
         // (group, _h) rows — the ONLY history this tick touches
         val carriedState = mv.join(dirty, groupCols, "left_semi")
           .select(gCols :+ explode(col("hashes")).as("_h"): _*)
         val merged = kminOf(carriedState.unionByName(delta).distinct())
         carryAndUnion(mv, dirty, groupCols, merged)
-      }
-    Some(Generations.writeAndCommit(spark, next, mvTable,
-      tag = s"=cdcv=${st.head}", expectedBase = Some(st.mvBase)))
+    }
   }
 
   /** One tick of the turnkey changelog tailer — the [[FeedPoller]]
@@ -517,7 +567,7 @@ object ChangeFeed {
     require(!consumerId.contains("=") && !consumerId.contains(" ") &&
       consumerId.nonEmpty, s"consumerId must be a bare prefix: '$consumerId'")
     import org.apache.spark.sql.functions.lit
-    val head = Generations.latest(spark, source).map(_.version).getOrElse(0L)
+    val head = latestVersion(spark, source)
     val from = Generations.lastAppendId(spark, sinkTable, consumerId)
       .getOrElse(0L)
     if (head <= from) return None
@@ -527,42 +577,12 @@ object ChangeFeed {
     ).getOrElse {
       // first delivery, or the watermark's generation was GC'd: the
       // snapshot AT head is the (re-)base image
-      val snap = Generations.readAt(spark, source, head).getOrElse(
-        throw new IllegalStateException(
-          s"$source v$head (the latest commit) has no readable generation"))
-      snap.select(lit("insert").as("_change_type") +:
-          snap.columns.toSeq.map(snap.col): _*)
+      inserts(headSnap(spark, source, head))
         .withColumn("_resync", lit(from != 0L))
     }
     Generations.appendCommitted(spark, batch, sinkTable,
       s"$consumerId=$head")
     Some((from, head))
-  }
-
-  /** The (sourceA, sourceB) version pair a maintained JOIN view has
-    * applied — the two-source form of [[appliedVersion]], parsed from
-    * the view's `=cdcv2=<vA>-<vB>` commit tag (or its carried witness
-    * after a squash). (0, 0) for an empty or never-maintained view.
-    * Both components advance monotonically together (one maintenance
-    * tick applies both heads), so the pairwise max is well-defined.
-    */
-  def appliedVersions2(spark: SparkSession, mvTable: String): (Long, Long) =
-    Generations.latest(spark, mvTable).toSeq
-      .flatMap(c => c.tag +: c.carried)
-      .filter(_.startsWith("=cdcv2="))
-      .flatMap(t => t.stripPrefix("=cdcv2=").split("-", 2) match {
-        case Array(a, b) =>
-          scala.util.Try((a.toLong, b.toLong)).toOption
-        case _ => None
-      })
-      .sorted.lastOption.getOrElse((0L, 0L))
-
-  // an empty 4-type feed over `pre`'s schema, for the source whose
-  // applied version is already at head when only the OTHER input moved
-  private def emptyFeed(pre: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    pre.limit(0).select(lit("insert").as("_change_type") +:
-      pre.columns.toSeq.map(pre.col): _*)
   }
 
   /** Advance an aggregate-over-JOIN view `V = agg(A ⋈ B)` to both
@@ -612,58 +632,36 @@ object ChangeFeed {
       maxCols: Map[String, String] = Map.empty,
       leftOuter: Boolean = false)
       (aggOf: (DataFrame, DataFrame) => DataFrame): Option[Generations.Commit] = {
-    val headA = Generations.latest(spark, sourceA).map(_.version).getOrElse(0L)
-    val headB = Generations.latest(spark, sourceB).map(_.version).getOrElse(0L)
-    if (headA == 0L || headB == 0L) return None // need both inputs committed
-    val (appA, appB) = appliedVersions2(spark, mvTable)
-    if (appA >= headA && appB >= headB) return None
-    val mvBase = Generations.latest(spark, mvTable).map(_.version).getOrElse(0L)
-    def feedOf(source: String, from: Long, to: Long, keys: Seq[String],
-        pre: DataFrame): Option[DataFrame] =
-      if (from == to) Some(emptyFeed(pre))
-      else Generations.changesBetween(spark, source, from, to, keys,
-        includePreimages = true)
-    val incremental: Option[DataFrame] =
-      if (appA == 0L || appB == 0L) None // never maintained: bootstrap
-      else for {
-        mv <- Generations.read(spark, mvTable)
-        aPre <- Generations.readAt(spark, sourceA, appA)
-        bPre <- Generations.readAt(spark, sourceB, appB)
-        aChanges <- feedOf(sourceA, appA, headA, aKeys, aPre)
-        bChanges <- feedOf(sourceB, appB, headB, bKeys, bPre)
-      } yield {
-        def headSnap(source: String, head: Long) =
-          Generations.readAt(spark, source, head).getOrElse(
-            throw new IllegalStateException(
-              s"$source v$head (the latest commit) has no readable generation"))
-        // B's post-state is a committed snapshot (time travel at headB)
-        // — the two-term feed identity applies (r20, one join fewer)
-        val bPost = headSnap(sourceB, headB)
-        val feed =
-          if (leftOuter)
-            Incremental.deltaJoinLeft(aPre, aChanges, bPre, bChanges,
-              joinKeys, bPost = Some(bPost))
-          else Incremental.deltaJoinPost(aPre, aChanges, bPost, bChanges,
-            joinKeys)
-        if (minCols.isEmpty && maxCols.isEmpty)
-          Incremental.maintainAgg(mv, feed, mvKeys, sumCols, countCol)
-        else {
-          Incremental.maintainAggMinMax(mv, feed,
-            postSource = headSnap(sourceA, headA)
-              .join(bPost, joinKeys,
-                if (leftOuter) "left" else "inner"),
+    val (headA, headB) = (latestVersion(spark, sourceA),
+      latestVersion(spark, sourceB))
+    tick(spark, mvTable, Watermark.pair, Seq(headA, headB)) { applied =>
+      val Seq(appA, appB) = applied
+      val incremental: Option[DataFrame] =
+        if (appA == 0L || appB == 0L) None // never maintained: bootstrap
+        else for {
+          mv <- Generations.read(spark, mvTable)
+          aPre <- Generations.readAt(spark, sourceA, appA)
+          bPre <- Generations.readAt(spark, sourceB, appB)
+          aChanges <- feedSince(spark, sourceA, aKeys, aPre, appA, headA)
+          bChanges <- feedSince(spark, sourceB, bKeys, bPre, appB, headB)
+        } yield {
+          // B's post-state is a committed snapshot (time travel at headB)
+          // — the two-term feed identity applies (r20, one join fewer)
+          val bPost = headSnap(spark, sourceB, headB)
+          val feed =
+            if (leftOuter)
+              Incremental.deltaJoinLeft(aPre, aChanges, bPre, bChanges,
+                joinKeys, bPost = Some(bPost))
+            else Incremental.deltaJoinPost(aPre, aChanges, bPost, bChanges,
+              joinKeys)
+          Incremental.maintainAggOrMinMax(mv, feed,
+            headSnap(spark, sourceA, headA).join(bPost, joinKeys,
+              if (leftOuter) "left" else "inner"),
             mvKeys, sumCols, countCol, minCols, maxCols)
         }
-      }
-    val next = incremental.getOrElse {
-      def headSnap(source: String, head: Long) =
-        Generations.readAt(spark, source, head).getOrElse(
-          throw new IllegalStateException(
-            s"$source v$head (the latest commit) has no readable generation"))
-      aggOf(headSnap(sourceA, headA), headSnap(sourceB, headB))
+      Some(incremental.getOrElse(aggOf(headSnap(spark, sourceA, headA),
+        headSnap(spark, sourceB, headB))))
     }
-    Some(Generations.writeAndCommit(spark, next, mvTable,
-      tag = s"=cdcv2=$headA-$headB", expectedBase = Some(mvBase)))
   }
 
   /** EXACTLY-once maintenance of a TOP-K-rows-per-group view
@@ -682,33 +680,25 @@ object ChangeFeed {
       orderCol: String, tieCol: String, k: Int,
       viewCols: Seq[String] = Nil): Option[Generations.Commit] = {
     import org.apache.spark.sql.functions.{col, row_number}
-    val head = Generations.latest(spark, source).map(_.version).getOrElse(0L)
-    if (head == 0L) return None
-    val applied = appliedVersion(spark, mvTable)
-    if (applied >= head) return None
-    val mvBase = Generations.latest(spark, mvTable).map(_.version).getOrElse(0L)
-    def headSnap: DataFrame =
-      Generations.readAt(spark, source, head).getOrElse(
-        throw new IllegalStateException(
-          s"$source v$head (the latest commit) has no readable generation"))
+    val head = latestVersion(spark, source)
     def narrow(df: DataFrame): DataFrame =
       if (viewCols.isEmpty) df else df.select(viewCols.map(col): _*)
-    val next = (if (applied == 0L) None
-      else for {
+    tick(spark, mvTable, Watermark.single, Seq(head)) { applied =>
+      val incremental = if (applied.head == 0L) None else for {
         view <- Generations.read(spark, mvTable)
-        changes <- Generations.changesBetween(spark, source, applied, head,
-          sourceKeys, includePreimages = true)
-      } yield Incremental.maintainTopK(view, changes, headSnap,
-        mvKeys, orderCol, tieCol, k)
-      ).getOrElse {
+        changes <- Generations.changesBetween(spark, source, applied.head,
+          head, sourceKeys, includePreimages = true)
+      } yield Incremental.maintainTopK(view, changes,
+        headSnap(spark, source, head), mvKeys, orderCol, tieCol, k)
+      Some(incremental.getOrElse {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(mvKeys.map(col): _*)
           .orderBy(col(orderCol).desc, col(tieCol).asc)
-        narrow(headSnap).withColumn("_r", row_number().over(w))
+        narrow(headSnap(spark, source, head))
+          .withColumn("_r", row_number().over(w))
           .filter(col("_r") <= k).drop("_r")
-      }
-    Some(Generations.writeAndCommit(spark, next, mvTable,
-      tag = s"=cdcv=$head", expectedBase = Some(mvBase)))
+      })
+    }
   }
 
   /** One input of [[maintainJoinsAggOnce]]: a committed
@@ -716,21 +706,6 @@ object ChangeFeed {
     * on (its merge keys — distinct from the join keys linking it into
     * the chain). */
   final case class JoinSource(table: String, keys: Seq[String])
-
-  /** The applied version VECTOR of an N-way maintained join view, from
-    * its `=cdcvn=<v1>-<v2>-…` commit tag (or carried witness). All
-    * zeros when never maintained. */
-  def appliedVersionsN(spark: SparkSession, mvTable: String,
-      n: Int): Seq[Long] =
-    Generations.latest(spark, mvTable).toSeq
-      .flatMap(c => c.tag +: c.carried)
-      .filter(_.startsWith("=cdcvn="))
-      .flatMap { t =>
-        val parts = t.stripPrefix("=cdcvn=").split("-")
-        if (parts.length != n) None
-        else scala.util.Try(parts.toSeq.map(_.toLong)).toOption
-      }
-      .sortBy(_.max).lastOption.getOrElse(Seq.fill(n)(0L))
 
   /** [[maintainJoinAggOnce]] generalized to an N-way LINEAR join chain
     * `V = agg(S₁ ⋈ S₂ ⋈ … ⋈ Sₙ)` (inner equi-joins; `joinKeys(i)`
@@ -755,48 +730,37 @@ object ChangeFeed {
     require(sources.size >= 2, "need at least two join inputs")
     require(joinKeys.size == sources.size - 1,
       s"need ${sources.size - 1} join-key sets for ${sources.size} inputs")
-    val heads = sources.map(s =>
-      Generations.latest(spark, s.table).map(_.version).getOrElse(0L))
-    if (heads.contains(0L)) return None // every input must be committed
-    val applied = appliedVersionsN(spark, mvTable, sources.size)
-    if (applied.zip(heads).forall { case (a, h) => a >= h }) return None
-    val mvBase = Generations.latest(spark, mvTable).map(_.version).getOrElse(0L)
-    def headSnap(i: Int): DataFrame =
-      Generations.readAt(spark, sources(i).table, heads(i)).getOrElse(
-        throw new IllegalStateException(
-          s"${sources(i).table} v${heads(i)} (the latest commit) has no readable generation"))
-    val incremental: Option[DataFrame] =
-      if (applied.contains(0L)) None // never maintained: bootstrap
-      else {
-        val parts: Seq[Option[(DataFrame, DataFrame)]] =
-          sources.indices.map { i =>
-            for {
-              pre <- Generations.readAt(spark, sources(i).table, applied(i))
-              changes <-
-                if (applied(i) == heads(i)) Some(emptyFeed(pre))
-                else Generations.changesBetween(spark, sources(i).table,
-                  applied(i), heads(i), sources(i).keys,
-                  includePreimages = true)
-            } yield (pre, changes)
+    val heads = sources.map(s => latestVersion(spark, s.table))
+    tick(spark, mvTable, Watermark.chain(sources.size), heads) { applied =>
+      val incremental: Option[DataFrame] =
+        if (applied.contains(0L)) None // never maintained: bootstrap
+        else {
+          val parts: Seq[Option[(DataFrame, DataFrame)]] =
+            sources.indices.map { i =>
+              for {
+                pre <- Generations.readAt(spark, sources(i).table, applied(i))
+                changes <- feedSince(spark, sources(i).table,
+                  sources(i).keys, pre, applied(i), heads(i))
+              } yield (pre, changes)
+            }
+          if (parts.exists(_.isEmpty)) None // a GC gap somewhere: recompute
+          else Generations.read(spark, mvTable).map { mv =>
+            val ps = parts.map(_.get)
+            var (preAcc, feedAcc) = (ps.head._1,
+              Incremental.deltaJoin(ps.head._1, ps.head._2,
+                ps(1)._1, ps(1)._2, joinKeys.head))
+            preAcc = preAcc.join(ps(1)._1, joinKeys.head)
+            for (i <- 2 until sources.size) {
+              feedAcc = Incremental.deltaJoin(preAcc, feedAcc,
+                ps(i)._1, ps(i)._2, joinKeys(i - 1))
+              preAcc = preAcc.join(ps(i)._1, joinKeys(i - 1))
+            }
+            Incremental.maintainAgg(mv, feedAcc, mvKeys, sumCols, countCol)
           }
-        if (parts.exists(_.isEmpty)) None // a GC gap somewhere: recompute
-        else Generations.read(spark, mvTable).map { mv =>
-          val ps = parts.map(_.get)
-          var (preAcc, feedAcc) = (ps.head._1,
-            Incremental.deltaJoin(ps.head._1, ps.head._2,
-              ps(1)._1, ps(1)._2, joinKeys.head))
-          preAcc = preAcc.join(ps(1)._1, joinKeys.head)
-          for (i <- 2 until sources.size) {
-            feedAcc = Incremental.deltaJoin(preAcc, feedAcc,
-              ps(i)._1, ps(i)._2, joinKeys(i - 1))
-            preAcc = preAcc.join(ps(i)._1, joinKeys(i - 1))
-          }
-          Incremental.maintainAgg(mv, feedAcc, mvKeys, sumCols, countCol)
         }
-      }
-    val next = incremental.getOrElse(aggOf(sources.indices.map(headSnap)))
-    Some(Generations.writeAndCommit(spark, next, mvTable,
-      tag = s"=cdcvn=${heads.mkString("-")}", expectedBase = Some(mvBase)))
+      Some(incremental.getOrElse(aggOf(sources.indices.map(i =>
+        headSnap(spark, sources(i).table, heads(i))))))
+    }
   }
 
   /** EXACTLY-once maintenance of a COUNT-DISTINCT view: the stored
@@ -838,33 +802,27 @@ object ChangeFeed {
     *
     * Fact PRE-state reconstruction: the accumulated log at the applied
     * version = the live log span's commits ≤ that version — valid only
-    * when the span's snapshot boundary is not newer than the watermark
-    * and the window is a pure contiguous delta; otherwise (bootstrap,
-    * squash inside or after the watermark, GC gap on either side) the
-    * view recomputes from the current snapshots, which the law makes
-    * always correct. Exactly-once via the same `=cdcv2=<vF>-<vD>` pair
-    * watermark + expectedBase CAS as the snapshot form.
+    * when the window above the watermark is a pure delta
+    * ([[deltaWindow]]); otherwise (bootstrap, squash inside or after the
+    * watermark, GC gap on either side) the view recomputes from the
+    * current snapshots, which the law makes always correct.
+    * Exactly-once via the same `=cdcv2=<vF>-<vD>` pair watermark +
+    * expectedBase CAS as the snapshot form.
     */
   def maintainJoinAggOnceLog(spark: SparkSession,
       factLog: String, dimTable: String, dimKeys: Seq[String],
       joinKeys: Seq[String], mvTable: String, mvKeys: Seq[String],
-      sumCols: Map[String, String], countCol: String,
-      minCols: Map[String, String] = Map.empty,
-      maxCols: Map[String, String] = Map.empty,
-      leftOuter: Boolean = false)
-      (aggOf: (DataFrame, DataFrame) => DataFrame): Option[Generations.Commit] = {
+      sumCols: Map[String, String], countCol: String)
+      (aggOf: (DataFrame, DataFrame) => DataFrame): Option[Generations.Commit] =
     // headF is the LAST ENTRY of the one fact-log listing every read of
-    // this tick derives from (see maintainAggOnceLog — a separate
-    // latest() sample would let a concurrent commit into a view tagged
-    // =cdcv2=headF-· unrecorded, double-counting it next tick); headD is
-    // safe as a point sample because every dim read below is readAt /
-    // changesBetween pinned at the sampled versions.
+    // this tick derives from ([[tick]] step 1); headD is safe as a point
+    // sample because every dim read below is readAt / changesBetween
+    // pinned at the sampled versions.
     maintainJoinAggOnceLogAt(spark,
       Generations.logCommits(spark, factLog),
-      Generations.latest(spark, dimTable).map(_.version).getOrElse(0L),
+      latestVersion(spark, dimTable),
       factLog, dimTable, dimKeys, joinKeys, mvTable, mvKeys,
-      sumCols, countCol, minCols, maxCols, leftOuter)(aggOf)
-  }
+      sumCols, countCol)(aggOf)
 
   /** [[maintainJoinAggOnceLog]] body over an ALREADY-sampled fact-log
     * listing + dim head — package-private so ChangeFeedSpec can feed a
@@ -876,113 +834,38 @@ object ChangeFeed {
       span: Seq[Generations.Commit], headD: Long,
       factLog: String, dimTable: String, dimKeys: Seq[String],
       joinKeys: Seq[String], mvTable: String, mvKeys: Seq[String],
-      sumCols: Map[String, String], countCol: String,
-      minCols: Map[String, String] = Map.empty,
-      maxCols: Map[String, String] = Map.empty,
-      leftOuter: Boolean = false)
+      sumCols: Map[String, String], countCol: String)
       (aggOf: (DataFrame, DataFrame) => DataFrame): Option[Generations.Commit] = {
-    import org.apache.spark.sql.functions.lit
     val headF = span.lastOption.map(_.version).getOrElse(0L)
-    if (headF == 0L || headD == 0L) return None
-    val (appF, appD) = appliedVersions2(spark, mvTable)
-    if (appF >= headF && appD >= headD) return None
-    // stale-listing bail (r14 ADVICE): if a concurrent tick already
-    // advanced the view PAST either sampled head (appF > headF or
-    // appD > headD), this tick's span/dim listing predates that commit —
-    // proceeding would rebuild from a stale pre-state and commit a tag
-    // that REGRESSES the corresponding watermark, re-applying (and so
-    // double-counting) the commits in between on the next tick. The
-    // expectedBase CAS cannot fence this: the concurrent commit landed
-    // before mvBase is read below. Mirrors the single-source variant's
-    // strict applied>=head guard.
-    if (appF > headF || appD > headD) return None
-    val mvBase = Generations.latest(spark, mvTable).map(_.version).getOrElse(0L)
-    val window = span.filter(c => c.version > appF && c.version <= headF)
-    val preSpan = span.filter(_.version <= appF)
-    // the span IS the fact content at headF (≡ preSpan ∪ window)
-    def factAtHead: Option[DataFrame] =
-      Some(Generations.readSpan(spark, factLog, span))
-    // pre-state reconstructable: the live span STARTS at or below the
-    // watermark (the span begins at the last snapshot fold — a fold
-    // newer than the watermark has eaten the pre-state) and the window
-    // above it is a contiguous all-delta run
-    val factPreOk = appF > 0L && span.nonEmpty &&
-      span.head.version <= appF &&
-      window.forall(!Generations.isSnapshotCommit(_)) &&
-      window.map(_.version).toSet == (appF + 1 to headF).toSet
-    val incremental: Option[DataFrame] =
-      if (!factPreOk || appD == 0L) None
-      else for {
-        mv <- Generations.read(spark, mvTable)
-        dimPre <- Generations.readAt(spark, dimTable, appD)
-        dimChanges <-
-          if (appD == headD) Some(emptyFeed(dimPre))
-          else Generations.changesBetween(spark, dimTable, appD, headD,
-            dimKeys, includePreimages = true)
-      } yield {
-        val factPre = Generations.readSpan(spark, factLog, preSpan)
-        val factFeed =
-          if (window.isEmpty) emptyFeed(factPre)
-          else {
-            val delta = Generations.readSpan(spark, factLog, window)
-            delta.select(lit("insert").as("_change_type") +:
-              delta.columns.toSeq.map(delta.col): _*)
+    tick(spark, mvTable, Watermark.pair, Seq(headF, headD),
+        staleBail = true) { applied =>
+      val Seq(appF, appD) = applied
+      val incremental: Option[DataFrame] =
+        if (appD == 0L) None
+        else deltaWindow(span, appF, headF).flatMap { window =>
+          for {
+            mv <- Generations.read(spark, mvTable)
+            dimPre <- Generations.readAt(spark, dimTable, appD)
+            dimChanges <- feedSince(spark, dimTable, dimKeys, dimPre,
+              appD, headD)
+          } yield {
+            val factPre = Generations.readSpan(spark, factLog,
+              span.filter(_.version <= appF))
+            val factFeed =
+              if (window.isEmpty) emptyFeed(factPre)
+              else inserts(Generations.readSpan(spark, factLog, window))
+            Incremental.maintainAgg(mv, Incremental.deltaJoin(factPre,
+              factFeed, dimPre, dimChanges, joinKeys),
+              mvKeys, sumCols, countCol)
           }
-        val feed =
-          if (leftOuter) Incremental.deltaJoinLeft(factPre, factFeed,
-            dimPre, dimChanges, joinKeys)
-          else Incremental.deltaJoin(factPre, factFeed, dimPre, dimChanges,
-            joinKeys)
-        if (minCols.isEmpty && maxCols.isEmpty)
-          Incremental.maintainAgg(mv, feed, mvKeys, sumCols, countCol)
-        else Incremental.maintainAggMinMax(mv, feed,
-          postSource = factAtHead.getOrElse(
-              throw new IllegalStateException(
-                s"$factLog span at v$headF vanished mid-tick"))
-            .join(Generations.readAt(spark, dimTable, headD).getOrElse(
-              throw new IllegalStateException(
-                s"$dimTable v$headD (the latest commit) has no readable generation")),
-              joinKeys, if (leftOuter) "left" else "inner"),
-          mvKeys, sumCols, countCol, minCols, maxCols)
-      }
-    val next = incremental.getOrElse {
-      aggOf(factAtHead.getOrElse(return None),
-        Generations.readAt(spark, dimTable, headD).getOrElse(
-          throw new IllegalStateException(
-            s"$dimTable v$headD (the latest commit) has no readable generation")))
+        }
+      // the span IS the fact content at headF
+      Some(incremental.getOrElse(aggOf(
+        Generations.readSpan(spark, factLog, span),
+        headSnap(spark, dimTable, headD))))
     }
-    Some(Generations.writeAndCommit(spark, next, mvTable,
-      tag = s"=cdcv2=$headF-$headD", expectedBase = Some(mvBase)))
   }
 
-  /** The EIGHTH streaming-IVM shape (r17 VERDICT #5): a maintained
-    * aggregate over TWO append-only event logs joined to each other —
-    * stream ⋈ stream (events ⋈ events self-enrichment), each side
-    * growing under its own committed event-time mark. Both change feeds
-    * are the unapplied delta commits read as inserts (the log
-    * observation of [[maintainAggOnceLog]], twice over), and the
-    * insert-only delta join
-    *
-    *   Δ(A ⋈ B) = ΔA ⋈ B_head ∪ A_pre ⋈ ΔB
-    *
-    * advances agg(A ⋈ B) exactly — ΔA⋈ΔB is counted once, inside the
-    * first term (B_head = B_pre ∪ ΔB), and both terms shuffle a
-    * delta-sized side against one base scan, never a full re-join.
-    * Exactly-once through the SAME `=cdcv2=<vA>-<vB>` pair watermark +
-    * expectedBase CAS as the log ⋈ dim shape (including its
-    * stale-listing bail); either pre-state failing the contiguity check
-    * (bootstrap, a fold inside the unapplied window, a gc gap)
-    * degrades to the always-correct recompute `aggOf(A_head, B_head)`.
-    */
-  /** The pair-builder is ANY function BILINEAR over unions —
-    * pairsOf(x ∪ y, B) ≡ pairsOf(x, B) ∪ pairsOf(y, B) and symmetrically
-    * on the right (every join is) — so beyond the plain equi-join this
-    * carries the TIME-BAND attribution shape
-    * ([[StreamingIvm.ingestAttributionBatch]]: clicks inside a
-    * purchase's window, RangeJoin-binned so the delta join never builds
-    * per-key cross products). `aggOfPairs` aggregates a pair frame; the
-    * recompute path is aggOfPairs(pairsOf(A_head, B_head)).
-    */
   /** Reserved marker column of FOLDED-AWAY summary rows inside a
     * stream⋈stream log ([[foldStreamJoinLogOnce]]): true on rows that
     * carry a pre-aggregated contribution of pairs no longer derivable
@@ -1081,10 +964,20 @@ object ChangeFeed {
     * Post-fold, the log the next 100 TB day appends to holds O(rows
     * inside the horizon + view keys), not the full event history.
     *
-    * Returns None when nothing is past the horizon (no commit) or the
-    * log is empty.
-    */
-  /** `mvTable` (optional): when given, the fold checks QUIESCENCE — the
+    * The fold is a PREFIX-SPLICE: it drops the maximal leading run of
+    * ENTIRELY-dead commits (no raw row at/above the horizon;
+    * summary-only fold commits qualify trivially and merge forward) by
+    * REFERENCE, committing only the merged summary rows under a
+    * `~keep=<firstKeptVersion>` splice tag
+    * ([[Generations.spliceKeepFrom]]). Fold I/O is then O(dropped
+    * prefix + summaries), NOT O(retained): kept commits are never
+    * rewritten — at 100 TB/day retention the difference between a fold
+    * that rewrites the whole horizon and one that writes a few KB.
+    * Rows below the horizon stranded in a not-entirely-dead commit stay
+    * raw until their commit ages out (bounded by lateness + tick
+    * width — admission guarantees a commit's raw span).
+    *
+    * `mvTable` (optional): when given, the fold checks QUIESCENCE — the
     * view has applied BOTH logs' heads as sampled before the content
     * reads, where commits past the applied marks that are themselves
     * quiescent folds count as applied (chain quiescence — folds stack)
@@ -1100,34 +993,21 @@ object ChangeFeed {
     * order (applied versions FIRST, then spans/content) makes the check
     * conservative under concurrent appends: anything landing after the
     * sample fails the equality and degrades the tag, never the result.
-    */
-  /** `splice` (default true): fold by PREFIX-SPLICE — drop the maximal
-    * leading run of ENTIRELY-dead commits (no raw row at/above the
-    * horizon; summary-only fold commits qualify trivially and merge
-    * forward) by REFERENCE, committing only the merged summary rows
-    * under a `~keep=<firstKeptVersion>` splice tag
-    * ([[Generations.spliceKeepFrom]]). Fold I/O is then O(dropped
-    * prefix + summaries), NOT O(retained): kept commits are never
-    * rewritten — at 100 TB/day retention the difference between a fold
-    * that rewrites the whole horizon and one that writes a few KB.
-    * Rows below the horizon stranded in a not-entirely-dead commit stay
-    * raw until their commit ages out (bounded by lateness + tick
-    * width — admission guarantees a commit's raw span). `splice =
-    * false` keeps the r18 full-rewrite fold: one new snapshot holding
-    * kept raws + summaries, which also drops the stranded boundary rows
-    * (what a compaction would do).
+    *
+    * Returns None when nothing is past the horizon (no commit) or the
+    * log is empty.
     */
   def foldStreamJoinLogOnce(spark: SparkSession, foldLog: String,
       otherLog: String, foldIsLeft: Boolean, horizonMicros: Long,
       tsCol: String, mvKeys: Seq[String], sumNames: Seq[String],
       countCol: String, mvTable: Option[String] = None,
-      maxRetries: Int = 5, splice: Boolean = true, minPrefix: Int = 1)
+      maxRetries: Int = 5)
       (pairsOf: (DataFrame, DataFrame) => DataFrame)
       (aggOfPairs: DataFrame => DataFrame): Option[Generations.Commit] = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, unix_micros}
     var attempt = 0
     while (true) {
-      val applied = mvTable.map(appliedVersions2(spark, _))
+      val applied = mvTable.map(appliedVersions(spark, _, Watermark.pair))
       val selfSpan = Generations.logCommits(spark, foldLog)
       val base = selfSpan.lastOption.map(_.version).getOrElse(return None)
       val otherSpan = Generations.logCommits(spark, otherLog)
@@ -1147,7 +1027,7 @@ object ChangeFeed {
         span.nonEmpty && v <= span.last.version &&
           span.filter(_.version > v)
             .forall(_.tag.startsWith("=sjfoldq="))
-      val quiescent = applied.exists { case (vA, vB) =>
+      val quiescent = applied.exists { case Seq(vA, vB) =>
         if (foldIsLeft) chainOk(selfSpan, vA) && chainOk(otherSpan, vB)
         else chainOk(otherSpan, vA) && chainOk(selfSpan, vB)
       }
@@ -1156,156 +1036,136 @@ object ChangeFeed {
       // null-ts rows (no event time) are never foldable: keep
       val keepPred = coalesce(
         unix_micros(col(tsCol)) >= horizonMicros, lit(true))
-      if (splice) {
-        // PREFIX-SPLICE: the maximal leading run of commits with no raw
-        // row surviving the keep predicate. Deadness is decided DRIVER-
-        // SIDE wherever commit metadata suffices (r20, guide §1.2/§6 —
-        // the probes were one Spark existence-scan job per prefix commit
-        // per tick): a `~so` splice commit is summary-only by
-        // construction (zero raw rows — trivially dead), a zero-row
-        // commit is trivially dead, and a raw-only commit's verdict
-        // falls out of its committed per-file ts stats (nullCount=0 ∧
-        // max<horizon ⇔ dead; a null-ts or ≥horizon row ⇔ alive — the
-        // SAME read data-skipping plans from). Only commits the
-        // metadata can't classify (mixed raw+summary content, absent/
-        // unusable stats) pay the bounded existence scan, which stops
-        // at the first survivor and never scans the kept tail.
-        def genDf(c: Generations.Commit): DataFrame =
-          Generations.readSpan(spark, foldLog, Seq(c))
-        val foldPath = new org.apache.hadoop.fs.Path(foldLog)
-        val foldFs = foldPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        def statsVerdict(c: Generations.Commit,
-            schemaCols: Set[String]): Option[Boolean] = {
-          if (c.tag.contains("~so")) return Some(true)
-          if (c.rows == 0L) return Some(true)
-          if (schemaCols.contains(GsumCol)) return None // mixed content
-          if (!schemaCols.contains(tsCol)) return Some(false) // raw, kept
-          graft.sinks.FileStats.read(foldFs, foldPath, c.gen) match {
-            case Some(entries) if entries.nonEmpty =>
-              val per = entries.map { e =>
-                if (e.rows == 0L) Some(true)
-                else e.cols.get(tsCol) match {
-                  case Some(s) if s.kind == "none" => Some(false) // null ts kept
-                  case Some(s) if s.nullCount > 0L => Some(false)
-                  case Some(s) if s.kind == "long" && s.nullCount == 0L =>
-                    Some(s.max.toLong < horizonMicros)
-                  case _ => None
-                }
+      // PREFIX-SPLICE: the maximal leading run of commits with no raw
+      // row surviving the keep predicate. Deadness is decided DRIVER-
+      // SIDE wherever commit metadata suffices (r20, guide §1.2/§6 —
+      // the probes were one Spark existence-scan job per prefix commit
+      // per tick): a `~so` splice commit is summary-only by
+      // construction (zero raw rows — trivially dead), a zero-row
+      // commit is trivially dead, and a raw-only commit's verdict
+      // falls out of its committed per-file ts stats (nullCount=0 ∧
+      // max<horizon ⇔ dead; a null-ts or ≥horizon row ⇔ alive — the
+      // SAME read data-skipping plans from). Only commits the
+      // metadata can't classify (mixed raw+summary content, absent/
+      // unusable stats) pay the bounded existence scan, which stops
+      // at the first survivor and never scans the kept tail.
+      def genDf(c: Generations.Commit): DataFrame =
+        Generations.readSpan(spark, foldLog, Seq(c))
+      val foldPath = new org.apache.hadoop.fs.Path(foldLog)
+      val foldFs = foldPath.getFileSystem(
+        spark.sparkContext.hadoopConfiguration)
+      def statsVerdict(c: Generations.Commit,
+          schemaCols: Set[String]): Option[Boolean] = {
+        if (c.tag.contains("~so")) return Some(true)
+        if (c.rows == 0L) return Some(true)
+        if (schemaCols.contains(GsumCol)) return None // mixed content
+        if (!schemaCols.contains(tsCol)) return Some(false) // raw, kept
+        graft.sinks.FileStats.read(foldFs, foldPath, c.gen) match {
+          case Some(entries) if entries.nonEmpty =>
+            val per = entries.map { e =>
+              if (e.rows == 0L) Some(true)
+              else e.cols.get(tsCol) match {
+                case Some(s) if s.kind == "none" => Some(false) // null ts kept
+                case Some(s) if s.nullCount > 0L => Some(false)
+                case Some(s) if s.kind == "long" && s.nullCount == 0L =>
+                  Some(s.max.toLong < horizonMicros)
+                case _ => None
               }
-              if (per.exists(_.contains(false))) Some(false)
-              else if (per.forall(_.contains(true))) Some(true)
-              else None
-            case _ => None
-          }
+            }
+            if (per.exists(_.contains(false))) Some(false)
+            else if (per.forall(_.contains(true))) Some(true)
+            else None
+          case _ => None
         }
-        val deadPrefix = selfSpan.iterator.map { c =>
-          val df = genDf(c)
-          val raw = rawCols(df, sumNames, countCol)
-          val hasTs = raw.columns.contains(tsCol)
-          val isDead = statsVerdict(c, df.columns.toSet).getOrElse {
-            if (hasTs) raw.filter(keepPred).isEmpty else raw.isEmpty
-          }
-          (c, isDead, hasTs)
-        }.takeWhile(_._2).toSeq
-        val prefixLen = deadPrefix.length
-        val anyRaw = deadPrefix.exists(_._3)
-        // nothing dead, or only the one standing summary commit (a
-        // re-splice of it alone would be a churn no-op), or not yet
-        // enough dead mass to be worth the lost-pair aggregation —
-        // `minPrefix` is the fold CADENCE dial: the deadness probes
-        // above are O(prefix) tiny existence scans, but the fold body
-        // reads the other log and joins dead × horizon, so it should
-        // run once per ~minPrefix ticks, not per tick
-        if (prefixLen == 0 || (!anyRaw && prefixLen <= 1) ||
-            prefixLen < minPrefix) return None
-        val content = Generations.readSpan(spark, foldLog,
-          selfSpan.take(prefixLen))
-        val oldSums = sumsOf(content, mvKeys, sumNames, countCol)
-        val lost =
-          if (!anyRaw) oldSums.get.limit(0) // consolidation-only fold
-          else {
-            val dead = rawCols(content, sumNames, countCol)
-            val otherRaw = rawCols(Generations.readLog(spark, otherLog)
-              .getOrElse(return None), sumNames, countCol)
-            aggOfPairs(
-              if (foldIsLeft) pairsOf(dead, otherRaw)
-              else pairsOf(otherRaw, dead))
-          }
-        val summaries = mergeAggs(lost, oldSums.toSeq, mvKeys, sumNames,
-          countCol).withColumn(GsumCol, lit(true))
-        // whole span dead → a full summary-only snapshot (no keep-from).
-        // `~so` (summary-only) marks that this commit's content is 100%
-        // _gsum rows BY CONSTRUCTION — the next tick's deadness walk
-        // classifies it driver-side with no probe job (r20). It rides
-        // BEFORE ~keep (spliceKeepFrom parses the tag's tail).
-        val tag = baseTag + "~so" + (if (prefixLen < selfSpan.length)
-          s"~keep=${selfSpan(prefixLen).version}" else "")
-        try return Some(Generations.writeAndCommit(spark, summaries,
-          foldLog, tag = tag, expectedBase = Some(base)))
-        catch {
-          case _: Generations.CommitConflictException
-            if attempt < maxRetries - 1 => attempt += 1
+      }
+      val deadPrefix = selfSpan.iterator.map { c =>
+        val df = genDf(c)
+        val raw = rawCols(df, sumNames, countCol)
+        val hasTs = raw.columns.contains(tsCol)
+        val isDead = statsVerdict(c, df.columns.toSet).getOrElse {
+          if (hasTs) raw.filter(keepPred).isEmpty else raw.isEmpty
         }
-      } else {
-        val content = Generations.readLog(spark, foldLog)
-          .getOrElse(return None)
-        // raw rows carry ONLY raw columns (the summary-machinery names
-        // are reserved): pair-builders that keep all columns stay
-        // schema-stable across folds, and the re-written keep side does
-        // not accrete null agg columns fold over fold
-        val raw = rawCols(content, sumNames, countCol)
-        val dead = raw.filter(unix_micros(col(tsCol)) < horizonMicros)
-        if (dead.isEmpty) return None
-        val keep = raw.filter(keepPred)
-        val otherRaw = rawCols(Generations.readLog(spark, otherLog)
-          .getOrElse(return None), sumNames, countCol)
-        val lost = aggOfPairs(
-          if (foldIsLeft) pairsOf(dead, otherRaw)
-          else pairsOf(otherRaw, dead))
-        val oldSums = sumsOf(content, mvKeys, sumNames, countCol)
-        val summaries = mergeAggs(lost, oldSums.toSeq, mvKeys, sumNames,
-          countCol).withColumn(GsumCol, lit(true))
-        val folded = keep.unionByName(summaries,
-          allowMissingColumns = true)
-        try return Some(Generations.writeAndCommit(spark, folded, foldLog,
-          tag = baseTag, expectedBase = Some(base)))
-        catch {
-          case _: Generations.CommitConflictException
-            if attempt < maxRetries - 1 => attempt += 1
+        (c, isDead, hasTs)
+      }.takeWhile(_._2).toSeq
+      val prefixLen = deadPrefix.length
+      val anyRaw = deadPrefix.exists(_._3)
+      // nothing dead, or only the one standing summary commit (a
+      // re-splice of it alone would be a churn no-op)
+      if (prefixLen == 0 || (!anyRaw && prefixLen <= 1)) return None
+      val content = Generations.readSpan(spark, foldLog,
+        selfSpan.take(prefixLen))
+      val oldSums = sumsOf(content, mvKeys, sumNames, countCol)
+      val lost =
+        if (!anyRaw) oldSums.get.limit(0) // consolidation-only fold
+        else {
+          val dead = rawCols(content, sumNames, countCol)
+          val otherRaw = rawCols(Generations.readLog(spark, otherLog)
+            .getOrElse(return None), sumNames, countCol)
+          aggOfPairs(
+            if (foldIsLeft) pairsOf(dead, otherRaw)
+            else pairsOf(otherRaw, dead))
         }
+      val summaries = mergeAggs(lost, oldSums.toSeq, mvKeys, sumNames,
+        countCol).withColumn(GsumCol, lit(true))
+      // whole span dead → a full summary-only snapshot (no keep-from).
+      // `~so` (summary-only) marks that this commit's content is 100%
+      // _gsum rows BY CONSTRUCTION — the next tick's deadness walk
+      // classifies it driver-side with no probe job (r20). It rides
+      // BEFORE ~keep (spliceKeepFrom parses the tag's tail).
+      val tag = baseTag + "~so" + (if (prefixLen < selfSpan.length)
+        s"~keep=${selfSpan(prefixLen).version}" else "")
+      try return Some(Generations.writeAndCommit(spark, summaries,
+        foldLog, tag = tag, expectedBase = Some(base)))
+      catch {
+        case _: Generations.CommitConflictException
+          if attempt < maxRetries - 1 => attempt += 1
       }
     }
     throw new IllegalStateException("unreachable")
   }
 
+  /** The EIGHTH streaming-IVM shape (r17 VERDICT #5): a maintained
+    * aggregate over TWO append-only event logs joined to each other —
+    * stream ⋈ stream (events ⋈ events self-enrichment), each side
+    * growing under its own committed event-time mark. Both change feeds
+    * are the unapplied delta commits read as inserts (the log
+    * observation of [[maintainAggOnceLog]], twice over), and the
+    * insert-only delta join
+    *
+    *   Δ(A ⋈ B) = ΔA ⋈ B_head ∪ A_pre ⋈ ΔB
+    *
+    * advances agg(A ⋈ B) exactly — ΔA⋈ΔB is counted once, inside the
+    * first term (B_head = B_pre ∪ ΔB), and both terms shuffle a
+    * delta-sized side against one base scan, never a full re-join.
+    * Exactly-once through the SAME `=cdcv2=<vA>-<vB>` pair watermark +
+    * expectedBase CAS as the log ⋈ dim shape (including its
+    * stale-listing bail); either pre-state failing the contiguity check
+    * (bootstrap, a fold inside the unapplied window, a gc gap)
+    * degrades to the always-correct recompute `aggOf(A_head, B_head)`.
+    *
+    * The pair-builder is ANY function BILINEAR over unions —
+    * pairsOf(x ∪ y, B) ≡ pairsOf(x, B) ∪ pairsOf(y, B) and symmetrically
+    * on the right (every join is) — so beyond the plain equi-join this
+    * carries the TIME-BAND attribution shape
+    * ([[StreamingIvm.ingestAttributionBatch]]: clicks inside a
+    * purchase's window, RangeJoin-binned so the delta join never builds
+    * per-key cross products). `aggOfPairs` aggregates a pair frame; the
+    * recompute path is aggOfPairs(pairsOf(A_head, B_head)).
+    */
   def maintainStreamJoinOnceLogs(spark: SparkSession, logA: String,
       logB: String, mvTable: String,
       mvKeys: Seq[String], sumCols: Map[String, String], countCol: String)
       (pairsOf: (DataFrame, DataFrame) => DataFrame)
       (aggOfPairs: DataFrame => DataFrame)
       : Option[Generations.Commit] = {
-    import org.apache.spark.sql.functions.lit
     lastMaintainIncremental.set(false)
     val spanA = Generations.logCommits(spark, logA)
     val spanB = Generations.logCommits(spark, logB)
     val headA = spanA.lastOption.map(_.version).getOrElse(0L)
     val headB = spanB.lastOption.map(_.version).getOrElse(0L)
-    if (headA == 0L || headB == 0L) return None
-    val (appA, appB) = appliedVersions2(spark, mvTable)
-    if (appA >= headA && appB >= headB) return None
-    // stale-listing bail — same race as maintainJoinAggOnceLogAt: a
-    // concurrent tick that advanced the view past either sampled head
-    // makes this tick's listings pre-date that commit; proceeding would
-    // regress the pair watermark and double-apply next tick
-    if (appA > headA || appB > headB) return None
-    val mvBase = Generations.latest(spark, mvTable)
-      .map(_.version).getOrElse(0L)
     def contentOf(log: String, span: Seq[Generations.Commit]): DataFrame =
       Generations.readSpan(spark, log, span)
-    def insertsOf(df: DataFrame): DataFrame =
-      df.select(lit("insert").as("_change_type") +:
-        df.columns.toSeq.map(df.col): _*)
+    val sumNames = sumCols.keys.toSeq
     // FOLD-AWARE windows: a QUIESCENT fold snapshot (`=sjfoldq=`, taken
     // with the view's chain quiescence proven) at ANY version past the
     // applied mark is a content-rewrite of precisely the applied state
@@ -1322,75 +1182,64 @@ object ChangeFeed {
     // recompute.
     // the governing snapshot is the NEWEST snapshot-kind commit in the
     // span — for a splice fold that is mid-span (kept commits sit
-    // beneath it); for a rewrite fold it is the span head; either way
-    // everything at/below it is pre-side content and the window starts
-    // after it
+    // beneath it); everything at/below it is pre-side content and the
+    // window starts after it
     // belt-and-braces: every commit between the applied mark and the
     // governing snapshot must itself be a quiescent fold (the fold's
     // own chain proof already implies this through watermark
     // monotonicity; re-checking here costs nothing and keeps a
     // manually-interleaved squash/append from ever resuming unsoundly)
-    def foldResume(span: Seq[Generations.Commit],
-        app: Long): Option[Generations.Commit] =
+    def effApp(span: Seq[Generations.Commit], app: Long): Long =
       span.filter(Generations.isSnapshotCommit).lastOption
         .filter(c => c.version > app && c.tag.startsWith("=sjfoldq=") &&
           span.forall(x => x.version <= app || x.version > c.version ||
             x.tag.startsWith("=sjfoldq=")))
-    def effApp(span: Seq[Generations.Commit], app: Long): Long =
-      foldResume(span, app).map(_.version).getOrElse(app)
-    val effA = effApp(spanA, appA)
-    val effB = effApp(spanB, appB)
-    val winA = spanA.filter(c => c.version > effA && c.version <= headA)
-    val winB = spanB.filter(c => c.version > effB && c.version <= headB)
-    def preOk(span: Seq[Generations.Commit], eff: Long, head: Long,
-        win: Seq[Generations.Commit]): Boolean =
-      eff > 0L && span.nonEmpty && span.head.version <= eff &&
-        win.forall(!Generations.isSnapshotCommit(_)) &&
-        win.map(_.version).toSet == (eff + 1 to head).toSet
-    val incremental: Option[DataFrame] =
-      if (!preOk(spanA, effA, headA, winA) ||
-          !preOk(spanB, effB, headB, winB)) None
-      else if (winA.isEmpty && winB.isEmpty) {
-        // fold-only tick: the unapplied commits are quiescent folds —
-        // content-invisible — so only the pair watermark advances
-        lastMaintainIncremental.set(true)
-        Generations.read(spark, mvTable)
-      }
-      else Generations.read(spark, mvTable).map { mv =>
-        // pre-sides strip folded summary rows (they are already in the
-        // view; only raw rows pair)
-        val sumNames0 = sumCols.keys.toSeq
-        val preA = rawCols(contentOf(logA,
-          spanA.filter(_.version <= effA)), sumNames0, countCol)
-        val bHead = rawCols(contentOf(logB, spanB), sumNames0, countCol)
-        val pairs = Seq(
-          if (winA.isEmpty) None
-          else Some(pairsOf(contentOf(logA, winA), bHead)),
-          if (winB.isEmpty) None
-          else Some(pairsOf(preA, contentOf(logB, winB)))
-        ).flatten
-        lastMaintainIncremental.set(true)
-        val feed = insertsOf(pairs.reduce(_ unionByName _))
-        Incremental.maintainAgg(mv, feed, mvKeys, sumCols, countCol)
-      }
-    val next = incremental.getOrElse {
-      // recompute = agg over the pairs still derivable from raw rows,
-      // plus both logs' folded summaries (exactly the pairs a fold
-      // removed the raw material for) — folded ≡ raw by construction
-      lastMaintainIncremental.set(false)
-      val cA = contentOf(logA, spanA)
-      val cB = contentOf(logB, spanB)
-      val sumNames = sumCols.keys.toSeq
-      mergeAggs(aggOfPairs(pairsOf(rawCols(cA, sumNames, countCol),
-          rawCols(cB, sumNames, countCol))),
-        (sumsOf(cA, mvKeys, sumNames, countCol) ++
-          sumsOf(cB, mvKeys, sumNames, countCol)).toSeq,
-        mvKeys, sumNames, countCol)
+        .map(_.version).getOrElse(app)
+    tick(spark, mvTable, Watermark.pair, Seq(headA, headB),
+        staleBail = true) { applied =>
+      val effA = effApp(spanA, applied(0))
+      val effB = effApp(spanB, applied(1))
+      val incremental: Option[DataFrame] =
+        (deltaWindow(spanA, effA, headA), deltaWindow(spanB, effB, headB)) match {
+          case (Some(winA), Some(winB)) if winA.isEmpty && winB.isEmpty =>
+            // fold-only tick: the unapplied commits are quiescent folds —
+            // content-invisible — so only the pair watermark advances
+            lastMaintainIncremental.set(true)
+            Generations.read(spark, mvTable)
+          case (Some(winA), Some(winB)) =>
+            Generations.read(spark, mvTable).map { mv =>
+              // pre-sides strip folded summary rows (they are already in
+              // the view; only raw rows pair)
+              val preA = rawCols(contentOf(logA,
+                spanA.filter(_.version <= effA)), sumNames, countCol)
+              val bHead = rawCols(contentOf(logB, spanB), sumNames, countCol)
+              val pairs = Seq(
+                if (winA.isEmpty) None
+                else Some(pairsOf(contentOf(logA, winA), bHead)),
+                if (winB.isEmpty) None
+                else Some(pairsOf(preA, contentOf(logB, winB)))
+              ).flatten
+              lastMaintainIncremental.set(true)
+              val feed = inserts(pairs.reduce(_ unionByName _))
+              Incremental.maintainAgg(mv, feed, mvKeys, sumCols, countCol)
+            }
+          case _ => None
+        }
+      Some(incremental.getOrElse {
+        // recompute = agg over the pairs still derivable from raw rows,
+        // plus both logs' folded summaries (exactly the pairs a fold
+        // removed the raw material for) — folded ≡ raw by construction
+        lastMaintainIncremental.set(false)
+        val cA = contentOf(logA, spanA)
+        val cB = contentOf(logB, spanB)
+        mergeAggs(aggOfPairs(pairsOf(rawCols(cA, sumNames, countCol),
+            rawCols(cB, sumNames, countCol))),
+          (sumsOf(cA, mvKeys, sumNames, countCol) ++
+            sumsOf(cB, mvKeys, sumNames, countCol)).toSeq,
+          mvKeys, sumNames, countCol)
+      })
     }
-    Some(Generations.writeAndCommit(spark, next, mvTable,
-      tag = s"=cdcv2=$headA-$headB", expectedBase = Some(mvBase)))
   }
-
   /** Source delta and maintained view in ONE atomic catalog commit —
     * the composition of [[maintainAggOnce]]'s incremental maintenance
     * with [[graft.sinks.Catalog.transact]]'s cross-table atomicity.
@@ -1429,9 +1278,7 @@ object ChangeFeed {
         case (Some(b), Some(view)) =>
           val changes = graft.operators.Merge.diff(b, after, sourceKeys,
             includePreimages = true)
-          if (minCols.isEmpty && maxCols.isEmpty)
-            Incremental.maintainAgg(view, changes, mvKeys, sumCols, countCol)
-          else Incremental.maintainAggMinMax(view, changes, after, mvKeys,
+          Incremental.maintainAggOrMinMax(view, changes, after, mvKeys,
             sumCols, countCol, minCols, maxCols)
         case _ => aggOf(after) // first delta or first view: bootstrap
       }
@@ -1455,9 +1302,7 @@ object ChangeFeed {
       sourceB: String, bKeys: Seq[String], bChangeset: DataFrame,
       joinKeys: Seq[String], mvTable: String, mvKeys: Seq[String],
       sumCols: Map[String, String], countCol: String,
-      minCols: Map[String, String] = Map.empty,
-      maxCols: Map[String, String] = Map.empty,
-      deleteCol: String = "_deleted", leftOuter: Boolean = false)
+      deleteCol: String = "_deleted")
       (aggOf: (DataFrame, DataFrame) => DataFrame): graft.sinks.Catalog.RootCommit =
     graft.sinks.Catalog.transact(spark, root) { txn =>
       val aBefore = txn.read(sourceA)
@@ -1472,14 +1317,9 @@ object ChangeFeed {
             includePreimages = true)
           val dB = graft.operators.Merge.diff(b0, bAfter, bKeys,
             includePreimages = true)
-          val feed =
-            if (leftOuter) Incremental.deltaJoinLeft(a0, dA, b0, dB, joinKeys)
-            else Incremental.deltaJoin(a0, dA, b0, dB, joinKeys)
-          if (minCols.isEmpty && maxCols.isEmpty)
-            Incremental.maintainAgg(view, feed, mvKeys, sumCols, countCol)
-          else Incremental.maintainAggMinMax(view, feed,
-            aAfter.join(bAfter, joinKeys, if (leftOuter) "left" else "inner"),
-            mvKeys, sumCols, countCol, minCols, maxCols)
+          Incremental.maintainAgg(view,
+            Incremental.deltaJoin(a0, dA, b0, dB, joinKeys),
+            mvKeys, sumCols, countCol)
         case _ => aggOf(aAfter, bAfter) // first delta or first view
       }
       txn.put(mvTable, next)

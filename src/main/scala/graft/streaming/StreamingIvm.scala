@@ -283,7 +283,6 @@ object StreamingIvm {
       mvTable: String, tsCol: String = "ts", joinKey: String = "user_id",
       sumCol: String = "value", lateness: String = "2 hours",
       pairTtl: Option[String] = None, foldAfterCommits: Int = 0,
-      foldMinPrefix: Int = 1,
       failpoint: String => Unit = _ => ()): Option[Generations.Commit] = {
     def side(batch: DataFrame, log: String, vName: String,
         fp: String): Unit = {
@@ -348,11 +347,11 @@ object StreamingIvm {
           ChangeFeed.foldStreamJoinLogOnce(spark, logA, logB,
             foldIsLeft = true, horizonMicros = mB - latUs - ttlUs,
             "_tsa", Seq(joinKey), Seq("sum_value"), "n_pairs",
-            Some(mvTable), minPrefix = foldMinPrefix)(pairsOf)(aggOf)
+            Some(mvTable))(pairsOf)(aggOf)
           ChangeFeed.foldStreamJoinLogOnce(spark, logB, logA,
             foldIsLeft = false, horizonMicros = mA - latUs - ttlUs,
             "_tsb", Seq(joinKey), Seq("sum_value"), "n_pairs",
-            Some(mvTable), minPrefix = foldMinPrefix)(pairsOf)(aggOf)
+            Some(mvTable))(pairsOf)(aggOf)
         case _ => ()
       }
     }
@@ -379,7 +378,6 @@ object StreamingIvm {
       mvTable: String, tsCol: String = "ts", userCol: String = "user_id",
       valueCol: String = "value", window: String = "1 hour",
       lateness: String = "2 hours", foldAfterCommits: Int = 0,
-      foldMinPrefix: Int = 1,
       failpoint: String => Unit = _ => ()): Option[Generations.Commit] = {
     val winUs = intervalMicros(window)
     def side(batch: DataFrame, log: String, vName: String,
@@ -410,7 +408,7 @@ object StreamingIvm {
         (Generations.logCommits(spark, logC).size > foldAfterCommits ||
           Generations.logCommits(spark, logP).size > foldAfterCommits))
       foldAttributionLogs(spark, logC, logP, tsCol, userCol, window,
-        lateness, mvTable = Some(mvTable), minPrefix = foldMinPrefix)
+        lateness, mvTable = Some(mvTable))
     c
   }
 
@@ -458,7 +456,7 @@ object StreamingIvm {
   def foldAttributionLogs(spark: SparkSession, logC: String, logP: String,
       tsCol: String = "ts", userCol: String = "user_id",
       window: String = "1 hour", lateness: String = "2 hours",
-      mvTable: Option[String] = None, minPrefix: Int = 1)
+      mvTable: Option[String] = None)
       : (Option[Generations.Commit], Option[Generations.Commit]) = {
     val winUs = intervalMicros(window)
     val latUs = intervalMicros(lateness)
@@ -469,12 +467,11 @@ object StreamingIvm {
     val agg = attributionAggOf(userCol)
     val cFold = ChangeFeed.foldStreamJoinLogOnce(spark, logC, logP,
       foldIsLeft = true, horizonMicros = markP.get - latUs, tsCol,
-      Seq(userCol), Seq("sum_value"), "n_pairs", mvTable,
-      minPrefix = minPrefix)(pairs)(agg)
+      Seq(userCol), Seq("sum_value"), "n_pairs", mvTable)(pairs)(agg)
     val pFold = ChangeFeed.foldStreamJoinLogOnce(spark, logP, logC,
       foldIsLeft = false, horizonMicros = markC.get - latUs - winUs,
-      tsCol, Seq(userCol), Seq("sum_value"), "n_pairs", mvTable,
-      minPrefix = minPrefix)(pairs)(agg)
+      tsCol, Seq(userCol), Seq("sum_value"), "n_pairs", mvTable)(
+      pairs)(agg)
     (cFold, pFold)
   }
 
@@ -688,69 +685,18 @@ object StreamingIvm {
   }
 
   /** The streaming entry: `readStream` source → `foreachBatch` →
-    * [[ingestBatch]]. Checkpointed micro-batch ids + the `batch=<id>`
-    * replay witness give end-to-end exactly-once into the view.
+    * `tick(batch, batchId)`, with `tick` one of the `ingest*Batch`
+    * micro-batches, e.g. `start(events, checkpoint)((b, id) =>
+    * ingestBatch(b.sparkSession, b, id, logTable, mvTable))`.
+    * Checkpointed micro-batch ids + the `batch=<id>` replay witness give
+    * end-to-end exactly-once into the view.
     */
-  def start(events: DataFrame, logTable: String, mvTable: String,
-      checkpoint: String,
-      tsCol: String = "ts", keyCols: Seq[String] = Seq("event_type"),
-      sumCol: String = "value", bucketWidth: String = "1 hour",
-      lateness: String = "2 hours"): StreamingQuery =
+  def start(events: DataFrame, checkpoint: String)
+      (tick: (DataFrame, Long) => Unit): StreamingQuery =
     events.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        ingestBatch(batch.sparkSession, batch.toDF(), id, logTable, mvTable,
-          tsCol, keyCols, sumCol, bucketWidth, lateness)
-        ()
-      }
-      .start()
-
-  /** [[start]] for the KMV distinct-sketch view: `readStream` →
-    * `foreachBatch` → [[ingestKmvBatch]]. */
-  def startKmv(events: DataFrame, logTable: String, mvTable: String,
-      checkpoint: String,
-      tsCol: String = "ts", keyCol: String = "user_id",
-      bucketWidth: String = "1 hour", lateness: String = "2 hours",
-      k: Int = 64): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        ingestKmvBatch(batch.sparkSession, batch.toDF(), id, logTable,
-          mvTable, tsCol, keyCol, bucketWidth, lateness, k)
-        ()
-      }
-      .start()
-
-  /** [[start]] for the per-window top-k view: `readStream` →
-    * `foreachBatch` → [[ingestTopKBatch]]. */
-  def startTopK(events: DataFrame, logTable: String, mvTable: String,
-      checkpoint: String,
-      tsCol: String = "ts", entityCol: String = "user_id",
-      sumCol: String = "value", bucketWidth: String = "1 hour",
-      lateness: String = "2 hours", k: Int = 3): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        ingestTopKBatch(batch.sparkSession, batch.toDF(), id, logTable,
-          mvTable, tsCol, entityCol, sumCol, bucketWidth, lateness, k)
-        ()
-      }
-      .start()
-
-  /** [[start]] for the session-window view: `readStream` →
-    * `foreachBatch` → [[ingestSessionBatch]]. */
-  def startSessions(events: DataFrame, logTable: String, mvTable: String,
-      checkpoint: String,
-      tsCol: String = "ts", userCol: String = "user_id",
-      gap: String = "30 minutes",
-      lateness: String = "2 hours",
-      foldAfterCommits: Int = 0): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        ingestSessionBatch(batch.sparkSession, batch.toDF(), id, logTable,
-          mvTable, tsCol, userCol, gap, lateness, foldAfterCommits)
-        ()
+        tick(batch.toDF(), id)
       }
       .start()
 }

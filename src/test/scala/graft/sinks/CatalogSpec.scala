@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** The cross-table atomic-commit contract: a transaction's tables become
@@ -13,7 +11,7 @@ class CatalogSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkRoot(): String =
-    Files.createTempDirectory("graft-cat").resolve("cat").toString
+    suiteDir("cat").resolve("cat").toString
 
   private def tableSet(root: String, name: String): Set[Int] =
     Catalog.readTable(spark, root, name).map(_.as[Int].collect().toSet)

@@ -15,7 +15,7 @@ class GenerationsSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkTable(): String =
-    Files.createTempDirectory("graft-gen").resolve("t").toString
+    suiteDir("gen").resolve("t").toString
 
   test("writeAndCommit publishes snapshots with monotonic versions") {
     val t = mkTable()
@@ -102,7 +102,7 @@ class GenerationsSpec extends SparkSpec {
     // winner's — the lost update the concurrent-MERGE test caught once
     // under full-suite load. Pointers.publishNew must make the race
     // single-winner on every scheme; this hammers the primitive itself.
-    val dir = new Path(Files.createTempDirectory("graft-pubrace").toString)
+    val dir = new Path(suiteDir("pubrace").toString)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     for (i <- 0 until 500) {
       val dst = new Path(dir, s"v$i")
@@ -313,7 +313,7 @@ class GenerationsSpec extends SparkSpec {
 
   test("manifest compaction crash windows never lose or duplicate guards") {
     import org.apache.spark.sql.functions.col
-    val root = Files.createTempDirectory("graft-mc").resolve("out").toString
+    val root = suiteDir("mc").resolve("out").toString
     def names(prefix: String): Set[String] =
       ObjectSink.manifestAll(spark, root).get
         .filter(col("prefix") === prefix).select(col("name"))
@@ -431,7 +431,7 @@ class GenerationsSpec extends SparkSpec {
 
   test("TxnSink.parquetLog is exactly-once through a real restarted stream") {
     import graft.streaming.TxnSink
-    val dir = Files.createTempDirectory("graft-txn")
+    val dir = suiteDir("txn")
     val in = dir.resolve("in"); Files.createDirectories(in)
     val table = dir.resolve("t").toString
     val ck = dir.resolve("ck").toString

@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -18,7 +16,7 @@ import graft.SparkSpec
 class MetaPlanSpec extends SparkSpec {
 
   private def mkDir(name: String): String =
-    Files.createTempDirectory("graft-meta").resolve(name).toString
+    suiteDir("meta").resolve(name).toString
 
   /** A ts/value-clustered table with `nCommits` commits × `filesPer`
     * range-clustered files each, stats on `k`.

@@ -19,6 +19,10 @@ class ChangeFeedSpec extends SparkSpec {
   private def mkDir(name: String): String =
     suiteDir("cf").resolve(name).toString
 
+  private def applied(mv: String,
+      mark: ChangeFeed.Watermark = ChangeFeed.Watermark.single): Seq[Long] =
+    ChangeFeed.appliedVersions(spark, mv, mark)
+
   private def src(rows: (Long, Long, Long)*): DataFrame =
     rows.toDF("k", "grp", "v")
       .withColumn("v", col("v").cast("decimal(18,4)"))
@@ -98,7 +102,7 @@ class ChangeFeedSpec extends SparkSpec {
     // current and correct regardless
     maintain(t, mv)
     assert(mvState(mv) === recomputed(t))
-    assert(ChangeFeed.appliedVersion(spark, mv) === 2L)
+    assert(applied(mv) === Seq(2L))
   }
 
   test("GC past the applied version falls back to recompute, still exact") {
@@ -154,10 +158,10 @@ class ChangeFeedSpec extends SparkSpec {
     maintain(t, mv)
     Generations.writeAndCommit(spark, src((1, 10, 6)), t)
     maintain(t, mv)
-    assert(ChangeFeed.appliedVersion(spark, mv) === 2L)
+    assert(applied(mv) === Seq(2L))
     Generations.squash(spark, mv)
     Generations.gc(spark, mv, keep = 1, orphanGraceMs = 0L)
-    assert(ChangeFeed.appliedVersion(spark, mv) === 2L,
+    assert(applied(mv) === Seq(2L),
       "the cdcv watermark must ride the squash's carried witness")
     // and maintenance keeps working incrementally afterwards
     Generations.writeAndCommit(spark, src((1, 10, 6), (9, 90, 1)), t)
@@ -306,7 +310,7 @@ class ChangeFeedSpec extends SparkSpec {
       "replayed batch must commit nothing on either table")
     // crash BETWEEN append and maintenance: source advances, view lags…
     Generations.appendCommitted(spark, src((4, 20, 1)), t, "batch=2")
-    assert(ChangeFeed.appliedVersion(spark, mv) <
+    assert(applied(mv).head <
       Generations.latest(spark, t).get.version)
     // …and the next delivery catches the view up over BOTH deltas
     sink(src((5, 30, 2)), 3L)
@@ -462,7 +466,7 @@ class ChangeFeedSpec extends SparkSpec {
     val c2 = maintainJ()
     assert(c2.nonEmpty && c2.get.tag === "=cdcv2=2-1")
     assert(state() === expected())
-    assert(ChangeFeed.appliedVersions2(spark, mv) === ((2L, 1L)))
+    assert(applied(mv, ChangeFeed.Watermark.pair) === Seq(2L, 1L))
 
     // only the DIM side moves: ck=200 moves grp 20→30 (key-moving
     // update retracts its fact revenue from one group into another)
@@ -495,7 +499,7 @@ class ChangeFeedSpec extends SparkSpec {
     // the pair watermark survives a squash of the VIEW table
     Generations.squash(spark, mv)
     Generations.gc(spark, mv, keep = 1, orphanGraceMs = 0L)
-    assert(ChangeFeed.appliedVersions2(spark, mv) === ((4L, 3L)),
+    assert(applied(mv, ChangeFeed.Watermark.pair) === Seq(4L, 3L),
       "the cdcv2 watermark must ride the squash's carried witness")
     assert(maintainJ().isEmpty)
   }
@@ -800,7 +804,7 @@ class ChangeFeedSpec extends SparkSpec {
     // the vector watermark survives a squash of the view table
     Generations.squash(spark, mv)
     Generations.gc(spark, mv, keep = 1, orphanGraceMs = 0L)
-    assert(ChangeFeed.appliedVersionsN(spark, mv, 3) === Seq(2L, 2L, 2L))
+    assert(applied(mv, ChangeFeed.Watermark.chain(3)) === Seq(2L, 2L, 2L))
     assert(maintainC().isEmpty)
 
     // GC under any input's watermark: recompute fallback, still exact

@@ -437,6 +437,33 @@ class PipelineSpec extends SparkSpec {
     try assert(doneFiles.count() > 0) finally doneFiles.close()
   }}
 
+  test("batch handler: a poll claims the pollCap lowest-named queue files") { withTempDir("claim-order") { tmp =>
+    val src = tmp.resolve("src")
+    val root = tmp.resolve("ws").toString
+    setupSource(src)
+    Workspace.provision(root)
+    val u = src.toUri.toString
+    // written out of name order, so listing order cannot stand in for it
+    val names = Seq(5, 2, 6, 0, 3, 1, 4).map(i => f"part-$i%05d.json")
+    names.foreach { n =>
+      write(Paths.get(root, "queue", n),
+        s"""{"ID":"s-$n","URL":"${u}direct.bin","TYPE":"DIRECT","PATTERN":"out_$n.bin","UTC":"0","attempts":0}""")
+    }
+    val report = BatchHandler.runOnce(spark, root, pollCap = 5)
+    assert(report.attempted === 5)
+    def listed(dir: String): Set[String] = {
+      val s = Files.list(Paths.get(root, dir))
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.endsWith(".json")).toSet
+      } finally s.close()
+    }
+    val sorted = names.sorted
+    assert(listed("done") === sorted.take(5).toSet)
+    assert(listed("queue") === sorted.drop(5).toSet)
+  }}
+
   test("batch handler: poison lines land in quarantine/ before their file acks") { withTempDir("poison") { tmp =>
     val src = tmp.resolve("src")
     val root = tmp.resolve("ws").toString

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -21,7 +20,7 @@ class StreamingIvmFoldSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkDir(name: String): String =
-    Files.createTempDirectory("graft-sfold").resolve(name).toString
+    suiteDir("sfold").resolve(name).toString
 
   private def ts(h: Int, m: Int = 0) =
     Timestamp.valueOf(f"2026-01-01 $h%02d:$m%02d:00")

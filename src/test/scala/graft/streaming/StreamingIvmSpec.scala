@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -19,7 +18,7 @@ class StreamingIvmSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkDir(name: String): String =
-    Files.createTempDirectory("graft-sivm").resolve(name).toString
+    suiteDir("sivm").resolve(name).toString
 
   private def ts(h: Int, m: Int = 0) =
     Timestamp.valueOf(f"2026-01-01 $h%02d:$m%02d:00")
@@ -338,9 +337,10 @@ class StreamingIvmSpec extends SparkSpec {
     val log = mkDir("log"); val mv = mkDir("mv")
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Timestamp, Long)]
-    val q = StreamingIvm.startSessions(
-      input.toDF().toDF("event_id", "ts", "user_id"),
-      log, mv, mkDir("ckpt"))
+    val q = StreamingIvm.start(
+      input.toDF().toDF("event_id", "ts", "user_id"), mkDir("ckpt")) {
+      (b, id) => StreamingIvm.ingestSessionBatch(b.sparkSession, b, id, log, mv)
+    }
     try {
       input.addData((1L, ts(10), 1L), (2L, ts(10, 50), 1L))
       q.processAllAvailable()
@@ -358,9 +358,10 @@ class StreamingIvmSpec extends SparkSpec {
     val log = mkDir("log"); val mv = mkDir("mv")
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Timestamp, Long)]
-    val q = StreamingIvm.startKmv(
-      input.toDF().toDF("event_id", "ts", "user_id"),
-      log, mv, mkDir("ckpt"), k = 3)
+    val q = StreamingIvm.start(
+      input.toDF().toDF("event_id", "ts", "user_id"), mkDir("ckpt")) {
+      (b, id) => StreamingIvm.ingestKmvBatch(b.sparkSession, b, id, log, mv, k = 3)
+    }
     try {
       input.addData((1L, ts(10), 1L), (2L, ts(10, 10), 2L))
       q.processAllAvailable()
@@ -387,7 +388,9 @@ class StreamingIvmSpec extends SparkSpec {
     val input = MemoryStream[(Long, Timestamp, String, Double)]
     val q = StreamingIvm.start(
       input.toDF().toDF("event_id", "ts", "event_type", "value"),
-      log, mv, mkDir("ckpt"))
+      mkDir("ckpt")) {
+      (b, id) => StreamingIvm.ingestBatch(b.sparkSession, b, id, log, mv)
+    }
     try {
       input.addData((1L, ts(10), "click", 1.0), (2L, ts(12), "click", 2.0))
       q.processAllAvailable()
