@@ -152,6 +152,37 @@ class ChangeFeedSpec extends SparkSpec {
       Map("sum_v" -> "v"), "n")(aggOf).isEmpty)
   }
 
+  test("a whole tick landing inside another tick is applied once: the " +
+      "loser's CAS fails and its retry is a no-op") {
+    // the view's applied watermark, its CAS base and the view state the
+    // incremental body reads must all be one sample: a tick that lands
+    // between two samples of the view otherwise has its window applied
+    // twice, under a CAS base that already includes it
+    RaceFs.register(spark.sparkContext.hadoopConfiguration)
+    val dir = suiteDir("race")
+    val t = s"racefs://$dir/t"; val mv = s"racefs://$dir/mv"
+    def tick() = ChangeFeed.maintainAggOnceLog(spark, t, mv, Seq("grp"),
+      Map("sum_v" -> "v"), "n")(aggOf)
+    Generations.appendCommitted(spark, src((1, 10, 5)), t, "batch=0")
+    assert(tick().nonEmpty)
+    Generations.appendCommitted(spark, src((2, 20, 9)), t, "batch=1")
+
+    val (outcome, fired) = RaceFs.at(s"$mv/_commits", 2)(tick())(
+      scala.util.Try(tick()))
+    assert(fired, "the racing tick never ran")
+    outcome.failed.foreach {
+      case _: Generations.CommitConflictException => ()
+      case e => throw e
+    }
+    assert(tick().isEmpty, "the retry must find the view current")
+    val want = Map(10L -> (BigDecimal(5), 1L), 20L -> (BigDecimal(9), 1L))
+    assert(mvState(mv) === want)
+    assert(aggOf(Generations.readLog(spark, t).get)
+      .select(col("grp"), col("sum_v").cast("decimal(18,4)"), col("n"))
+      .as[(Long, BigDecimal, Long)].collect()
+      .map { case (g, s, n) => g -> (s, n) }.toMap === want)
+  }
+
   test("appliedVersion survives a squash of the view table") {
     val t = mkDir("t"); val mv = mkDir("mv")
     Generations.writeAndCommit(spark, src((1, 10, 5)), t)
