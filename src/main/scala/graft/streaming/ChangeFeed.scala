@@ -145,8 +145,12 @@ object ChangeFeed {
     */
   def appliedVersions(spark: SparkSession, mvTable: String,
       mark: Watermark): Seq[Long] =
-    mark.parse(Generations.latest(spark, mvTable).toSeq
-      .flatMap(c => c.tag +: c.carried))
+    appliedAt(Generations.latest(spark, mvTable), mark)
+
+  /** [[appliedVersions]] as recorded by the view commit `c`. */
+  private def appliedAt(c: Option[Generations.Commit],
+      mark: Watermark): Seq[Long] =
+    mark.parse(c.toSeq.flatMap(c => c.tag +: c.carried))
 
   private def latestVersion(spark: SparkSession, table: String): Long =
     Generations.latest(spark, table).map(_.version).getOrElse(0L)
@@ -210,8 +214,12 @@ object ChangeFeed {
     *     two listings be baked into a view whose watermark does not
     *     record it, and the next tick would re-apply it and
     *     double-count. No-op while any source is empty.
-    *  2. The applied watermark is read from the view's tag or its
-    *     carried witness.
+    *  2. ONE `latest()` sample of the view, `mvBase`, gives the applied
+    *     watermark (its tag or carried witness), the CAS base and the
+    *     view state the body reads (`view()`, a `readAt` pinned at
+    *     `mvBase`). Separate samples let a whole tick landing between
+    *     them have its window applied twice: read from the old watermark
+    *     onto the new state, under a CAS base that already includes it.
     *  3. No-op when the view has applied every head. With `staleBail`
     *     (the log-join forms), also when the view has already passed a
     *     sampled head: a concurrent tick completed after this tick's
@@ -219,25 +227,29 @@ object ChangeFeed {
     *     commit a tag that REGRESSES the watermark, re-applying the
     *     commits in between next tick. The expectedBase CAS cannot fence
     *     it: that commit landed before `mvBase` is read.
-    *  4. `mvBase` is captured.
-    *  5. `next(applied)` commits with the watermark tag of `heads` under
-    *     `expectedBase = Some(mvBase)`: the new state and the applied
-    *     versions publish in ONE commit, and a concurrent maintainer's
-    *     CAS loss throws [[Generations.CommitConflictException]] — redo
-    *     by calling again. `next` returning None (the view table
-    *     vanished mid-tick) commits nothing.
+    *  4. `next(applied, view)` commits with the watermark tag of `heads`
+    *     under `expectedBase = Some(mvBase)`: the new state and the
+    *     applied versions publish in ONE commit, and a concurrent
+    *     maintainer's CAS loss throws
+    *     [[Generations.CommitConflictException]] — redo by calling again.
+    *     `next` returning None (the view table vanished mid-tick) commits
+    *     nothing.
     */
   private def tick(spark: SparkSession, mvTable: String, mark: Watermark,
       heads: Seq[Long], staleBail: Boolean = false)
-      (next: Seq[Long] => Option[DataFrame]): Option[Generations.Commit] = {
+      (next: (Seq[Long], () => Option[DataFrame]) => Option[DataFrame])
+      : Option[Generations.Commit] = {
     if (heads.contains(0L)) return None
-    val applied = appliedVersions(spark, mvTable, mark)
+    val base = Generations.latest(spark, mvTable)
+    val applied = appliedAt(base, mark)
     val lag = applied.zip(heads)
     if (lag.forall { case (a, h) => a >= h }) return None
     if (staleBail && lag.exists { case (a, h) => a > h }) return None
-    val mvBase = latestVersion(spark, mvTable)
-    next(applied).map(Generations.writeAndCommit(spark, _, mvTable,
-      tag = mark.tag(heads), expectedBase = Some(mvBase)))
+    val mvBase = base.map(_.version).getOrElse(0L)
+    next(applied, () => base.flatMap(c =>
+        Generations.readAt(spark, mvTable, c.version)))
+      .map(Generations.writeAndCommit(spark, _, mvTable,
+        tag = mark.tag(heads), expectedBase = Some(mvBase)))
   }
 
   /** [[tick]] over ONE append-only log source: one commit listing is the
@@ -254,13 +266,12 @@ object ChangeFeed {
       : Option[Generations.Commit] = {
     val span = Generations.logCommits(spark, source)
     val head = span.lastOption.map(_.version).getOrElse(0L)
-    tick(spark, mvTable, Watermark.single, Seq(head)) { applied =>
+    tick(spark, mvTable, Watermark.single, Seq(head)) { (applied, view) =>
       def content = Generations.readSpan(spark, source, span)
       deltaWindow(span, applied.head, head) match {
         case Some(window) =>
           val delta = Generations.readSpan(spark, source, window)
-          Generations.read(spark, mvTable)
-            .map(incremental(_, delta, () => content))
+          view().map(incremental(_, delta, () => content))
         case None => Some(recompute(content))
       }
     }
@@ -290,9 +301,9 @@ object ChangeFeed {
       maxCols: Map[String, String] = Map.empty)
       (aggOf: DataFrame => DataFrame): Option[Generations.Commit] = {
     val head = latestVersion(spark, source)
-    tick(spark, mvTable, Watermark.single, Seq(head)) { applied =>
+    tick(spark, mvTable, Watermark.single, Seq(head)) { (applied, view) =>
       val incremental = if (applied.head == 0L) None else for {
-        mv <- Generations.read(spark, mvTable)
+        mv <- view()
         changes <- Generations.changesBetween(spark, source, applied.head,
           head, sourceKeys, includePreimages = true)
       } yield Incremental.maintainAggOrMinMax(mv, changes,
@@ -634,12 +645,12 @@ object ChangeFeed {
       (aggOf: (DataFrame, DataFrame) => DataFrame): Option[Generations.Commit] = {
     val (headA, headB) = (latestVersion(spark, sourceA),
       latestVersion(spark, sourceB))
-    tick(spark, mvTable, Watermark.pair, Seq(headA, headB)) { applied =>
+    tick(spark, mvTable, Watermark.pair, Seq(headA, headB)) { (applied, view) =>
       val Seq(appA, appB) = applied
       val incremental: Option[DataFrame] =
         if (appA == 0L || appB == 0L) None // never maintained: bootstrap
         else for {
-          mv <- Generations.read(spark, mvTable)
+          mv <- view()
           aPre <- Generations.readAt(spark, sourceA, appA)
           bPre <- Generations.readAt(spark, sourceB, appB)
           aChanges <- feedSince(spark, sourceA, aKeys, aPre, appA, headA)
@@ -683,12 +694,12 @@ object ChangeFeed {
     val head = latestVersion(spark, source)
     def narrow(df: DataFrame): DataFrame =
       if (viewCols.isEmpty) df else df.select(viewCols.map(col): _*)
-    tick(spark, mvTable, Watermark.single, Seq(head)) { applied =>
+    tick(spark, mvTable, Watermark.single, Seq(head)) { (applied, view) =>
       val incremental = if (applied.head == 0L) None else for {
-        view <- Generations.read(spark, mvTable)
+        top <- view()
         changes <- Generations.changesBetween(spark, source, applied.head,
           head, sourceKeys, includePreimages = true)
-      } yield Incremental.maintainTopK(view, changes,
+      } yield Incremental.maintainTopK(top, changes,
         headSnap(spark, source, head), mvKeys, orderCol, tieCol, k)
       Some(incremental.getOrElse {
         val w = org.apache.spark.sql.expressions.Window
@@ -731,7 +742,8 @@ object ChangeFeed {
     require(joinKeys.size == sources.size - 1,
       s"need ${sources.size - 1} join-key sets for ${sources.size} inputs")
     val heads = sources.map(s => latestVersion(spark, s.table))
-    tick(spark, mvTable, Watermark.chain(sources.size), heads) { applied =>
+    tick(spark, mvTable, Watermark.chain(sources.size), heads) {
+        (applied, view) =>
       val incremental: Option[DataFrame] =
         if (applied.contains(0L)) None // never maintained: bootstrap
         else {
@@ -744,7 +756,7 @@ object ChangeFeed {
               } yield (pre, changes)
             }
           if (parts.exists(_.isEmpty)) None // a GC gap somewhere: recompute
-          else Generations.read(spark, mvTable).map { mv =>
+          else view().map { mv =>
             val ps = parts.map(_.get)
             var (preAcc, feedAcc) = (ps.head._1,
               Incremental.deltaJoin(ps.head._1, ps.head._2,
@@ -838,13 +850,13 @@ object ChangeFeed {
       (aggOf: (DataFrame, DataFrame) => DataFrame): Option[Generations.Commit] = {
     val headF = span.lastOption.map(_.version).getOrElse(0L)
     tick(spark, mvTable, Watermark.pair, Seq(headF, headD),
-        staleBail = true) { applied =>
+        staleBail = true) { (applied, view) =>
       val Seq(appF, appD) = applied
       val incremental: Option[DataFrame] =
         if (appD == 0L) None
         else deltaWindow(span, appF, headF).flatMap { window =>
           for {
-            mv <- Generations.read(spark, mvTable)
+            mv <- view()
             dimPre <- Generations.readAt(spark, dimTable, appD)
             dimChanges <- feedSince(spark, dimTable, dimKeys, dimPre,
               appD, headD)
@@ -1196,7 +1208,7 @@ object ChangeFeed {
             x.tag.startsWith("=sjfoldq=")))
         .map(_.version).getOrElse(app)
     tick(spark, mvTable, Watermark.pair, Seq(headA, headB),
-        staleBail = true) { applied =>
+        staleBail = true) { (applied, view) =>
       val effA = effApp(spanA, applied(0))
       val effB = effApp(spanB, applied(1))
       val incremental: Option[DataFrame] =
@@ -1205,9 +1217,9 @@ object ChangeFeed {
             // fold-only tick: the unapplied commits are quiescent folds —
             // content-invisible — so only the pair watermark advances
             lastMaintainIncremental.set(true)
-            Generations.read(spark, mvTable)
+            view()
           case (Some(winA), Some(winB)) =>
-            Generations.read(spark, mvTable).map { mv =>
+            view().map { mv =>
               // pre-sides strip folded summary rows (they are already in
               // the view; only raw rows pair)
               val preA = rawCols(contentOf(logA,
