@@ -7,7 +7,7 @@ import java.util.concurrent.{Callable, ExecutionException, ExecutorService,
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 
 import graft.model.Task
 
@@ -18,10 +18,10 @@ import graft.model.Task
   * filters, which must never happen to a network fetch (SURVEY.md §4.3).
   * They live in `mapPartitions` over typed Datasets — one connection-ish
   * context per partition, up to 8 requests in flight per partition,
-  * results in input order, never collected to the driver. So a partition
-  * holds at most 8 fetched bodies at once. Retries under speculative
-  * execution stay safe because the sink is PUT-style idempotent
-  * (key = strategy/name).
+  * results in input order. A file's body goes from its fetch straight
+  * to its PUT and is never collected, so a partition holds at most 8
+  * bodies at once. Retries under speculative execution stay safe
+  * because the sink is PUT-style idempotent (key = strategy/name).
   *
   * Tests drive these with `file://` URLs only — no network (SURVEY §5.2).
   */
@@ -30,9 +30,10 @@ object Fetch {
   /** One fetched page/listing per task: (task, text | error). */
   case class PageResult(task: Task, text: String, error: String)
 
-  /** One fetched artifact: (task, sink key, body | error). */
-  case class FileResult(ID: String, URL: String, key: String,
-      body: Array[Byte], error: String)
+  /** One fetched artifact after its PUT: (task ID, URL, sink key,
+    * error). Bodiless: the body lands in the sink inside the call that
+    * fetched it ([[fetchAndPut]]). */
+  case class Landed(ID: String, URL: String, key: String, error: String)
 
   /** `urllib.request.urlopen(url).read()` equivalent: whole-body read.
     * The reference reads bodies fully into memory (`data_downloader.py:69`)
@@ -69,15 +70,23 @@ object Fetch {
     }
   }
 
-  /** Download each (ID, URL, key) row (X9 kernel). */
-  def fetchFiles(df: DataFrame): Dataset[FileResult] = {
+  /** Fetch each (ID, URL, key) row's body and hand it to `put(key, body)`
+    * in the same call (X9 kernel + K3 PUT, the reference's
+    * fetch-then-`put_object` loop), so no body outlives its call. A fetch
+    * error is captured in the row, as in [[fetchPages]]; a throw from
+    * `put` fails the Spark task, so every row without an error is in the
+    * sink.
+    */
+  def fetchAndPut(df: DataFrame)(put: (String, Array[Byte]) => Unit): Dataset[Landed] = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select("ID", "URL", "key").as[(String, String, String)]
       .mapPartitions { it =>
         overlapped(it) { case (id, url, key) =>
-          try FileResult(id, url, key, readBytes(url), null)
-          catch { case e: Exception => FileResult(id, url, key, null, errMsg(e)) }
+          val body = try Right(readBytes(url))
+            catch { case e: Exception => Left(errMsg(e)) }
+          body.foreach(put(key, _))
+          Landed(id, url, key, body.left.toOption.orNull)
         }
       }
   }

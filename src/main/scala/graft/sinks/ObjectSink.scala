@@ -2,10 +2,7 @@ package graft.sinks
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.fetch.Fetch.FileResult
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Partitioned object sink (reference K3, `data_downloader.py:102-107,132,
   * 170,195`): raw-blob fidelity — each artifact is written as its own
@@ -21,29 +18,26 @@ import graft.fetch.Fetch.FileResult
   * exist are skipped — completing the reference's unimplemented
   * duplicate-download guard (D1) at the storage layer.
   *
-  * Executed with `foreachPartition`: distributed, no driver collect.
+  * Each [[put]] runs on an executor inside the call that fetched its body
+  * ([[graft.fetch.Fetch.fetchAndPut]]): distributed, no body collected.
   */
 object ObjectSink {
 
-  def write(artifacts: Dataset[FileResult], root: String,
-      overwrite: String => Boolean): Unit = {
-    artifacts.foreachPartition { (it: Iterator[FileResult]) =>
-      it.foreach { a =>
-        if (a.error == null && a.body != null) {
-          val target = Paths.get(root, a.key)
-          Files.createDirectories(target.getParent)
-          if (overwrite(a.key) || !Files.exists(target)) {
-            val tmp = Files.createTempFile(target.getParent, ".tmp-", ".part")
-            var moved = false
-            try {
-              Files.write(tmp, a.body)
-              Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
-                StandardCopyOption.ATOMIC_MOVE)
-              moved = true
-            } finally if (!moved) Files.deleteIfExists(tmp)
-          }
-        }
-      }
+  /** PUT `body` at `<root>/<key>`. A failed write or move deletes its
+    * temp object and throws. */
+  def put(root: String, key: String, body: Array[Byte],
+      overwrite: Boolean): Unit = {
+    val target = Paths.get(root, key)
+    Files.createDirectories(target.getParent)
+    if (overwrite || !Files.exists(target)) {
+      val tmp = Files.createTempFile(target.getParent, ".tmp-", ".part")
+      var moved = false
+      try {
+        Files.write(tmp, body)
+        Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
+          StandardCopyOption.ATOMIC_MOVE)
+        moved = true
+      } finally if (!moved) Files.deleteIfExists(tmp)
     }
   }
 
@@ -60,20 +54,23 @@ object ObjectSink {
     */
   def manifestPath(root: String): String = s"$root/_manifest"
 
-  /** Append the successfully-fetched artifacts' names to the manifest.
-    * Call right after [[write]] with the same dataset, and only when the
-    * write saw at least one error-free artifact (count it there, e.g. with
-    * an `Observation`): an all-skipped/all-error batch must not conjure an
-    * empty delta file. On a failed append the next batch simply re-fetches
-    * and skip-writes (at-least-once), then re-appends.
+  /** Append `keys` (`<prefix>/<name>`, each an object already PUT) to the
+    * manifest as one delta file. Call only with a non-empty list: an
+    * all-skipped/all-error batch must not conjure an empty delta file. On
+    * a failed append the next batch simply re-fetches and skip-writes
+    * (at-least-once), then re-appends. Also seeds the manifest with the
+    * names a legacy sink's objects were found under (one bounded
+    * directory listing, [[existingNames]]), so every later batch takes
+    * the manifest path and the legacy objects stay guarded forever.
     */
-  def appendManifest(written: Dataset[FileResult], root: String): Unit =
-    written.filter(col("error").isNull && col("body").isNotNull)
-      .select(
-        regexp_extract(col("key"), "^(.*)/[^/]*$", 1).as("prefix"),
-        element_at(split(col("key"), "/"), -1).as("name"))
+  def appendManifest(spark: SparkSession, root: String,
+      keys: Seq[String]): Unit = {
+    import spark.implicits._
+    keys.map { k => val i = k.lastIndexOf('/'); (k.take(i), k.drop(i + 1)) }
+      .toDF("prefix", "name")
       .coalesce(1) // one delta file per append: names are poll-sized
       .write.mode("append").parquet(manifestPath(root))
+  }
 
   /** Root of the manifest's compacted-snapshot generation table (pointer-
     * file committed via [[Generations]] — no directory renames, so the
@@ -106,20 +103,6 @@ object ObjectSink {
       case (Some(s), Some(d)) => Some(s.unionByName(d))
       case (s, d)             => s.orElse(d)
     }
-  }
-
-  /** Seed the manifest with names discovered OUTSIDE it (a legacy sink's
-    * pre-manifest objects, found by one bounded directory listing) so
-    * every later batch takes the manifest path and the legacy objects
-    * stay guarded forever — without this, the first post-manifest batch
-    * would re-download everything the manifest never saw.
-    */
-  def seedManifest(spark: SparkSession, root: String, prefix: String,
-      names: Seq[String]): Unit = {
-    import spark.implicits._
-    if (names.nonEmpty)
-      names.toDF("name").select(lit(prefix).as("prefix"), col("name"))
-        .write.mode("append").parquet(manifestPath(root))
   }
 
   /** Compact the manifest: fold the accumulated delta files — one small

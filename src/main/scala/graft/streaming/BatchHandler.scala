@@ -19,9 +19,12 @@ import graft.sources.Queue
   * claim and ack leaves files in `processing/` for a sweeper to re-queue
   * — at-least-once, made effectively-once by the idempotent object sink.
   *
-  * A poll reads its claimed files once: the corrupt-line quarantine and
-  * every count ride the passes [[DownloadPipeline.processBatch]] runs
-  * anyway. Quarantine is written after processing and before the ack.
+  * A poll is driver-sized: at most `pollCap` queue files.
+  * [[DownloadPipeline.processBatch]] reads the claimed
+  * files once, with one `collect()` that routes them and fills the
+  * corrupt-line observation, then fetches and PUTs every artifact in one
+  * pass over that local relation, caching nothing. Quarantine is written
+  * after processing and before the ack.
   */
 object BatchHandler {
 
@@ -70,7 +73,7 @@ object BatchHandler {
     // `quarantine/` dir BEFORE the ack, so every dropped poison line has
     // a durable, inspectable record (the DLQ-body analog). They are
     // collected by an observation on the parsed claim, which the batch's
-    // route aggregate fills as it reads the claim — the claim is parsed
+    // route collect fills as it reads the claim — the claim is parsed
     // once — and written after processing: a batch that throws leaves
     // its files in processing/, and their redelivery quarantines them.
     val corruptCol = Schemas.taskCorruptCol

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -19,7 +19,7 @@ import graft.operators.Iterate.MaterializeOps
 /** The download pipeline (reference `data_downloader.handler`, traced in
   * SURVEY.md §3.2), batch + streaming forms. One pass per batch:
   *
-  *   tasks → route (R1) + E4 split, counted in ONE aggregate
+  *   tasks → route (R1) + E4 split: ONE collect of the poll's tasks
   *     → ONE page/listing fetch over the LINKS, LINKS_OVERWRITE and
   *       FTP_FILES tasks
   *     → ONE candidates frame (ID, URL, key, overwrite), key = prefix/name:
@@ -31,7 +31,8 @@ import graft.operators.Iterate.MaterializeOps
   *     → ONE dup-guard anti-join on key for the non-overwrite rows (D1;
   *       its per-prefix bootstrap/Bloom decisions are made once per batch
   *       from one manifest read, see [[processBatch]])
-  *     → ONE file fetch → ONE sink write → ONE manifest append
+  *     → ONE fetch-and-PUT call per file, its bodiless rows collected once
+  *     → ONE manifest append from the collected keys
   * errors, collected by the passes above → alert sink (E2) + catalog
   * Active:=2 applied to the live catalog (E1) + handled-error ack (the
   * reference's poison-pill ack, data_downloader.py:58: flagged sources
@@ -63,8 +64,24 @@ object DownloadPipeline {
     */
   val bloomGuardThreshold = 100000
 
+  /** Every sink prefix, in a fixed order: the manifest pin counts each of
+    * them whatever the batch's strategy mix, so its generated code is the
+    * same for every batch. */
+  private val sinkPrefixes = Schemas.sinkPrefix.values.toSeq.sorted
+
   /** Process one batch of task rows end-to-end. `root` is the workspace
     * (out/, alerts/, dead_letter/ live under it).
+    *
+    * A poll is driver-sized (at most `pollCap` queue files, see
+    * [[BatchHandler.runOnce]]), so its tasks are routed with ONE
+    * `collect()`. The attempted and dead-letter counts, the unknown-type
+    * errors and the guarded sink prefixes come from those rows, and the
+    * rest of the batch is planned over them as a local relation. Every
+    * artifact is then fetched and PUT in one call
+    * ([[graft.fetch.Fetch.fetchAndPut]]); its bodiless rows are collected
+    * once, and the manifest is appended from their keys, so every object
+    * lands before its manifest row. Nothing is cached: each page and each
+    * file is fetched by the one action that needs it.
     *
     * The D1 guard's "existing" side is the sink's names MANIFEST
     * ([[ObjectSink.manifestAll]]) — a prefix-pruned distributed parquet
@@ -78,14 +95,12 @@ object DownloadPipeline {
     * forever; above [[bloomGuardThreshold]] existing rows the guard routes
     * through a Bloom pre-filter.
     *
-    * Counts and error rows ride the passes that run anyway: the route
-    * aggregate collects the unknown-type errors, the manifest pin counts
-    * its rows per prefix, the page fetch and the sink write observe their
-    * error rows (ID, URL, REASON), the candidates frame its keys. Every
-    * error list is bounded by the poll's size, so the alerts are written
-    * from one local frame and the catalog is flagged by a map-only
-    * projection over the collected IDs — the error path re-reads no
-    * cached pass and shuffles nothing. Each step's Spark jobs carry an
+    * Counts and error rows ride the passes that run anyway: the manifest
+    * pin counts its rows per prefix, the page fetch observes its error
+    * rows (ID, URL, REASON), the candidates frame its keys. Every error
+    * list is bounded by the poll's size, so the alerts are written from
+    * one local frame and the catalog is flagged by a map-only projection
+    * over the collected IDs. Each step's Spark jobs carry an
     * `ingest: <step>` job description (see [[step]]).
     */
   def processBatch(tasks: DataFrame, root: String,
@@ -94,31 +109,25 @@ object DownloadPipeline {
     import spark.implicits._
     val out = s"$root/out"
 
-    // Side-effecting fetch datasets are cached so each fetch runs once per
-    // batch; they MUST be unpersisted when the batch ends, failed or not,
-    // or Spark's plan-based CacheManager would serve a later identical
-    // batch from stale cache (observed: re-run of the same task set never
-    // re-fetched). The pinned manifest snapshot is released with them.
-    val caches = ArrayBuffer.empty[Dataset[_]]
-    def tracked[T](ds: Dataset[T]): Dataset[T] = { caches += ds.cache(); ds }
+    // The pinned manifest snapshot is released when the batch ends,
+    // failed or not.
     var manifest: Option[DataFrame] = None
     try {
-      val routed = tracked(Router.route(tasks)
-        .withColumn("attempts", coalesce(col("attempts"), lit(0))))
+      val routing = Router.route(tasks)
+        .withColumn("attempts", coalesce(col("attempts"), lit(0)))
+      val rows = step(spark, "route")(routing.collect()).toSeq
+      val routed = spark.createDataFrame(rows.asJava, routing.schema)
       // E4: exhausted tasks dead-letter before any work is done.
       val (live, dead) = ErrorPath.splitRetryable(routed, maxAttempts)
-      val retryable = col("attempts") < maxAttempts
-      val route = step(spark, "route")(routed
-        .agg(count(lit(1)), count(when(!retryable, 1)),
-          errorList(retryable && col("is_error"), col("ID"), col("URL"),
-            Router.unknownType(col("TYPE"))),
-          collect_set(when(retryable && !col("is_error") && !col("overwrite"),
-            col("strategy"))))
-        .head())
-      val (attempted, deadCount) = (route.getLong(0), route.getLong(1))
-      val routeErrors = errorRows(route.getSeq[Row](2))
-      val guardedPrefixes = route.getSeq[String](3)
-      if (deadCount > 0) step(spark, "dead letter") {
+      val (retryable, exhausted) =
+        rows.partition(_.getAs[Int]("attempts") < maxAttempts)
+      val routeErrors = retryable.filter(_.getAs[Boolean]("is_error"))
+        .map(r => (r.getAs[String]("ID"), r.getAs[String]("URL"),
+          Router.unknownType(r.getAs[String]("TYPE"))))
+      val guardedPrefixes = retryable
+        .filter(r => !r.getAs[Boolean]("is_error") && !r.getAs[Boolean]("overwrite"))
+        .map(_.getAs[String]("strategy")).distinct
+      if (exhausted.nonEmpty) step(spark, "dead letter") {
         dead.select(to_json(struct(col("ID"), col("URL"), col("TYPE"),
             col("PATTERN"), col("UTC"), col("attempts"))).as("value"))
           .write.mode("append").text(s"$root/dead_letter")
@@ -126,35 +135,33 @@ object DownloadPipeline {
 
       val valid = live.filter(!col("is_error"))
       val pageObs = Observation()
-      val pages = tracked(Fetch.fetchPages(valid
+      val pages = Fetch.fetchPages(valid
           .filter(col("TYPE").isin("LINKS", "LINKS_OVERWRITE", "FTP_FILES"))
           .select(col("ID"), col("URL"), col("TYPE"), col("PATTERN"),
             col("UTC"), col("attempts"))
           .as[Task])
         .observe(pageObs, errorList(col("error").isNotNull, col("task.ID"),
-          col("task.URL"), col("error"))))
-      val fetchedPages = pages.filter(col("error").isNull)
+          col("task.URL"), col("error")))
+      // anchors and listing names in one branch off the one page fetch
+      val globRegex = udf((p: String) => Globs.globToRegex(p))
+      val isListing = col("TYPE") === "FTP_FILES"
+      val paged = pages.filter(col("error").isNull)
         .select(col("task.ID").as("ID"), col("task.TYPE").as("TYPE"),
           col("task.URL").as("base"), col("task.PATTERN").as("pattern"),
           col("text"))
-      val isListing = col("TYPE") === "FTP_FILES"
-      val linked = fetchedPages.filter(!isListing)
-        .select(col("ID"), col("TYPE"), col("base"),
-          explode(Extract.anchorHrefs(col("text"))).as("href"))
-        .withColumn("URL", urlResolveNative(col("base"), col("href")))
-        .withColumn("name", Urls.basename(col("URL")))
-        .filter(length(col("name")) > 0)
-      val globRegex = udf((p: String) => Globs.globToRegex(p))
-      val listed = fetchedPages.filter(isListing)
         .select(col("ID"), col("TYPE"), col("base"), col("pattern"),
-          explode(Extract.listingNames(col("text"))).as("name"))
-        .filter(regexp_like(col("name"), globRegex(col("pattern"))))
-        .withColumn("URL", urlResolveNative(col("base"), col("name")))
+          explode(when(isListing, Extract.listingNames(col("text")))
+            .otherwise(Extract.anchorHrefs(col("text")))).as("ref"))
+        .withColumn("URL", urlResolveNative(col("base"), col("ref")))
+        .withColumn("name",
+          when(isListing, col("ref")).otherwise(Urls.basename(col("URL"))))
+        .filter(when(isListing, regexp_like(col("name"), globRegex(col("pattern"))))
+          .otherwise(length(col("name")) > 0))
       val direct = valid.filter(col("TYPE").isin("DIRECT", "DIRECT_FTP"))
         .withColumnRenamed("PATTERN", "name")
       val prefix = typedLit(Schemas.sinkPrefix)
       val guardObs = Observation()
-      val candidates = Seq(linked, listed, direct)
+      val candidates = Seq(paged, direct)
         .map(_.select(col("ID"), col("URL"),
           concat(prefix(col("TYPE")), lit("/"), col("name")).as("key"),
           (col("TYPE") === "LINKS_OVERWRITE").as("overwrite")))
@@ -165,16 +172,14 @@ object DownloadPipeline {
       // D1: one manifest read for the batch's guarded prefixes, its rows
       // counted per prefix as the pin runs. The localCheckpoint PINS the
       // batch-start snapshot and severs the plan's tie to the manifest
-      // path: this batch's own appendManifest writes to that path, and a
-      // lineage-carrying plan would be invalidated by Spark's CacheManager
-      // recache, silently re-running the side-effecting fetch against the
-      // post-batch manifest (observed: downloads counted as 0).
+      // path, which this batch's own append writes to. Filter and counts
+      // have one shape for every strategy mix, so the pin compiles once.
       val manifestObs = Observation()
       manifest = step(spark, "manifest pin") {
         (if (guardedPrefixes.isEmpty) None
         else ObjectSink.manifestAll(spark, out)).map { m =>
-          val perPrefix = guardedPrefixes.map(p => count_if(col("prefix") === p).as(p))
-          m.filter(col("prefix").isin(guardedPrefixes: _*))
+          val perPrefix = sinkPrefixes.map(p => count_if(col("prefix") === p).as(p))
+          m.filter(array_contains(typedLit(guardedPrefixes), col("prefix")))
             .observe(manifestObs, perPrefix.head, perPrefix.tail: _*).materialized
         }
       }
@@ -184,10 +189,10 @@ object DownloadPipeline {
           .filter(_._2 > 0).toMap
       }
       val seeded = guardedPrefixes.filterNot(counts.contains).flatMap { p =>
-        val names = ObjectSink.existingNames(out, p)
-        step(spark, "manifest seed")(ObjectSink.seedManifest(spark, out, p, names))
-        names.map(n => s"$p/$n")
+        ObjectSink.existingNames(out, p).map(n => s"$p/$n")
       }
+      if (seeded.nonEmpty)
+        step(spark, "manifest seed")(ObjectSink.appendManifest(spark, out, seeded))
       val manifestKeys = if (counts.isEmpty) None else manifest.map(
         _.select(concat(col("prefix"), lit("/"), col("name")).as("key")))
       val existing = (manifestKeys ++ Option.when(seeded.nonEmpty)(
@@ -203,18 +208,16 @@ object DownloadPipeline {
         case None => candidates
       }
 
-      // X9 fetch + K3 sink + manifest append, once for every strategy.
-      val fetched = tracked(Fetch.fetchFiles(kept))
-      val writeObs = Observation()
+      // X9 fetch + K3 PUT in one call per file, once for every strategy;
+      // the manifest append follows from the collected keys.
       val overwritePrefix = Schemas.sinkPrefix("LINKS_OVERWRITE") + "/"
-      step(spark, "fetch+sink")(ObjectSink.write(fetched.observe(writeObs,
-          count(when(col("error").isNull, 1)).as("ok"),
-          errorList(col("error").isNotNull, col("ID"), col("URL"), col("error"))),
-        out, _.startsWith(overwritePrefix)))
-      val downloaded = writeObs.get("ok").asInstanceOf[Long]
-      val fileErrors = errorRows(writeObs.get("errors"))
-      if (downloaded > 0)
-        step(spark, "manifest append")(ObjectSink.appendManifest(fetched, out))
+      val landed = step(spark, "fetch+sink")(Fetch.fetchAndPut(kept) {
+        (key, body) => ObjectSink.put(out, key, body, key.startsWith(overwritePrefix))
+      }.collect()).toSeq
+      val (stored, failed) = landed.partition(_.error == null)
+      if (stored.nonEmpty) step(spark, "manifest append")(
+        ObjectSink.appendManifest(spark, out, stored.map(_.key)))
+      val fileErrors = failed.map(l => (l.ID, l.URL, l.error))
 
       // ---- error path: E2 alerts + E1 catalog flag ----------------------
       val errors = routeErrors ++ errorRows(pageObs.get("errors")) ++ fileErrors
@@ -233,12 +236,11 @@ object DownloadPipeline {
         }
       }
 
-      BatchReport(attempted, downloaded,
-        skippedDuplicates = guardObs.get("candidates").asInstanceOf[Long] -
-          downloaded - fileErrors.size,
-        errors = errors.size, deadLettered = deadCount)
+      BatchReport(rows.size, stored.size,
+        skippedDuplicates =
+          guardObs.get("candidates").asInstanceOf[Long] - landed.size,
+        errors = errors.size, deadLettered = exhausted.size)
     } finally {
-      caches.foreach(_.unpersist())
       manifest.foreach(_.queryExecution.logical.foreach {
         case r: LogicalRDD => r.rdd.unpersist(blocking = false)
         case _ => ()

@@ -8,12 +8,11 @@ import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.{Minutes, Span}
 
 import graft.SparkSpec
-import graft.fetch.Fetch.FileResult
 
 /** [[Fetch.overlapped]]'s contract — input order, at most
   * [[Fetch.InFlight]] calls at once, a call's fatal error rethrown — and
-  * the X9 kernel over it matching a plain sequential fetch. `file://`
-  * URLs only. */
+  * the fused fetch-and-PUT call over it matching a plain sequential
+  * fetch. `file://` URLs only. */
 class FetchSpec extends SparkSpec {
 
   /** A hang fails the case instead of stalling the suite. */
@@ -64,7 +63,7 @@ class FetchSpec extends SparkSpec {
     }
   }
 
-  test("fetchFiles matches a sequential fetch row for row") {
+  test("fetchAndPut matches a sequential fetch and put row for row") {
     import spark.implicits._
     withTempDir("fetch") { dir =>
       val rows = (0 until 30).map { i =>
@@ -73,15 +72,25 @@ class FetchSpec extends SparkSpec {
         (s"s${i % 4}", f.toUri.toString, s"LINK/f$i.bin")
       }
       val df = spark.sparkContext.parallelize(rows, 3).toDF("ID", "URL", "key")
-      def flat(r: FileResult) =
-        (r.ID, r.URL, r.key, Option(r.body).map(_.toSeq), r.error)
+      val sink = dir.resolve("sink").toString
       val want = rows.map { case (id, url, key) =>
-        try FileResult(id, url, key, Fetch.readBytes(url), null)
-        catch { case e: Exception => FileResult(id, url, key, null, Fetch.errMsg(e)) }
-      }.map(flat)
-      val got = bounded(Fetch.fetchFiles(df).collect().toSeq.map(flat))
-      assert(got === want)
-      assert(got.count(_._5 != null) === 10)
+        val body = try Right(Fetch.readBytes(url))
+          catch { case e: Exception => Left(Fetch.errMsg(e)) }
+        (Fetch.Landed(id, url, key, body.left.toOption.orNull),
+          body.toOption.map(_.toSeq))
+      }
+      val got = bounded(Fetch.fetchAndPut(df) { (key, body) =>
+        graft.sinks.ObjectSink.put(sink, key, body, overwrite = false)
+      }.collect().toSeq)
+      assert(got === want.map(_._1))
+      assert(got.count(_.error != null) === 10)
+      // every body that was fetched is in the sink under its key, and
+      // nothing else is
+      val stored = rows.map { case (_, _, key) =>
+        val p = java.nio.file.Paths.get(sink, key)
+        Option.when(Files.exists(p))(Files.readAllBytes(p).toSeq)
+      }
+      assert(stored === want.map(_._2))
     }
   }
 }

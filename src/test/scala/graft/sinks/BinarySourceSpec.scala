@@ -1,11 +1,8 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.fetch.Fetch.FileResult
 
 /** K3 artifacts written by ObjectSink are readable back through Spark's
   * binaryFile source (SURVEY.md §1.1 "fetched artifact" row) — the sink
@@ -13,15 +10,13 @@ import graft.fetch.Fetch.FileResult
   */
 class BinarySourceSpec extends SparkSpec {
 
-  test("object sink → binaryFile source roundtrip") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft-bin").toString
-    val artifacts = Seq(
-      FileResult("s1", "http://h/a.bin", "LINK/a.bin", "alpha".getBytes("UTF-8"), null),
-      FileResult("s1", "http://h/b.bin", "LINK/b.bin", Array[Byte](0, 1, 2, -1), null),
-      FileResult("s2", "http://h/c.bin", "FTP_FILES/c.bin", "gamma".getBytes("UTF-8"), null)
-    ).toDS()
-    ObjectSink.write(artifacts, root, overwrite = _ => true)
+  test("object sink → binaryFile source roundtrip") { withTempDir("bin") { dir =>
+    val root = dir.toString
+    Seq(
+      "LINK/a.bin" -> "alpha".getBytes("UTF-8"),
+      "LINK/b.bin" -> Array[Byte](0, 1, 2, -1),
+      "FTP_FILES/c.bin" -> "gamma".getBytes("UTF-8")
+    ).foreach { case (key, body) => ObjectSink.put(root, key, body, overwrite = true) }
 
     val back = spark.read.format("binaryFile").load(s"$root/LINK")
       .select(element_at(split(col("path"), "/"), -1).as("name"),
@@ -38,5 +33,5 @@ class BinarySourceSpec extends SparkSpec {
     val decoded = graft.multimodal.Multimodal.decode(media, "image", 4).collect()
     assert(decoded.length === 2)
     assert(decoded.forall(_.features.length === 4))
-  }
+  }}
 }

@@ -173,12 +173,13 @@ class PipelineSpec extends SparkSpec {
     // ... and the batch runs as one pass whose every job is named for its
     // step. One chain per strategy took 50 jobs here, and 53 on the
     // second batch; the single pass took 11 and 15 while the error path
-    // and the manifest counts ran jobs of their own, and takes 11 and 13
-    // with both riding the passes.
+    // and the manifest counts ran jobs of their own, 11 and 13 with both
+    // riding the passes and three frames cached, and takes 5 and 7 with
+    // one route collect, one fetch-and-PUT collect and no cache.
     assert(!jobs.contains("untagged"), show(jobs))
-    assert(jobs.values.sum <= 11, show(jobs))
+    assert(jobs.values.sum <= 5, show(jobs))
     assert(jobs.getOrElse("ingest: alerts", 0) === 1, show(jobs))
-    // the batch's caches and manifest pin are released
+    // the batch caches nothing, and its manifest pin is released
     assert(persistedIds -- persisted === Set.empty)
 
     // a second batch over a sink that now has a manifest: still one delta
@@ -189,7 +190,7 @@ class PipelineSpec extends SparkSpec {
     assert(again.downloaded === 1)
     assert(manifestDeltaFiles(root) === 2)
     assert(!jobs2.contains("untagged"), show(jobs2))
-    assert(jobs2.values.sum <= 13, show(jobs2))
+    assert(jobs2.values.sum <= 7, show(jobs2))
     assert(jobs2.getOrElse("ingest: manifest pin", 0) === 1, show(jobs2))
     assert(persistedIds -- persisted === Set.empty)
   }}
@@ -213,10 +214,10 @@ class PipelineSpec extends SparkSpec {
     // the alerts and the catalog rewrite take one job each: neither
     // re-reads a cached pass nor joins the catalog against the errors
     // (re-deriving the errors for both took 12 jobs for this batch; the
-    // collected errors take 10)
+    // collected errors take 10, and 4 over an uncached pass)
     assert(jobs.getOrElse("ingest: alerts", 0) === 1, show(jobs))
     assert(jobs.getOrElse("ingest: catalog flag", 0) === 1, show(jobs))
-    assert(jobs.values.sum <= 10, show(jobs))
+    assert(jobs.values.sum <= 4, show(jobs))
     val active = graft.sources.Catalog.read(spark, catPath)
       .select("id", "active").as[(String, Int)].collect().toMap
     assert(active("src-003") === 2 && active("src-001") === 2)
@@ -270,6 +271,33 @@ class PipelineSpec extends SparkSpec {
     assert(report === DownloadPipeline.BatchReport(2, 4, 0, 0, 0))
     assert(manifestDeltaFiles(root) === 1)
     assert(partFiles(Paths.get(root, "quarantine")) === 0)
+  }}
+
+  test("the manifest pin compiles once for every strategy mix") { withTempDir("pin-mix") { tmp =>
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import spark.implicits._
+    val src = tmp.resolve("src")
+    val root = tmp.resolve("ws").toString
+    setupSource(src)
+    Workspace.provision(root)
+    val u = src.toUri.toString
+    val links = ("s-links", s"${u}page.html", "LINKS", "ignore", "0", 0)
+    val direct = ("s-direct", s"${u}direct.bin", "DIRECT", "direct_out.bin", "0", 0)
+    val listing = ("s-ftp", s"${u}listing.txt", "FTP_FILES", "data_*.zip", "0", 0)
+    val directFtp = ("s-dftp", s"${u}ftpfile.bin", "DIRECT_FTP", "ftp_out.bin", "0", 0)
+    def poll(tasks: (String, String, String, String, String, Int)*) =
+      bounded(DownloadPipeline.processBatch(
+        tasks.toDF("ID", "URL", "TYPE", "PATTERN", "UTC", "attempts"), root))
+    // each mix lands its files, then pins and guards them
+    for (mix <- Seq(Seq(links, direct), Seq(listing, directFtp)); _ <- 1 to 2)
+      poll(mix: _*)
+    // a pin filtering and counting per guarded prefix compiled 3 new
+    // classes here: its code changed with the mix
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val mixed = poll(links, direct, listing, directFtp)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(mixed === DownloadPipeline.BatchReport(4, 0, 6, 0, 0))
+    assert(compiled === 0L)
   }}
 
   test("a failing batch still unpersists its caches") { withTempDir("failbatch") { tmp =>
