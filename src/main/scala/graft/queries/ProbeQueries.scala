@@ -102,12 +102,4 @@ object ProbeQueries extends QueryPack {
       "CAST(CAST(n_nationkey AS DECIMAL(18,2)) + CAST(0.37 AS DECIMAL(18,2)) AS DOUBLE)"),
     "probe_hash_string" -> sql(
       "CAST(CAST(CAST(n_nationkey AS DECIMAL(18,2)) + CAST(0.37 AS DECIMAL(18,2)) AS DECIMAL(38,4)) AS VARCHAR)"))
-
-  /** Oracles for [[diagnostics]] — consumed by tools/check.py's
-    * EXPECTED_RED self-test, not by the driver. */
-  def diagnosticOracles: Map[String, String] = Map(
-    "probe_hash_decimal_s4" -> sql(
-      "CAST(CAST(n_nationkey AS DECIMAL(18,2)) + CAST(0.37 AS DECIMAL(18,2)) AS DECIMAL(38,4))"),
-    "probe_hash_decimal_s2_tz" -> sql(
-      "CAST(CAST(n_nationkey AS DECIMAL(18,2)) + CAST(0.50 AS DECIMAL(18,2)) AS DECIMAL(38,2))"))
 }
