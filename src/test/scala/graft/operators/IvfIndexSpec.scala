@@ -1,8 +1,7 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -19,7 +18,7 @@ class IvfIndexSpec extends SparkSpec {
   private def embs = spark.read.parquet(s"$sf/embeddings.parquet")
 
   private def mkDir(): String =
-    Files.createTempDirectory("graft-ivfidx").resolve("idx").toString
+    suiteDir("ivfidx").resolve("idx").toString
 
   test("build once + query ≡ the in-plan ivfTopKProbe") {
     val dir = mkDir()
@@ -179,12 +178,13 @@ class IvfIndexSpec extends SparkSpec {
     assert(got === singles,
       "batch search must equal the union of per-query searches")
     // the whole batch reads the postings ONCE (the looped form reads |Q|×).
-    // AQE's executed-plan string appends an "== Initial Plan ==" section
-    // that duplicates every scan line — count the final plan only.
-    val planStr = batch.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    val postingsScans = planStr.linesIterator.count(l =>
-      l.contains("FileScan parquet") && l.contains("/postings/"))
+    // Scans are matched on their root paths in AQE's final plan: the plan
+    // string abbreviates a long scan location before its `/postings/`.
+    val postingsScans = new AdaptiveSparkPlanHelper {}
+      .collect(batch.queryExecution.executedPlan) {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.toString.contains("/postings/")) => s
+      }.size
     assert(postingsScans === 1,
       s"expected exactly one postings scan, got $postingsScans")
   }

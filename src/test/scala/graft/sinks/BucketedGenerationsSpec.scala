@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -18,7 +16,7 @@ class BucketedGenerationsSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkDir(name: String): String =
-    Files.createTempDirectory("graft-bktgen").resolve(name).toString
+    suiteDir("bktgen").resolve(name).toString
 
   private def uniq(p: String): String =
     p + java.util.UUID.randomUUID.toString.take(8)

@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -16,7 +14,7 @@ class ConstraintsSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkTable(): String =
-    Files.createTempDirectory("graft-constraints").resolve("t").toString
+    suiteDir("constraints").resolve("t").toString
 
   test("declared checks gate every commit; violations never publish") {
     val t = mkTable()

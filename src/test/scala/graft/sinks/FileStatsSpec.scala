@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
@@ -17,7 +15,7 @@ class FileStatsSpec extends SparkSpec {
   import FileStats._
 
   private def mkTable(): String =
-    Files.createTempDirectory("graft-stats").resolve("t").toString
+    suiteDir("stats").resolve("t").toString
 
   private def fs(t: String) = new Path(t)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
