@@ -30,13 +30,7 @@ object Router {
   }
 
   /** The REASON an unknown `TYPE` is alerted with (R1e). */
-  def unknownType(tpe: Column): Column = concat(lit(unknownPrefix), tpe)
-
-  /** [[unknownType]] of one collected `TYPE` value. */
-  def unknownType(tpe: String): String =
-    Option(tpe).map(unknownPrefix + _).orNull
-
-  private val unknownPrefix = "Unknown source type: "
+  def unknownType(tpe: Column): Column = concat(lit("Unknown source type: "), tpe)
 
   /** Unknown-type error rows (R1e). */
   def errors(routed: DataFrame): DataFrame =

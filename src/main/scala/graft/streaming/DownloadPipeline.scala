@@ -115,6 +115,7 @@ object DownloadPipeline {
     try {
       val routing = Router.route(tasks)
         .withColumn("attempts", coalesce(col("attempts"), lit(0)))
+        .withColumn("REASON", Router.unknownType(col("TYPE")))
       val rows = step(spark, "route")(routing.collect()).toSeq
       val routed = spark.createDataFrame(rows.asJava, routing.schema)
       // E4: exhausted tasks dead-letter before any work is done.
@@ -123,7 +124,7 @@ object DownloadPipeline {
         rows.partition(_.getAs[Int]("attempts") < maxAttempts)
       val routeErrors = retryable.filter(_.getAs[Boolean]("is_error"))
         .map(r => (r.getAs[String]("ID"), r.getAs[String]("URL"),
-          Router.unknownType(r.getAs[String]("TYPE"))))
+          r.getAs[String]("REASON")))
       val guardedPrefixes = retryable
         .filter(r => !r.getAs[Boolean]("is_error") && !r.getAs[Boolean]("overwrite"))
         .map(_.getAs[String]("strategy")).distinct
