@@ -19,7 +19,7 @@ import graft.sources.Queue
   * claim and ack leaves files in `processing/` for a sweeper to re-queue
   * — at-least-once, made effectively-once by the idempotent object sink.
   *
-  * A poll is driver-sized: at most `pollCap` queue files.
+  * A poll is small enough to collect: at most `pollCap` queue files.
   * [[DownloadPipeline.processBatch]] reads the claimed
   * files once, with one `collect()` that routes them and fills the
   * corrupt-line observation, then fetches and PUTs every artifact in one

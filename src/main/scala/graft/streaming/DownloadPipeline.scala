@@ -72,7 +72,7 @@ object DownloadPipeline {
   /** Process one batch of task rows end-to-end. `root` is the workspace
     * (out/, alerts/, dead_letter/ live under it).
     *
-    * A poll is driver-sized (at most `pollCap` queue files, see
+    * A poll is small enough to collect (at most `pollCap` queue files, see
     * [[BatchHandler.runOnce]]), so its tasks are routed with ONE
     * `collect()`. The attempted and dead-letter counts, the unknown-type
     * errors and the guarded sink prefixes come from those rows, and the
