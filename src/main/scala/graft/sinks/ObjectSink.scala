@@ -1,8 +1,11 @@
 package graft.sinks
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, struct, to_json}
 
 /** Partitioned object sink (reference K3, `data_downloader.py:102-107,132,
   * 170,195`): raw-blob fidelity — each artifact is written as its own
@@ -18,8 +21,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * exist are skipped — completing the reference's unimplemented
   * duplicate-download guard (D1) at the storage layer.
   *
-  * Each [[put]] runs on an executor inside the call that fetched its body
-  * ([[graft.fetch.Fetch.fetchAndPut]]): distributed, no body collected.
+  * Each artifact [[put]] runs on an executor inside the call that fetched
+  * its body ([[graft.fetch.Fetch.fetchAndPut]]): distributed, no body
+  * collected. The ingest's poll-sized outputs (queue files, manifest
+  * deltas, alerts, dead letters, quarantined lines, the flagged catalog)
+  * are PUTs too, never a Spark write job: their bytes come from a
+  * `to_json`/`to_csv` projection, and the one atomic move replaces
+  * Hadoop's output commit (its `_temporary` dirs, renames and markers).
   */
 object ObjectSink {
 
@@ -41,22 +49,30 @@ object ObjectSink {
     }
   }
 
+  /** PUT `lines` as one new `<dir>/part-<uuid><ext>` object, each line
+    * ended by `\n` as Spark's text and JSON writers end it. */
+  def putPart(dir: String, lines: Iterable[String], ext: String): Unit =
+    put(dir, s"part-${UUID.randomUUID}$ext",
+      lines.map(_ + "\n").mkString.getBytes(UTF_8), overwrite = true)
+
   /** Names-manifest table: one (prefix, name) row per object written
-    * through this sink, appended as parquet under `<root>/_manifest`.
-    * This is the D1 dup-guard's object-store-scale "existing" side: a
-    * distributed parquet scan (the `prefix` equality filter prunes via
-    * row-group stats; a real deployment would partition the table by
-    * prefix/date), in place of a driver-side directory listing that
-    * can't enumerate billions of keys. Append-only; duplicate rows from
-    * batch re-delivery are harmless to the guard (anti-join/Bloom
-    * membership). A periodic compaction job can rewrite it, same as any
-    * append table.
+    * through this sink, appended as one JSON-lines delta file per batch
+    * under `<root>/_manifest`; [[compactManifest]] folds the deltas into
+    * a parquet snapshot (Delta Lake's split: a JSON log with parquet
+    * checkpoints). This is the D1 dup-guard's object-store-scale
+    * "existing" side: a distributed scan, in place of a driver-side
+    * directory listing that can't enumerate billions of keys.
+    * Append-only; duplicate rows from batch re-delivery are harmless to
+    * the guard (anti-join/Bloom membership).
     */
   def manifestPath(root: String): String = s"$root/_manifest"
 
+  private val manifestSchema = "prefix STRING, name STRING"
+
   /** Append `keys` (`<prefix>/<name>`, each an object already PUT) to the
-    * manifest as one delta file. Call only with a non-empty list: an
-    * all-skipped/all-error batch must not conjure an empty delta file. On
+    * manifest as one JSON-lines delta file, one PUT. Call only with a
+    * non-empty list: an all-skipped/all-error batch must not conjure an
+    * empty delta file. On
     * a failed append the next batch simply re-fetches and skip-writes
     * (at-least-once), then re-appends. Also seeds the manifest with the
     * names a legacy sink's objects were found under (one bounded
@@ -66,10 +82,11 @@ object ObjectSink {
   def appendManifest(spark: SparkSession, root: String,
       keys: Seq[String]): Unit = {
     import spark.implicits._
-    keys.map { k => val i = k.lastIndexOf('/'); (k.take(i), k.drop(i + 1)) }
-      .toDF("prefix", "name")
-      .coalesce(1) // one delta file per append: names are poll-sized
-      .write.mode("append").parquet(manifestPath(root))
+    putPart(manifestPath(root),
+      keys.map { k => val i = k.lastIndexOf('/'); (k.take(i), k.drop(i + 1)) }
+        .toDF("prefix", "name")
+        .select(to_json(struct(col("prefix"), col("name")))).as[String].collect(),
+      ".json")
   }
 
   /** Root of the manifest's compacted-snapshot generation table (pointer-
@@ -82,21 +99,14 @@ object ObjectSink {
   /** The whole manifest as one distributed frame — the committed snapshot
     * (if any compaction ever ran) unioned with the append-only delta dir.
     * None when neither exists yet (bootstrap/legacy sink). Explicit
-    * schema: a delta dir holding only _SUCCESS (possible after an
-    * all-error batch) must read as empty, not fail inference. If a crash
-    * of the PRE-generation compactor's rename pair left only a displaced
-    * `.old` dir behind, it is restored first — the guard never silently
-    * loses legacy history to a half-finished old-protocol swap.
+    * schema: a delta dir emptied by a compaction must read as empty, not
+    * fail inference. Deltas are JSON lines: a sink whose deltas are still
+    * parquet files must be compacted by a build that reads them first.
     */
   def manifestAll(spark: SparkSession, root: String): Option[DataFrame] = {
-    val path = Paths.get(manifestPath(root))
-    val old = path.resolveSibling(path.getFileName.toString + ".old")
-    if (!Files.isDirectory(path) && Files.isDirectory(old))
-      Files.move(old, path)
     val delta =
-      if (Files.isDirectory(path))
-        Some(spark.read.schema("prefix STRING, name STRING")
-          .parquet(manifestPath(root)))
+      if (Files.isDirectory(Paths.get(manifestPath(root))))
+        Some(spark.read.schema(manifestSchema).json(manifestPath(root)))
       else None
     val snap = Generations.read(spark, manifestSnapPath(root))
     (snap, delta) match {
@@ -106,7 +116,7 @@ object ObjectSink {
   }
 
   /** Compact the manifest: fold the accumulated delta files — one small
-    * parquet file per batch — plus the previous snapshot into
+    * JSON-lines file per batch — plus the previous snapshot into
     * one deduplicated snapshot generation, published via [[Generations]]'
     * pointer-file commit, then delete the folded delta files. Run it like
     * any table-maintenance job (size- or count-triggered); the guard's
@@ -126,9 +136,6 @@ object ObjectSink {
     * @return number of rows in the compacted snapshot. */
   def compactManifest(spark: SparkSession, root: String): Long = {
     val path = Paths.get(manifestPath(root))
-    val old = path.resolveSibling(path.getFileName.toString + ".old")
-    // restore a legacy (pre-generation protocol) half-finished swap
-    if (!Files.isDirectory(path) && Files.isDirectory(old)) Files.move(old, path)
     val deltaFiles: Seq[java.nio.file.Path] =
       if (!Files.isDirectory(path)) Seq.empty
       else {
@@ -144,8 +151,8 @@ object ObjectSink {
     val snap = Generations.read(spark, manifestSnapPath(root))
     val delta =
       if (deltaFiles.isEmpty) None
-      else Some(spark.read.schema("prefix STRING, name STRING")
-        .parquet(deltaFiles.map(_.toString): _*))
+      else Some(spark.read.schema(manifestSchema)
+        .json(deltaFiles.map(_.toString): _*))
     val all = (snap, delta) match {
       case (Some(s), Some(d)) => s.unionByName(d)
       case (Some(s), None)    => s

@@ -57,7 +57,7 @@ object Pointers {
     * trade that keeps every environment committing).
     */
   def publishNew(fs: FileSystem, tmp: Path, dst: Path): Boolean =
-    if ("file" == fs.getScheme) {
+    if ("file" == fs.getUri.getScheme) {
       try {
         java.nio.file.Files.createLink(
           java.nio.file.Paths.get(dst.toUri.getPath),

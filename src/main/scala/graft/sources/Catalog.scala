@@ -1,7 +1,13 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Paths
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, struct, to_csv}
+
 import graft.model.Schemas
+import graft.sinks.ObjectSink
 
 /** Source-catalog reader/writer (reference S1-S3 + E1, SURVEY.md §2.1).
   *
@@ -42,54 +48,28 @@ object Catalog {
         org.apache.spark.sql.types.StringType))
       .csv(path)
 
-  /** Overwrite the catalog (E1 read-modify-overwrite). Single-writer by
-    * contract — the reference has the same lost-update exposure
-    * (SURVEY.md §7.3). Coalesce(1): the catalog is broadcast-sized by
+  /** E1 applied to the LIVE catalog file: collect the updated catalog as
+    * CSV lines (`to_csv` with the reader's `\r\n` line separator, so the
+    * bytes are those of Spark's CSV writer with a header), then PUT them
+    * over `path` in ONE atomic replace ([[ObjectSink.put]]):
+    * a complete catalog is on disk at every instant, and the update plan,
+    * which lazily reads `path`, has finished reading before the replace.
+    * Single-writer by contract (SURVEY.md §7.3), the same lost-update
+    * exposure as the reference; later batches re-read the replaced file,
+    * so flags from earlier batches accumulate instead of being recomputed
+    * from the original catalog. On an S3-class store the same replace is
+    * one overwrite `put_object`, exactly what the reference's own S3 path
+    * does (`data_downloader.py:169`). The catalog is broadcast-sized by
     * design (thousands of rows), never a distributed dataset.
     */
-  def overwrite(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write
-      .mode("overwrite")
-      .option("header", "true")
-      .option("lineSep", "\r\n")
-      .csv(path)
-
-  /** E1 applied to the LIVE catalog file: materialize the updated catalog
-    * to a temp dir FIRST (the update plan lazily reads `path` — writing
-    * in place before materializing would read-through-truncate), then
-    * swap the single part file over `path`. Single-writer by contract
-    * (SURVEY.md §7.3); later batches re-read the swapped file, so flags
-    * from earlier batches accumulate instead of being recomputed from the
-    * original catalog.
-    *
-    * Commit posture: these are SINGLE-FILE renames — atomic on a real
-    * filesystem, which is this method's target (mirrors the reference's
-    * local catalog rewrite). On an S3-class store the right form is
-    * simpler, not harder: one overwrite PUT of the rewritten object
-    * (`put_object`, exactly what the reference's own S3 path does at
-    * `data_downloader.py:169`) — a PUT is all-or-nothing, so the aside/
-    * restore dance is unnecessary there. Multi-file TREES are the case
-    * that needs [[graft.sinks.Generations]]; a one-object catalog does
-    * not.
-    */
   def replaceInPlace(df: DataFrame, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val tmp = new Path(path + ".tmp-rewrite")
-    overwrite(df, tmp.toString)
-    val fs = tmp.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val part = fs.listStatus(tmp).map(_.getPath)
-      .find(_.getName.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
-    val target = new Path(path)
-    // Crash-safe swap: the old catalog moves ASIDE (not deleted) before
-    // the new one moves in, so at every instant at least one complete
-    // catalog exists on disk (`path` or `path.bak`) — a kill between the
-    // renames is recoverable from .bak, never a total loss.
-    val bak = new Path(path + ".bak")
-    fs.delete(bak, true)
-    if (fs.exists(target)) fs.rename(target, bak)
-    fs.rename(part, target)
-    fs.delete(bak, true)
-    fs.delete(tmp, true)
+    import df.sparkSession.implicits._
+    val lineSep = "\r\n"
+    val rows = df.select(to_csv(struct(df.columns.toSeq.map(col): _*),
+      java.util.Map.of("lineSep", lineSep))).as[String].collect()
+    val target = Paths.get(path).toAbsolutePath
+    ObjectSink.put(target.getParent.toString, target.getFileName.toString,
+      (df.columns.mkString(",") +: rows).map(_ + lineSep).mkString.getBytes(UTF_8),
+      overwrite = true)
   }
 }

@@ -1,9 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
+import graft.sinks.ObjectSink
 
 /** Directory-backed task queue (reference K1/K2: SQS,
   * `data_harvester.py:38` → `data_downloader.py:210-216`).
@@ -16,15 +20,26 @@ import graft.model.Schemas
   */
 object Queue {
 
-  /** Enqueue task rows: one JSON object per line, append mode. */
+  /** Enqueue task rows: one JSON object per line, the bytes `write.json`
+    * would write (a null field is omitted). Each non-empty partition is
+    * ONE [[graft.sinks.ObjectSink.put]] of `part-<partition>-<run>.json`,
+    * no output-commit protocol: the name is deterministic, so a retried
+    * task overwrites its own file, and name order is partition order.
+    */
   def enqueue(tasks: DataFrame, queueDir: String): Unit = {
     val cols = Seq("ID", "URL", "TYPE", "PATTERN", "UTC")
+    val run = java.util.UUID.randomUUID.toString
     tasks
       .withColumn("attempts", coalesce(
         tasks.columns.find(_ == "attempts").map(col)
           .getOrElse(lit(null).cast("int")), lit(0)))
-      .select((cols.map(col) :+ col("attempts")): _*)
-      .write.mode("append").json(queueDir)
+      .select(to_json(struct((cols.map(col) :+ col("attempts")): _*)))
+      .foreachPartition { (rows: Iterator[Row]) =>
+        if (rows.hasNext) ObjectSink.put(queueDir,
+          f"part-${TaskContext.getPartitionId()}%05d-$run.json",
+          rows.map(_.getString(0) + "\n").mkString.getBytes(UTF_8),
+          overwrite = true)
+      }
   }
 
   private def taskCols = Schemas.task.fieldNames.toSeq.map(col)

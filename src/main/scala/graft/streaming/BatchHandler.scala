@@ -1,11 +1,14 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{Observation, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SparkSession
 
 import graft.model.Schemas
+import graft.sinks.ObjectSink
 import graft.sources.Queue
 
 /** Batch-mode downloader handler — the direct analog of the reference's
@@ -19,12 +22,12 @@ import graft.sources.Queue
   * claim and ack leaves files in `processing/` for a sweeper to re-queue
   * — at-least-once, made effectively-once by the idempotent object sink.
   *
-  * A poll is small enough to collect: at most `pollCap` queue files.
-  * [[DownloadPipeline.processBatch]] reads the claimed
-  * files once, with one `collect()` that routes them and fills the
-  * corrupt-line observation, then fetches and PUTs every artifact in one
-  * pass over that local relation, caching nothing. Quarantine is written
-  * after processing and before the ack.
+  * A poll is small enough to collect: at most `pollCap` queue files. The
+  * claimed files are read on the driver and parsed over a local frame,
+  * which splits off the corrupt lines and starts no Spark job;
+  * [[DownloadPipeline.processBatch]] then routes the tasks and fetches
+  * and PUTs every artifact in one pass, caching nothing. The corrupt
+  * lines are PUT to `quarantine/` after processing and before the ack.
   */
 object BatchHandler {
 
@@ -37,12 +40,11 @@ object BatchHandler {
 
     // claim: move the pollCap lowest-named task files queue/ →
     // processing/. Name order, not listing order, so which tasks share a
-    // poll is the same on every run: Spark part-file names sort by
+    // poll is the same on every run: the enqueue's part-file names sort by
     // partition index, which is the enqueue's ID range order.
     val claimed = {
       val s = Files.list(queueDir)
       try {
-        import scala.jdk.CollectionConverters._
         s.iterator().asScala
           .filter(p => Files.isRegularFile(p) && !p.getFileName.toString.startsWith("."))
           .filterNot(_.getFileName.toString.startsWith("_"))
@@ -65,31 +67,31 @@ object BatchHandler {
     if (claimed.isEmpty)
       return DownloadPipeline.BatchReport(0, 0, 0, 0, 0)
 
-    // Malformed lines are dropped, and their files still ack to done/
-    // below — poison messages must not redeliver forever (the SQS DLQ
-    // rationale). Because the ack MOVES the claimed files out of the
-    // queue dir, Queue.quarantined(queueDir) would never see them again:
-    // the corrupt raw lines are therefore copied to an explicit
-    // `quarantine/` dir BEFORE the ack, so every dropped poison line has
-    // a durable, inspectable record (the DLQ-body analog). They are
-    // collected by an observation on the parsed claim, which the batch's
-    // route collect fills as it reads the claim — the claim is parsed
-    // once — and written after processing: a batch that throws leaves
-    // its files in processing/, and their redelivery quarantines them.
+    // The claim is read on the driver, as the reference's handler
+    // receives its <= 5 message bodies, decoded leniently (an invalid
+    // byte becomes U+FFFD, never an exception), and parsed with one
+    // collect over a local frame. Malformed lines are dropped, and their
+    // files still ack to done/ below — poison messages must not redeliver
+    // forever (the SQS DLQ rationale). Because the ack MOVES the claimed
+    // files out of the queue dir, Queue.quarantined(queueDir) would never
+    // see them again: the corrupt raw lines are therefore PUT to an
+    // explicit `quarantine/` dir BEFORE the ack, so every dropped poison
+    // line has a durable, inspectable record (the DLQ-body analog). They
+    // are written after processing: a batch that throws leaves its files
+    // in processing/, and their redelivery quarantines them.
+    import spark.implicits._
     val corruptCol = Schemas.taskCorruptCol
-    val corrupt = Observation()
     val parsed = Queue.parseTaskLines(
-        spark.read.text(claimed.map(_.toString): _*), Schemas.taskWithCorrupt)
-      .observe(corrupt, collect_list(col(corruptCol)).as("lines"))
-    val tasks = parsed
-      .filter(col(corruptCol).isNull)
-      .select(Schemas.task.fieldNames.toSeq.map(col): _*)
-    val report = DownloadPipeline.processBatch(tasks, root, catalogPath)
-    val lines = corrupt.get("lines").asInstanceOf[scala.collection.Seq[String]].toSeq
-    if (lines.nonEmpty) DownloadPipeline.step(spark, "quarantine") {
-      import spark.implicits._
-      lines.toDF("value").coalesce(1)
-        .write.mode("append").text(Paths.get(root, "quarantine").toString)
+      claimed.flatMap(p => new String(Files.readAllBytes(p), UTF_8).split("\r\n|\r|\n"))
+        .toDF("value"), Schemas.taskWithCorrupt)
+    val (corrupt, good) = parsed.collect().toSeq
+      .partition(r => !r.isNullAt(r.fieldIndex(corruptCol)))
+    val report = DownloadPipeline.processBatch(
+      spark.createDataFrame(good.asJava, parsed.schema).drop(corruptCol),
+      root, catalogPath)
+    if (corrupt.nonEmpty) DownloadPipeline.step(spark, "quarantine") {
+      ObjectSink.putPart(Paths.get(root, "quarantine").toString,
+        corrupt.map(_.getAs[String](corruptCol)), ".txt")
     }
 
     // ack: processing/ → done/ (the delete_message analog)
@@ -126,7 +128,6 @@ object BatchHandler {
     val stale = {
       val s = Files.list(processing)
       try {
-        import scala.jdk.CollectionConverters._
         s.iterator().asScala
           .filter(p => Files.isRegularFile(p) && !p.getFileName.toString.startsWith("."))
           .filterNot(_.getFileName.toString.startsWith("_"))
@@ -140,9 +141,10 @@ object BatchHandler {
           .toList
       } finally s.close()
     }
+    // ISO-8859-1 maps every byte to one char and back, so a file that is
+    // not valid UTF-8 is rewritten with every byte but `attempts` kept
     stale.foreach { p =>
-      import scala.jdk.CollectionConverters._
-      val bumped = Files.readAllLines(p).asScala.map { line =>
+      val bumped = new String(Files.readAllBytes(p), ISO_8859_1).linesIterator.map { line =>
         if (attemptsField.findFirstIn(line).isDefined)
           attemptsField.replaceAllIn(line,
             m => "\"attempts\":" + (m.group(1).toInt + 1))
@@ -151,7 +153,7 @@ object BatchHandler {
         else line
       }
       val out = queueDir.resolve(p.getFileName.toString + ".retry")
-      Files.write(out, bumped.asJava)
+      Files.write(out, bumped.map(_ + "\n").mkString.getBytes(ISO_8859_1))
       Files.delete(p)
     }
     stale.size

@@ -84,8 +84,8 @@ object DownloadPipeline {
     * file is fetched by the one action that needs it.
     *
     * The D1 guard's "existing" side is the sink's names MANIFEST
-    * ([[ObjectSink.manifestAll]]) — a prefix-pruned distributed parquet
-    * scan appended by every successful write, never a driver-side listing
+    * ([[ObjectSink.manifestAll]]) — a prefix-filtered distributed scan
+    * appended by every successful write, never a driver-side listing
     * of the sink (which can't enumerate an object store). Its decisions
     * are made here, once per batch, from one row count per prefix the
     * batch can write without overwrite: a prefix with no manifest rows
@@ -98,10 +98,15 @@ object DownloadPipeline {
     * Counts and error rows ride the passes that run anyway: the manifest
     * pin counts its rows per prefix, the page fetch observes its error
     * rows (ID, URL, REASON), the candidates frame its keys. Every error
-    * list is bounded by the poll's size, so the alerts are written from
+    * list is bounded by the poll's size, so the alerts are projected from
     * one local frame and the catalog is flagged by a map-only projection
-    * over the collected IDs. Each step's Spark jobs carry an
-    * `ingest: <step>` job description (see [[step]]).
+    * over the collected IDs. Every poll-sized output (dead letters, the
+    * manifest delta, alerts, the flagged catalog) is one
+    * [[ObjectSink.put]] of bytes a `to_json`/`to_csv` projection made,
+    * never a Spark write job, so a poll over a local frame of tasks runs
+    * jobs only for the manifest pin, the fetch-and-PUT pass and the
+    * catalog read. Each step's Spark jobs carry an `ingest: <step>` job
+    * description (see [[step]]).
     */
   def processBatch(tasks: DataFrame, root: String,
       catalogPath: Option[String] = None): BatchReport = {
@@ -129,9 +134,9 @@ object DownloadPipeline {
         .filter(r => !r.getAs[Boolean]("is_error") && !r.getAs[Boolean]("overwrite"))
         .map(_.getAs[String]("strategy")).distinct
       if (exhausted.nonEmpty) step(spark, "dead letter") {
-        dead.select(to_json(struct(col("ID"), col("URL"), col("TYPE"),
-            col("PATTERN"), col("UTC"), col("attempts"))).as("value"))
-          .write.mode("append").text(s"$root/dead_letter")
+        ObjectSink.putPart(s"$root/dead_letter", dead.select(to_json(struct(
+          col("ID"), col("URL"), col("TYPE"), col("PATTERN"), col("UTC"),
+          col("attempts")))).as[String].collect(), ".txt")
       }
 
       val valid = live.filter(!col("is_error"))
@@ -223,13 +228,13 @@ object DownloadPipeline {
       // ---- error path: E2 alerts + E1 catalog flag ----------------------
       val errors = routeErrors ++ errorRows(pageObs.get("errors")) ++ fileErrors
       if (errors.nonEmpty) {
-        step(spark, "alerts")(ErrorPath.alertJson(errors.toDF("ID", "URL", "REASON"))
-          .select(col("alert_json")).coalesce(1)
-          .write.mode("append").text(s"$root/alerts"))
+        step(spark, "alerts")(ObjectSink.putPart(s"$root/alerts",
+          ErrorPath.alertJson(errors.toDF("ID", "URL", "REASON"))
+            .select(col("alert_json")).as[String].collect(), ".txt"))
         // E1: flags apply to the LIVE catalog (the reference's write-to-
         // side-path bug, data_downloader.py:48, is NOT reproduced): read the
-        // latest state — accumulating flags from earlier batches — and swap
-        // the updated file in place.
+        // latest state — accumulating flags from earlier batches — and PUT
+        // the updated file over it.
         catalogPath.foreach { path =>
           step(spark, "catalog flag")(Catalog.replaceInPlace(
             ErrorPath.flagBroken(Catalog.read(spark, path),

@@ -320,10 +320,8 @@ class GenerationsSpec extends SparkSpec {
         .as[String].collect().toSet
 
     // two append batches → two delta files
-    Seq(("P", "a")).toDF("prefix", "name")
-      .write.mode("append").parquet(ObjectSink.manifestPath(root))
-    Seq(("P", "b")).toDF("prefix", "name")
-      .write.mode("append").parquet(ObjectSink.manifestPath(root))
+    ObjectSink.appendManifest(spark, root, Seq("P/a"))
+    ObjectSink.appendManifest(spark, root, Seq("P/b"))
     assert(names("P") === Set("a", "b"))
 
     // crash window 1: snapshot generation written but pointer never
@@ -339,15 +337,13 @@ class GenerationsSpec extends SparkSpec {
     // crash window 2: commit succeeded but the folded delta files were
     // not deleted — rows exist in snapshot AND delta; the guard's view
     // (a membership set) is unchanged, and the next compaction heals it
-    Seq(("P", "a")).toDF("prefix", "name")
-      .write.mode("append").parquet(ObjectSink.manifestPath(root))
+    ObjectSink.appendManifest(spark, root, Seq("P/a"))
     assert(names("P") === Set("a", "b"))
     assert(ObjectSink.compactManifest(spark, root) === 2L)
     assert(names("P") === Set("a", "b"))
 
     // appends after compaction keep working (snapshot ∪ delta)
-    Seq(("P", "c")).toDF("prefix", "name")
-      .write.mode("append").parquet(ObjectSink.manifestPath(root))
+    ObjectSink.appendManifest(spark, root, Seq("P/c"))
     assert(names("P") === Set("a", "b", "c"))
   }
 

@@ -10,7 +10,7 @@ class QueueSpec extends SparkSpec {
 
   test("enqueue/dequeue roundtrip preserves the task shape; poll cap holds") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-q").resolve("queue").toString
+    val dir = suiteDir("q").resolve("queue").toString
     val tasks = (1 to 8).map(i =>
       (s"src-$i", s"http://h/$i", "LINKS", "p", "0")).toDF("ID", "URL", "TYPE", "PATTERN", "UTC")
     Queue.enqueue(tasks, dir)
@@ -31,7 +31,7 @@ class QueueSpec extends SparkSpec {
   }
 
   test("workspace provision is idempotent; cleanPrefix empties one prefix") {
-    val root = Files.createTempDirectory("graft-ws").toString
+    val root = suiteDir("ws").toString
     Workspace.provision(root)
     Workspace.provision(root)  // idempotent
     Workspace.dirs.foreach(d =>
@@ -41,5 +41,30 @@ class QueueSpec extends SparkSpec {
     Workspace.cleanPrefix(root, "done")
     assert(Files.list(java.nio.file.Paths.get(root, "done")).count() === 0)
     assert(Files.list(java.nio.file.Paths.get(root, "in")).count() === 1)
+  }
+
+  test("a queue file holds the bytes write.json writes, a null PATTERN omitted") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    val dir = suiteDir("qbytes")
+    val tasks = Seq(
+      ("src-1", "http://h/1?a=\"q\"", "LINKS", null, "0"),
+      ("src-2", "ftp://h/ü/2", "FTP_FILES", "data_*.zip", "2"))
+      .toDF("ID", "URL", "TYPE", "PATTERN", "UTC").repartition(1)
+    Queue.enqueue(tasks, dir.resolve("queue").toString)
+    tasks.withColumn("attempts", lit(0)).write.json(dir.resolve("ref").toString)
+    def partBytes(d: String): Seq[Byte] = {
+      val s = Files.list(dir.resolve(d))
+      val parts = try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).toList
+      } finally s.close()
+      assert(parts.size === 1, parts)
+      Files.readAllBytes(parts.head).toSeq
+    }
+    val got = partBytes("queue")
+    assert(new String(got.toArray, "UTF-8").linesIterator.next() ===
+      """{"ID":"src-1","URL":"http://h/1?a=\"q\"","TYPE":"LINKS","UTC":"0","attempts":0}""")
+    assert(got === partBytes("ref"))
   }
 }

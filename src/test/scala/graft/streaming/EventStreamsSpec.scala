@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -48,7 +47,7 @@ class EventStreamsSpec extends SparkSpec {
 
   test("E5 fanout: two independent consumers of one queue each see every message") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-fanout")
+    val root = suiteDir("fanout")
     val queueDir = root.resolve("queue").toString
     graft.sources.Queue.enqueue(
       Seq(("s-1", "u1", "DIRECT", "p1", "0", 0), ("s-2", "u2", "DIRECT", "p2", "0", 0))

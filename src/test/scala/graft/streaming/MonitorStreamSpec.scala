@@ -75,8 +75,7 @@ class MonitorStreamSpec extends SparkSpec {
       (5L, "srcA", "gamma delta alpha beta"),
       (6L, "srcB", "omega chi psi filler")
     )
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-divmon").toString
+    val outDir = suiteDir("divmon").toString
 
     val input = MemoryStream[(Long, String, String)]
     val q = Monitors.divergenceMonitor(
@@ -128,8 +127,7 @@ class MonitorStreamSpec extends SparkSpec {
       (5L, "spam spam spam iota kappa"),
       (6L, "spam spam spam lambda mu")
     )
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-spanmon").toString
+    val outDir = suiteDir("spanmon").toString
 
     val input = MemoryStream[(Long, String)]
     val q = Monitors.spanHotspotMonitor(
@@ -167,7 +165,7 @@ class MonitorStreamSpec extends SparkSpec {
 
     val pr = Monitors.psiReference(ref, "v", nBuckets = 5)
     assert(pr.binCounts.sum === 100L)
-    val outDir = java.nio.file.Files.createTempDirectory("graft-psimon").toString
+    val outDir = suiteDir("psimon").toString
 
     val input = MemoryStream[Double]
     val q = Monitors.psiDriftMonitor(

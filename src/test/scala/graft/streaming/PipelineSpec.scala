@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.DataFrame
@@ -174,11 +175,14 @@ class PipelineSpec extends SparkSpec {
     // step. One chain per strategy took 50 jobs here, and 53 on the
     // second batch; the single pass took 11 and 15 while the error path
     // and the manifest counts ran jobs of their own, 11 and 13 with both
-    // riding the passes and three frames cached, and takes 5 and 7 with
-    // one route collect, one fetch-and-PUT collect and no cache.
+    // riding the passes and three frames cached, 5 and 7 with one route
+    // collect, one fetch-and-PUT collect and no cache, and takes 2 and 4
+    // with every poll-sized output one PUT instead of a write job.
     assert(!jobs.contains("untagged"), show(jobs))
-    assert(jobs.values.sum <= 5, show(jobs))
-    assert(jobs.getOrElse("ingest: alerts", 0) === 1, show(jobs))
+    assert(jobs.values.sum <= 2, show(jobs))
+    Seq("route", "dead letter", "manifest append", "alerts").foreach { step =>
+      assert(jobs.getOrElse(s"ingest: $step", 0) === 0, show(jobs))
+    }
     // the batch caches nothing, and its manifest pin is released
     assert(persistedIds -- persisted === Set.empty)
 
@@ -190,12 +194,13 @@ class PipelineSpec extends SparkSpec {
     assert(again.downloaded === 1)
     assert(manifestDeltaFiles(root) === 2)
     assert(!jobs2.contains("untagged"), show(jobs2))
-    assert(jobs2.values.sum <= 7, show(jobs2))
+    assert(jobs2.values.sum <= 4, show(jobs2))
     assert(jobs2.getOrElse("ingest: manifest pin", 0) === 1, show(jobs2))
+    assert(jobs2.getOrElse("ingest: manifest append", 0) === 0, show(jobs2))
     assert(persistedIds -- persisted === Set.empty)
   }}
 
-  test("a failing batch with a catalog: the error path takes two jobs") { withTempDir("e1-budget") { tmp =>
+  test("a failing batch with a catalog: the error path takes one job") { withTempDir("e1-budget") { tmp =>
     import spark.implicits._
     val root = tmp.resolve("ws").toString
     Workspace.provision(root)
@@ -211,13 +216,14 @@ class PipelineSpec extends SparkSpec {
     info(s"failing batch: ${show(jobs)}")
     assert(report === DownloadPipeline.BatchReport(2, 0, 0, 2, 0))
     assert(!jobs.contains("untagged"), show(jobs))
-    // the alerts and the catalog rewrite take one job each: neither
+    // the alerts are one PUT and the catalog rewrite one read: neither
     // re-reads a cached pass nor joins the catalog against the errors
     // (re-deriving the errors for both took 12 jobs for this batch; the
-    // collected errors take 10, and 4 over an uncached pass)
-    assert(jobs.getOrElse("ingest: alerts", 0) === 1, show(jobs))
+    // collected errors take 10, 4 over an uncached pass, and 3 with the
+    // alerts and the catalog PUT instead of written by a job)
+    assert(jobs.getOrElse("ingest: alerts", 0) === 0, show(jobs))
     assert(jobs.getOrElse("ingest: catalog flag", 0) === 1, show(jobs))
-    assert(jobs.values.sum <= 4, show(jobs))
+    assert(jobs.values.sum <= 3, show(jobs))
     val active = graft.sources.Catalog.read(spark, catPath)
       .select("id", "active").as[(String, Int)].collect().toMap
     assert(active("src-003") === 2 && active("src-001") === 2)
@@ -327,8 +333,7 @@ class PipelineSpec extends SparkSpec {
     DownloadPipeline.processBatch(tasks, root)
     assert(read(Paths.get(root, "out/LINK/a.csv")) === "alpha,1")
     // the write appended a (prefix, name) manifest row per object
-    val manifest = spark.read
-      .parquet(graft.sinks.ObjectSink.manifestPath(s"$root/out"))
+    val manifest = graft.sinks.ObjectSink.manifestAll(spark, s"$root/out").get
       .select(col("prefix"), col("name")).as[(String, String)].collect().toSet
     assert(manifest === Set("LINK" -> "a.csv", "LINK" -> "b.zip"))
 
@@ -350,7 +355,7 @@ class PipelineSpec extends SparkSpec {
     val after = graft.sinks.ObjectSink.manifestAll(spark, s"$root/out").get
       .select(col("prefix"), col("name")).as[(String, String)].collect().toSet
     assert(after === manifest)
-    // the folded delta files are gone (only markers like _SUCCESS remain)
+    // the folded delta files are gone
     import scala.jdk.CollectionConverters._
     val leftover = Files.list(Paths.get(
       graft.sinks.ObjectSink.manifestPath(s"$root/out")))
@@ -382,8 +387,7 @@ class PipelineSpec extends SparkSpec {
     assert(r1.downloaded === 1)
     // the listing SEEDED the manifest, so the legacy name is now durable
     // guard history: delete the object, re-run — still not re-fetched
-    val manifest = spark.read
-      .parquet(graft.sinks.ObjectSink.manifestPath(s"$root/out"))
+    val manifest = graft.sinks.ObjectSink.manifestAll(spark, s"$root/out").get
       .select(col("name")).as[String].collect().toSet
     assert(manifest === Set("a.csv", "b.zip"))
     Files.delete(Paths.get(root, "out/LINK/a.csv"))
@@ -502,8 +506,13 @@ class PipelineSpec extends SparkSpec {
     write(Paths.get(root, "queue", "mixed.json"),
       s"""{"ID":"s-ok","URL":"${u}direct.bin","TYPE":"DIRECT","PATTERN":"direct_out.bin","UTC":"0","attempts":0}
          |{not json at all""".stripMargin)
-    val report = BatchHandler.runOnce(spark, root)
+    val (report, jobs) = jobsDuring(BatchHandler.runOnce(spark, root))
     assert(report.downloaded === 1)
+    // the claim is parsed and its poison line quarantined without a job
+    assert(!jobs.contains("untagged"), show(jobs))
+    Seq("route", "quarantine").foreach { step =>
+      assert(jobs.getOrElse(s"ingest: $step", 0) === 0, show(jobs))
+    }
     // the file acked away (poison must not redeliver forever) ...
     assert(Files.exists(Paths.get(root, "done", "mixed.json")))
     // ... but the dropped raw line has a durable record the error path
@@ -511,6 +520,32 @@ class PipelineSpec extends SparkSpec {
     // because the ack moved the file out of queue/
     val q = spark.read.text(s"$root/quarantine").collect().map(_.getString(0))
     assert(q.toSeq === Seq("{not json at all"))
+  }}
+
+  test("invalid UTF-8: recoverStale rewrites only attempts, runOnce quarantines") { withTempDir("utf8") { tmp =>
+    val root = tmp.resolve("ws").toString
+    Workspace.provision(root)
+    val invalid = Array(0xFF, 0xFE).map(_.toByte)
+    def task(attempts: Int): Array[Byte] =
+      "{\"ID\":\"s-".getBytes(UTF_8) ++ invalid ++
+        s"""","URL":"${tmp.resolve("nope").toUri}","TYPE":"DIRECT","PATTERN":"p","UTC":"0","attempts":$attempts}\n""".getBytes(UTF_8)
+    // two files stranded by a crashed batch: a task whose ID holds
+    // invalid UTF-8, and a file of nothing but invalid bytes
+    Files.write(Paths.get(root, "processing", "t1.json"), task(2))
+    Files.write(Paths.get(root, "processing", "t2.json"), invalid)
+    assert(BatchHandler.recoverStale(root) === 2)
+    // every byte but the attempts count survives the sweep
+    assert(Files.readAllBytes(Paths.get(root, "queue", "t1.json.retry")).toSeq === task(3).toSeq)
+    assert(Files.readAllBytes(Paths.get(root, "queue", "t2.json.retry")).toSeq ===
+      (invalid :+ '\n'.toByte).toSeq)
+    val report = bounded(BatchHandler.runOnce(spark, root))
+    // the task decodes leniently and fails its fetch; the invalid bytes
+    // are one poison line, quarantined, and both files ack
+    assert(report === DownloadPipeline.BatchReport(1, 0, 0, 1, 0))
+    assert(spark.read.text(s"$root/quarantine").collect().map(_.getString(0)).toSeq ===
+      Seq("\uFFFD\uFFFD"))
+    assert(Files.exists(Paths.get(root, "done", "t1.json.retry")))
+    assert(Files.exists(Paths.get(root, "done", "t2.json.retry")))
   }}
 
   test("streaming: harvest → queue → AvailableNow drain; checkpoint acks") { withTempDir("stream") { tmp =>

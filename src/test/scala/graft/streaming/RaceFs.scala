@@ -13,7 +13,6 @@ import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
   */
 class RaceFs extends RawLocalFileSystem {
   override def getUri: URI = RaceFs.uri
-  override def getScheme: String = RaceFs.uri.getScheme
 
   override def listStatus(f: Path): Array[FileStatus] = {
     RaceFs.beforeList(f)

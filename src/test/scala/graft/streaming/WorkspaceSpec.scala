@@ -2,17 +2,16 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** L3 prefix cleanup + the recoverStale visibility-timeout gate.
   * Reference semantics: delete every object under the given prefix,
   * leave sibling prefixes untouched
   * (`market_data_downloader_clean_test_files.py:34-43`).
   */
-class WorkspaceSpec extends AnyFunSuite {
+class WorkspaceSpec extends SparkSpec {
 
-  private def mkRoot(): String =
-    Files.createTempDirectory("graft-ws").toString
+  private def mkRoot(): String = suiteDir("ws").toString
 
   test("cleanPrefix deletes nested contents of the prefix only") {
     val root = mkRoot()
